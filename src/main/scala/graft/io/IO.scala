@@ -1,7 +1,9 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** File IO surface of the reference, Spark-first (SURVEY.md §2.1).
   *
@@ -209,12 +211,61 @@ object IO {
     */
   def writeBucketed(df: DataFrame, table: String, path: String,
                     bucketCols: Seq[String], numBuckets: Int,
-                    sortCols: Seq[String] = Nil): Unit = {
-    val w0 = df.write.mode(SaveMode.Overwrite)
-      .option("path", path)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    val w1 = if (sortCols.nonEmpty) w0.sortBy(sortCols.head, sortCols.tail: _*) else w0
-    w1.format("parquet").saveAsTable(table)
+                    sortCols: Seq[String] = Nil): Unit =
+    saveBucketed(df.write.mode(SaveMode.Overwrite).option("path", path),
+      table, BucketSpec(numBuckets, bucketCols, sortCols))
+
+  /** Append `df` to the bucketed catalog table `table` under the table's
+    * OWN bucket spec (count, bucket columns, sort columns), read from the
+    * catalog: Spark rejects an append whose bucketing is missing or
+    * differs from the table's, and the build already recorded the spec,
+    * so no caller restates it.
+    */
+  def appendBucketed(df: DataFrame, table: String): Unit =
+    saveBucketed(df.write.mode(SaveMode.Append), table,
+      catalogSpec(df.sparkSession, table))
+
+  /** Rewrite the bucketed catalog table `table` in place as
+    * `keep(current rows)`: the result is materialised BEFORE the
+    * overwrite (the read never races its own rewrite), written to the
+    * table's catalog location under its catalog bucket spec, and the
+    * checkpoint is released however the write ends. `keep = identity` is
+    * a compaction (same rows, one file generation); an anti-join is a
+    * delete.
+    */
+  def rewriteTable(spark: SparkSession, table: String)
+                  (keep: DataFrame => DataFrame): Unit = {
+    val spec = catalogSpec(spark, table)
+    val loc = ColumnBridge.tableLocation(spark, table).get.toString
+    rewrite(keep(spark.table(table))) { m =>
+      saveBucketed(m.write.mode(SaveMode.Overwrite).option("path", loc),
+        table, spec)
+    }
+  }
+
+  /** [[rewriteTable]] for a flat parquet directory (no catalog entry):
+    * `keep(current rows)` materialised, then overwritten in place.
+    */
+  def rewriteDir(spark: SparkSession, dir: String)
+                (keep: DataFrame => DataFrame): Unit =
+    rewrite(keep(spark.read.parquet(dir)))(writeDir(_, dir))
+
+  private def rewrite(df: DataFrame)(write: DataFrame => Unit): Unit = {
+    val m = df.localCheckpoint()
+    try write(m) finally ColumnBridge.releaseLocalCheckpoint(m)
+  }
+
+  private def catalogSpec(spark: SparkSession, table: String): BucketSpec =
+    ColumnBridge.tableBucketSpec(spark, table).getOrElse(
+      throw new IllegalStateException(s"'$table' is not a bucketed table"))
+
+  private def saveBucketed(w: DataFrameWriter[Row], table: String,
+                           spec: BucketSpec): Unit = {
+    val cols = spec.bucketColumnNames
+    val sorts = spec.sortColumnNames
+    val b = w.bucketBy(spec.numBuckets, cols.head, cols.tail: _*)
+    (if (sorts.nonEmpty) b.sortBy(sorts.head, sorts.tail: _*) else b)
+      .format("parquet").saveAsTable(table)
   }
 
   /** Write `df` to `dest` (a parquet directory) once per (session, dest)

@@ -315,7 +315,8 @@ object Dedup {
 
   /** Marker-guarded append of new hash-set rows — the
     * [[appendToNearDupIndex]] discipline verbatim (per-half anti-join
-    * replay guards + the [[IndexCommit]] pre-listing marker).
+    * replay guards + the [[IndexCommit]] pre-listing marker). The bucket
+    * spec comes from the catalog; `numBuckets` is not read.
     */
   def appendToHashSetIndex(spark: org.apache.spark.sql.SparkSession,
                            name: String, rel: DataFrame,
@@ -324,47 +325,28 @@ object Dedup {
                            numBuckets: Int = 32): Unit = {
     require(numPerm % bands == 0, "numPerm must be divisible by bands")
     requireIndexParams(spark, name, -1, numPerm, bands)
-    val root = nearDupIndexRoot(spark, name).getOrElse(throw
-      new IllegalStateException(s"hash-set index '$name' is not built"))
-    IndexCommit.withMarkerFenced(spark, root.toString,
-      Seq("sig", "shingles"),
-      Seq(s"${name}_sig", s"${name}_shingles")) { fenceCheck =>
-      val sets = rel.select(col(idCol),
-        sort_array(array_distinct(col(hashesCol))).as("__sh"))
-        .withColumn("__n", size(col("__sh")))
-        .filter(col("__n") > 0)
-      val fresh = sets.join(
-        spark.table(s"${name}_shingles").select(col(idCol)),
-        Seq(idCol), "left_anti")
-      val sigFresh = sets.join(
-        spark.table(s"${name}_sig").select(col(idCol)),
-        Seq(idCol), "left_anti")
-      val banded = bandBuckets(
-        minhashSignaturesOfHashes(sigFresh, idCol, "__sh", numPerm),
-        idCol, bands, numPerm / bands)
-      banded.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .bucketBy(numBuckets, "__band", "__bucket")
-        .sortBy("__band", "__bucket")
-        .format("parquet").saveAsTable(s"${name}_sig")
-      fenceCheck() // between halves: bound the stolen-writer window
-      fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .bucketBy(numBuckets, idCol)
-        .format("parquet").saveAsTable(s"${name}_shingles")
-    }
+    val sets = rel.select(col(idCol),
+      sort_array(array_distinct(col(hashesCol))).as("__sh"))
+      .withColumn("__n", size(col("__sh")))
+      .filter(col("__n") > 0)
+    appendSigIndex(spark, name, "hash-set", sets, idCol)(fresh =>
+      bandBuckets(minhashSignaturesOfHashes(fresh, idCol, "__sh", numPerm),
+        idCol, bands, numPerm / bands), identity)
   }
 
   // ----------- crash-safe append markers (persisted near-dup index)
 
-  /** The index's root directory (parent of `sig`/`shingles`), from the
-    * catalog's location of the sig half — None when the index is not
-    * built in this session's catalog.
+  /** The marker over the index's two bucketed halves, rooted at the
+    * parent of the catalog location of the sig half — None when the
+    * index is not built in this session's catalog.
     */
-  private def nearDupIndexRoot(spark: org.apache.spark.sql.SparkSession,
-                               name: String)
-      : Option[org.apache.hadoop.fs.Path] =
+  private def nearDupMarker(spark: org.apache.spark.sql.SparkSession,
+                            name: String): Option[IndexCommit.Marker] =
     org.apache.spark.sql.graftbridge.ColumnBridge
       .tableLocation(spark, s"${name}_sig")
-      .map(u => new org.apache.hadoop.fs.Path(u).getParent)
+      .map(u => IndexCommit.Marker(spark,
+        new org.apache.hadoop.fs.Path(u).getParent.toString,
+        Seq("sig", "shingles"), Seq(s"${name}_sig", s"${name}_shingles")))
 
   /** Crash recovery for an interrupted [[appendToNearDupIndex]] — the
     * shared [[IndexCommit]] marker discipline over the two bucketed
@@ -372,24 +354,46 @@ object Dedup {
     * crashed half-append INCONSISTENT until the same batch happens to
     * be redelivered — sig rows whose shingles are missing silently
     * drop their candidate pairs at verify time). Writer entry only
-    * (append/compact/delete); single-writer contract. Returns true iff
-    * a pending append was found and rolled back to the exact
+    * (append/compact/delete/maintain); single-writer contract. Returns
+    * true iff a pending append was found and rolled back to the exact
     * pre-append bytes.
     */
   def recoverNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                           name: String): Boolean =
-    nearDupIndexRoot(spark, name).exists { root =>
-      IndexCommit.recover(spark, root.toString, Seq("sig", "shingles"),
-        Seq(s"${name}_sig", s"${name}_shingles"))
+    nearDupMarker(spark, name).exists(_.recover())
+
+  /** The append body both sig-index families share: under the marker,
+    * each half appends only the `rows` its OWN table lacks (per-half
+    * replay guards, so the halves re-converge independently after a
+    * crash between them even on redelivery; the marker rollback handles
+    * no-redelivery). `signatures`/`shingles` derive each half's rows
+    * from the fresh slice.
+    */
+  private def appendSigIndex(spark: org.apache.spark.sql.SparkSession,
+                             name: String, kind: String, rows: DataFrame,
+                             idCol: String)(
+                             signatures: DataFrame => DataFrame,
+                             shingles: DataFrame => DataFrame): Unit = {
+    val marker = nearDupMarker(spark, name).getOrElse(throw
+      new IllegalStateException(s"$kind index '$name' is not built"))
+    def fresh(half: String) = rows.join(
+      spark.table(s"${name}_$half").select(col(idCol)), Seq(idCol),
+      "left_anti")
+    marker.guard { fenceCheck =>
+      graft.io.IO.appendBucketed(signatures(fresh("sig")), s"${name}_sig")
+      fenceCheck() // between halves: bound the stolen-writer window
+      graft.io.IO.appendBucketed(shingles(fresh("shingles")),
+        s"${name}_shingles")
     }
+  }
 
   /** Grow the standing index with a NEW corpus slice — batch-cost only
     * (signatures and shingles computed for the slice, bucketed appends
-    * with the IDENTICAL bucket specs, nothing re-read beyond an id
+    * under the catalog's bucket specs, nothing re-read beyond an id
     * anti-join probe of the stored shingle table). After an accepted
     * batch dedups against the index ([[nearDupNewOnlyIndexed]]), its
     * KEPT rows append here so the next batch dedups against them too —
-    * the incremental loop closed.
+    * the incremental loop closed. `numBuckets` is not read.
     *
     * IDEMPOTENT under batch replay: EACH half is independently guarded —
     * the sig append anti-joins ids already in `<name>_sig`, the shingle
@@ -410,93 +414,51 @@ object Dedup {
                            bands: Int = 16, numBuckets: Int = 32): Unit = {
     require(numPerm % bands == 0, "numPerm must be divisible by bands")
     requireIndexParams(spark, name, shingleK, numPerm, bands)
-    val root = nearDupIndexRoot(spark, name).getOrElse(throw
-      new IllegalStateException(s"near-dup index '$name' is not built"))
-    IndexCommit.withMarkerFenced(spark, root.toString,
-      Seq("sig", "shingles"),
-      Seq(s"${name}_sig", s"${name}_shingles")) { fenceCheck =>
-      // per-half replay guards: each append probes ITS OWN table's ids,
-      // so the halves re-converge independently after a crash between
-      // them even on redelivery (marker rollback handles no-redelivery)
-      val fresh = newDocs.join(
-        spark.table(s"${name}_shingles").select(col(idCol)),
-        Seq(idCol), "left_anti")
-      val sigFresh = newDocs.join(
-        spark.table(s"${name}_sig").select(col(idCol)),
-        Seq(idCol), "left_anti")
-      val banded = bandBuckets(
-        minhashSignatures(sigFresh, idCol, textCol, shingleK, numPerm),
-        idCol, bands, numPerm / bands)
-      banded.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .bucketBy(numBuckets, "__band", "__bucket")
-        .sortBy("__band", "__bucket")
-        .format("parquet").saveAsTable(s"${name}_sig")
-      fenceCheck() // between halves: bound the stolen-writer window
-      val sh = fresh.select(col(idCol),
+    appendSigIndex(spark, name, "near-dup", newDocs, idCol)(fresh =>
+      bandBuckets(minhashSignatures(fresh, idCol, textCol, shingleK,
+        numPerm), idCol, bands, numPerm / bands),
+      fresh => fresh.select(col(idCol),
         sort_array(shingleHashes(col(textCol), shingleK)).as("__sh"))
-        .withColumn("__n", size(col("__sh")))
-      sh.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .bucketBy(numBuckets, idCol)
-        .format("parquet").saveAsTable(s"${name}_shingles")
-    }
+        .withColumn("__n", size(col("__sh"))))
+  }
+
+  /** Writer entry of both in-place rewrites: recover, then rewrite each
+    * half as `keep(current)` at its catalog location and bucket spec.
+    */
+  private def rewriteNearDupIndex(spark: org.apache.spark.sql.SparkSession,
+                                  name: String)(
+                                  keep: DataFrame => DataFrame): Unit = {
+    recoverNearDupIndex(spark, name)
+    Seq("sig", "shingles").foreach(half =>
+      graft.io.IO.rewriteTable(spark, s"${name}_$half")(keep))
   }
 
   /** Small-file hygiene after many appends: rewrite both bucketed halves
-    * of the signature index in place (each append stacks `numBuckets` new
+    * of the signature index in place (each append stacks a generation of
     * files per table, and the probe's in-place bucket read then opens
-    * every generation). Same read-materialize-overwrite discipline as
-    * [[TextAnalysis.compactBm25Index]]; contents are bit-identical, only
-    * the file layout changes.
+    * every generation). Contents are bit-identical, only the file layout
+    * changes. Location and bucket spec come from the catalog; `path`,
+    * `idCol` and `numBuckets` are not read.
     */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                           name: String, path: String, idCol: String,
-                          numBuckets: Int = 32): Unit = {
-    recoverNearDupIndex(spark, name) // writer entry: converge crashes
-    // in-place rewrite must reuse the BUILD's bucket count (see
-    // [[deleteFromNearDupIndex]]) — the catalog's spec wins over the
-    // caller's default
-    val buckets = org.apache.spark.sql.graftbridge.ColumnBridge
-      .tableNumBuckets(spark, s"${name}_sig").getOrElse(numBuckets)
-    val sig = spark.table(s"${name}_sig").localCheckpoint()
-    val sh = spark.table(s"${name}_shingles").localCheckpoint()
-    graft.io.IO.writeBucketed(sig, s"${name}_sig", s"$path/sig",
-      Seq("__band", "__bucket"), buckets, Seq("__band", "__bucket"))
-    graft.io.IO.writeBucketed(sh, s"${name}_shingles", s"$path/shingles",
-      Seq(idCol), buckets)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(sig)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(sh)
-  }
+                          numBuckets: Int = 32): Unit =
+    rewriteNearDupIndex(spark, name)(identity)
 
   /** GDPR/right-to-be-forgotten delete for the near-dup signature index:
     * drop every signature and shingle row of `ids` from both bucketed
     * tables — the deleted docs stop matching future batches entirely.
-    * Anti-join + bucketed rewrite with the BUILD's exact specs, so probe
-    * plans (bucket-pruned, exchange-free index side) are unchanged;
-    * convergence with a fresh build over corpus-minus-ids is unit-pinned.
-    * Completes the delete story across all six index families (BM25 /
-    * IVF-PQ / binary-quant / kNN-graph already had one).
+    * Anti-join + bucketed rewrite with the BUILD's catalog specs, so
+    * probe plans (bucket-pruned, exchange-free index side) are
+    * unchanged; convergence with a fresh build over corpus-minus-ids is
+    * unit-pinned. `path` and `numBuckets` are not read.
     */
   def deleteFromNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                              name: String, path: String, ids: DataFrame,
                              idCol: String = "doc_id",
                              numBuckets: Int = 32): Unit = {
-    recoverNearDupIndex(spark, name) // writer entry: converge crashes
-    // the rewrite must reuse the BUILD's bucket count or the "probe
-    // plans unchanged / exchange-free index side" guarantee breaks —
-    // prefer the catalog's recorded spec over the caller's default
-    val buckets = org.apache.spark.sql.graftbridge.ColumnBridge
-      .tableNumBuckets(spark, s"${name}_sig").getOrElse(numBuckets)
     val gone = ids.select(col(idCol)).distinct()
-    val sig = spark.table(s"${name}_sig")
-      .join(gone, Seq(idCol), "left_anti").localCheckpoint()
-    val sh = spark.table(s"${name}_shingles")
-      .join(gone, Seq(idCol), "left_anti").localCheckpoint()
-    graft.io.IO.writeBucketed(sig, s"${name}_sig", s"$path/sig",
-      Seq("__band", "__bucket"), buckets, Seq("__band", "__bucket"))
-    graft.io.IO.writeBucketed(sh, s"${name}_shingles", s"$path/shingles",
-      Seq(idCol), buckets)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(sig)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(sh)
+    rewriteNearDupIndex(spark, name)(_.join(gone, Seq(idCol), "left_anti"))
   }
 
   /** Forget `ids` in a stored pair-cluster relation: drop every pair
@@ -2191,22 +2153,17 @@ object Dedup {
       s"${name}_fp", s"$path/fp", keyCols, numBuckets, keyCols)
   }
 
-  /** Replay-idempotent append (anti-join on `idCol`). */
+  /** Replay-idempotent append (anti-join on `idCol`) under the
+    * catalog's bucket spec; `numBuckets` is not read.
+    */
   def appendToFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
                                name: String, batchFps: DataFrame,
                                keyCols: Seq[String], idCol: String,
-                               numBuckets: Int = 32): Unit = {
-    val buckets = org.apache.spark.sql.graftbridge.ColumnBridge
-      .tableNumBuckets(spark, s"${name}_fp").getOrElse(numBuckets)
-    val fresh = batchFps.join(
-      spark.table(s"${name}_fp").select(col(idCol)),
-      Seq(idCol), "left_anti")
-    fresh.select((idCol +: keyCols).map(col): _*).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(buckets, keyCols.head, keyCols.tail: _*)
-      .sortBy(keyCols.head, keyCols.tail: _*)
-      .format("parquet").saveAsTable(s"${name}_fp")
-  }
+                               numBuckets: Int = 32): Unit =
+    graft.io.IO.appendBucketed(
+      batchFps.join(spark.table(s"${name}_fp").select(col(idCol)),
+        Seq(idCol), "left_anti").select((idCol +: keyCols).map(col): _*),
+      s"${name}_fp")
 
   /** Every (batch id, corpus id) pair with IDENTICAL key tuple —
     * (batch_id, corpus_id), index side read in place.
@@ -2223,21 +2180,14 @@ object Dedup {
   }
 
   /** GDPR delete: anti-join + bucketed rewrite with the build's exact
-    * specs (catalog-derived), probe plans unchanged.
+    * specs (catalog-derived), probe plans unchanged. `path`, `keyCols`
+    * and `numBuckets` are not read.
     */
   def deleteFromFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
                                  name: String, path: String,
                                  ids: DataFrame, keyCols: Seq[String],
                                  idCol: String,
-                                 numBuckets: Int = 32): Unit = {
-    val buckets = org.apache.spark.sql.graftbridge.ColumnBridge
-      .tableNumBuckets(spark, s"${name}_fp").getOrElse(numBuckets)
-    val kept = spark.table(s"${name}_fp")
-      .join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    try graft.io.IO.writeBucketed(kept, s"${name}_fp", s"$path/fp",
-      keyCols, buckets, keyCols)
-    finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(kept)
-  }
+                                 numBuckets: Int = 32): Unit =
+    graft.io.IO.rewriteTable(spark, s"${name}_fp")(
+      _.join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_anti"))
 }

@@ -88,10 +88,4 @@ object GeoAggregate {
       .withColumn(lonCol, centroid(col("longitude_bin_id"), -180.0, stepDegrees))
       .drop("latitude_bin_id", "longitude_bin_id")
   }
-
-  /** Meters-parameterized variant matching the CLI surface
-    * (`agg src -m mode -s meters`, `agg.py:262-272`).
-    */
-  def withMeters(df: DataFrame, mode: String, meters: Double): DataFrame =
-    apply(df, mode, metersToDegrees(meters))
 }

@@ -46,6 +46,19 @@ import org.apache.spark.sql.SparkSession
   * and the next writer entry re-runs the (idempotent) recovery instead
   * of leaving the derived artifact permanently inconsistent.
   *
+  * Two rules hold for every marker-guarded family (near-dup/hash-set,
+  * BM25, binary-quant), each stated once as a [[IndexCommit.Marker]]:
+  *   - EVERY writer entry recovers first — append, compact, delete and
+  *     the maintenance compaction. A rewrite that skipped it would give
+  *     every file a new name while a crashed append's marker still
+  *     lists the OLD names, and the next entry's rollback would then
+  *     delete the whole rewritten index. The check is one filesystem
+  *     `exists`, not a Spark job.
+  *   - the catalog's bucket spec is the ONLY bucket spec: appends and
+  *     in-place rewrites take count, bucket columns and sort columns
+  *     from the catalog ([[graft.io.IO.appendBucketed]],
+  *     [[graft.io.IO.rewriteTable]]), never from a caller argument.
+  *
   * Why replay-idempotence alone is not enough (the r14 verdict's gap):
   * a crashed half-append leaves the index INCONSISTENT until the same
   * batch happens to be redelivered — e.g. near-dup sig rows whose
@@ -171,16 +184,25 @@ object IndexCommit {
     }
   }
 
-  /** Entry recovery + pre-listing marker around `body` + commit. */
-  def withMarker(spark: SparkSession, root: String, dirs: Seq[String],
-                 refreshTables: Seq[String] = Nil,
-                 postRecover: () => Unit = () => ())(body: => Unit): Unit =
-    withMarkerFenced(spark, root, dirs, refreshTables, postRecover)(
-      _ => body)
+  /** One family's marker discipline, stated once: the index root, the
+    * participating data directories (relative to the root), the catalog
+    * tables to refresh after a rollback, and the derived-state rebuild.
+    * [[recover]] is the entry step of every compact/delete/maintain;
+    * [[guard]] wraps a mutation that adds files (the append).
+    */
+  final case class Marker(spark: SparkSession, root: String,
+                          dirs: Seq[String], tables: Seq[String] = Nil,
+                          postRecover: () => Unit = () => ()) {
+    def recover(): Boolean =
+      IndexCommit.recover(spark, root, dirs, tables, postRecover)
+    def guard(body: (() => Unit) => Unit): Unit =
+      withMarkerFenced(spark, root, dirs, tables, postRecover)(body)
+  }
 
-  /** [[withMarker]] with the FENCE discipline threaded through: the
-    * writer allocates a monotone epoch at entry, re-validates it after
-    * the marker lands, hands the body a `check` thunk to call between
+  /** Entry recovery + pre-listing marker around `body` + commit, with
+    * the FENCE discipline threaded through: the writer allocates a
+    * monotone epoch at entry, re-validates it after the marker lands,
+    * hands the body a `check` thunk to call between
     * its own mutation steps, and validates ONCE MORE immediately
     * before the commit (the marker delete). A writer that was
     * stale-stolen therefore CANNOT commit — it throws

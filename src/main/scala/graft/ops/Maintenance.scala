@@ -91,39 +91,55 @@ object Maintenance {
       ratio > maxSkewRatio)
   }
 
-  /** BM25: compact when either bucketed table has stacked more than
-    * `maxGenerations` append generations (`numBuckets` files each).
+  /** The generation rule every bucketed family shares: each append
+    * stacks about one file per bucket per table, so more than
+    * `maxGenerations` × (the catalog's bucket count) files in any of
+    * `tables` means the probes open too many generations — run
+    * `compact`. `recover` is the family's writer-entry crash recovery
+    * and runs before the measurement, so a crashed append's partial
+    * files are never counted. An index not in the catalog reads as zero
+    * files under a zero threshold: a no-op Report.
     */
-  def maintainBm25Index(spark: SparkSession, name: String, path: String,
-                        idCol: String = "doc_id", numBuckets: Int = 32,
-                        maxGenerations: Int = 3): Report = {
+  private def maintainGenerations(spark: SparkSession, family: String,
+                                  tables: Seq[String], maxGenerations: Int,
+                                  recover: () => Unit = () => ())(
+                                  compact: => Unit): Report = {
     require(maxGenerations > 0, "maxGenerations must be > 0")
-    val files = math.max(parquetFileCount(spark, s"$path/postings"),
-      parquetFileCount(spark, s"$path/docstats"))
-    val threshold = numBuckets.toLong * maxGenerations
+    recover()
+    val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
+    val files = tables.map(t => bridge.tableLocation(spark, t)
+      .fold(0L)(u => parquetFileCount(spark, u.toString))).max
+    val threshold = maxGenerations.toLong *
+      bridge.tableBucketSpec(spark, tables.head).fold(0)(_.numBuckets)
     val doCompact = files > threshold
-    if (doCompact)
-      TextAnalysis.compactBm25Index(spark, name, path, idCol, numBuckets)
-    Report("bm25", files, threshold, doCompact, 0.0,
+    if (doCompact) compact
+    Report(family, files, threshold, doCompact, 0.0,
       rebuildRecommended = false)
   }
 
-  /** Near-dup signature index: same generation rule over its two
-    * bucketed halves.
+  /** BM25: compact when either bucketed table has stacked more than
+    * `maxGenerations` append generations. The bucket count comes from
+    * the catalog; `idCol` and `numBuckets` are not read.
+    */
+  def maintainBm25Index(spark: SparkSession, name: String, path: String,
+                        idCol: String = "doc_id", numBuckets: Int = 32,
+                        maxGenerations: Int = 3): Report =
+    maintainGenerations(spark, "bm25",
+      Seq(s"${name}_postings", s"${name}_docstats"), maxGenerations,
+      () => TextAnalysis.recoverBm25Index(spark, name, path))(
+      TextAnalysis.compactBm25Index(spark, name, path))
+
+  /** Near-dup (and hash-set) signature index: same generation rule over
+    * its two bucketed halves. `path`, `idCol` and `numBuckets` are not
+    * read.
     */
   def maintainNearDupIndex(spark: SparkSession, name: String, path: String,
                            idCol: String = "doc_id", numBuckets: Int = 32,
-                           maxGenerations: Int = 3): Report = {
-    require(maxGenerations > 0, "maxGenerations must be > 0")
-    val files = math.max(parquetFileCount(spark, s"$path/sig"),
-      parquetFileCount(spark, s"$path/shingles"))
-    val threshold = numBuckets.toLong * maxGenerations
-    val doCompact = files > threshold
-    if (doCompact)
-      Dedup.compactNearDupIndex(spark, name, path, idCol, numBuckets)
-    Report("near_dup", files, threshold, doCompact, 0.0,
-      rebuildRecommended = false)
-  }
+                           maxGenerations: Int = 3): Report =
+    maintainGenerations(spark, "near_dup",
+      Seq(s"${name}_sig", s"${name}_shingles"), maxGenerations,
+      () => Dedup.recoverNearDupIndex(spark, name))(
+      Dedup.compactNearDupIndex(spark, name, path, idCol))
 
   /** Persisted kNN-graph index: the topk relation is rewritten wholesale
     * by every append/delete (fresh layout — never fragments), but the
@@ -136,12 +152,8 @@ object Maintenance {
     require(maxFiles > 0, "maxFiles must be > 0")
     val files = parquetFileCount(spark, s"$indexPath/vectors")
     val doCompact = files > maxFiles
-    if (doCompact) {
-      val v = spark.read.parquet(s"$indexPath/vectors").localCheckpoint()
-      try graft.io.IO.writeDir(v, s"$indexPath/vectors")
-      finally org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(v)
-    }
+    if (doCompact)
+      graft.io.IO.rewriteDir(spark, s"$indexPath/vectors")(identity)
     Report("knn_graph", files, maxFiles.toLong, doCompact, 0.0,
       rebuildRecommended = false)
   }
@@ -150,11 +162,13 @@ object Maintenance {
     * codebook), so the only remedy is append-fragmentation compaction —
     * both flat tables rewrite wholesale past the file threshold; search
     * results are unchanged by construction (same rows, fewer files).
-    * Missing/not-yet-built index degrades to a no-op Report.
+    * Missing/not-yet-built index degrades to a no-op Report. Recovers a
+    * crashed append first, like every binary-quant writer entry.
     */
   def maintainBinaryQuantIndex(spark: SparkSession, indexPath: String,
                                maxFiles: Int = 64): Report = {
     require(maxFiles > 0, "maxFiles must be > 0")
+    Similarity.recoverBinaryQuantIndex(spark, indexPath)
     val subFiles = Seq("vectors", "codes")
       .map(sub => sub -> parquetFileCount(spark, s"$indexPath/$sub")).toMap
     val files = subFiles.values.max
@@ -163,46 +177,30 @@ object Maintenance {
     // half fragmented and the other absent — the sweep must compact what
     // exists instead of throwing on the missing dir
     if (doCompact) subFiles.collect { case (sub, n) if n > 0 => sub }
-      .foreach { sub =>
-        val t = spark.read.parquet(s"$indexPath/$sub").localCheckpoint()
-        try graft.io.IO.writeDir(t, s"$indexPath/$sub")
-        finally org.apache.spark.sql.graftbridge.ColumnBridge
-          .releaseLocalCheckpoint(t)
-      }
+      .foreach(sub =>
+        graft.io.IO.rewriteDir(spark, s"$indexPath/$sub")(identity))
     Report("binary_quant", files, maxFiles.toLong, doCompact, 0.0,
       rebuildRecommended = false)
   }
 
   /** Perceptual-hash (aHash) index: one bucketed band table, same
-    * generation rule as the text families — each append stacks
-    * `numBuckets` files and probes pay open/footer cost per generation.
+    * generation rule. `path` and `numBuckets` are not read.
     */
   def maintainAHashIndex(spark: SparkSession, name: String, path: String,
                          numBuckets: Int = 32,
-                         maxGenerations: Int = 3): Report = {
-    require(maxGenerations > 0, "maxGenerations must be > 0")
-    val files = parquetFileCount(spark, s"$path/bands")
-    val threshold = numBuckets.toLong * maxGenerations
-    val doCompact = files > threshold
-    if (doCompact)
-      Multimodal.compactAHashIndex(spark, name, path, numBuckets)
-    Report("ahash", files, threshold, doCompact, 0.0,
-      rebuildRecommended = false)
-  }
+                         maxGenerations: Int = 3): Report =
+    maintainGenerations(spark, "ahash", Seq(s"${name}_bands"),
+      maxGenerations)(Multimodal.compactAHashIndex(spark, name, path))
 
-  /** Contamination fingerprint index: one bucketed table, same rule. */
+  /** Contamination fingerprint index: one bucketed table, same rule.
+    * `path` and `numBuckets` are not read.
+    */
   def maintainContaminationIndex(spark: SparkSession, name: String,
                                  path: String, numBuckets: Int = 32,
-                                 maxGenerations: Int = 3): Report = {
-    require(maxGenerations > 0, "maxGenerations must be > 0")
-    val files = parquetFileCount(spark, path)
-    val threshold = numBuckets.toLong * maxGenerations
-    val doCompact = files > threshold
-    if (doCompact)
-      TextAnalysis.compactContaminationIndex(spark, name, path, numBuckets)
-    Report("contamination", files, threshold, doCompact, 0.0,
-      rebuildRecommended = false)
-  }
+                                 maxGenerations: Int = 3): Report =
+    maintainGenerations(spark, "contamination", Seq(name),
+      maxGenerations)(
+      TextAnalysis.compactContaminationIndex(spark, name, path))
 
   /** Managed Z-ORDER layout (the 7th maintained family): a table written
     * by [[Layout.writeZOrderedManaged]] degrades as plain appends land —

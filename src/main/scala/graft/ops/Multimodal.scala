@@ -2414,7 +2414,8 @@ object Multimodal {
   }
 
   /** Append a batch's images to the standing index — replay-idempotent
-    * (anti-join on media_id), the streaming-ingest discipline.
+    * (anti-join on media_id), the streaming-ingest discipline, under the
+    * catalog's bucket spec (`numBuckets` is not read).
     */
   def appendToAHashIndex(spark: SparkSession, name: String,
                          batch: DataFrame, grid: Int = 8, bands: Int = 4,
@@ -2423,28 +2424,18 @@ object Multimodal {
       spark.table(s"${name}_bands").select(col("media_id")).distinct(),
       Seq("media_id"), "left_anti")
     val ah = imageAHash(fresh, grid).filter(col("decode_error").isNull)
-    ahashBanded(ah, bands).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(numBuckets, "band_id", "band_val")
-      .sortBy("band_id", "band_val")
-      .format("parquet").saveAsTable(s"${name}_bands")
+    graft.io.IO.appendBucketed(ahashBanded(ah, bands), s"${name}_bands")
   }
 
   /** Small-file hygiene after many appends ([[graft.ops.Dedup
     * .compactNearDupIndex]]'s discipline): rewrite the bucketed band
-    * table in place with the BUILD's catalog-recorded bucket count —
-    * contents bit-identical, probe plans unchanged.
+    * table in place at its catalog location and bucket spec — contents
+    * bit-identical, probe plans unchanged. `path` and `numBuckets` are
+    * not read.
     */
   def compactAHashIndex(spark: SparkSession, name: String,
-                        path: String, numBuckets: Int = 32): Unit = {
-    val buckets = org.apache.spark.sql.graftbridge.ColumnBridge
-      .tableNumBuckets(spark, s"${name}_bands").getOrElse(numBuckets)
-    val b = spark.table(s"${name}_bands").localCheckpoint()
-    try graft.io.IO.writeBucketed(b, s"${name}_bands", s"$path/bands",
-      Seq("band_id", "band_val"), buckets, Seq("band_id", "band_val"))
-    finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(b)
-  }
+                        path: String, numBuckets: Int = 32): Unit =
+    graft.io.IO.rewriteTable(spark, s"${name}_bands")(identity)
 
   /** Within-relation perceptual near-dup pairs over an aHash relation:
     * banded self-join (candidate generation, same pigeonhole guarantee
@@ -2492,21 +2483,16 @@ object Multimodal {
     * bucketed rewrite with the build's exact specs (catalog-derived), so
     * probe plans are unchanged; convergence with a fresh build over
     * corpus-minus-ids is unit-pinned. Keeps the "delete reaches every
-    * persisted index family" contract true for the 8th family.
+    * persisted index family" contract true for the 8th family. `path`
+    * and `numBuckets` are not read.
     */
   def deleteFromAHashIndex(spark: SparkSession, name: String,
                            path: String, ids: DataFrame,
                            idCol: String = "media_id",
                            numBuckets: Int = 32): Unit = {
-    val buckets = org.apache.spark.sql.graftbridge.ColumnBridge
-      .tableNumBuckets(spark, s"${name}_bands").getOrElse(numBuckets)
     val gone = ids.select(col(idCol).as("media_id")).distinct()
-    val kept = spark.table(s"${name}_bands")
-      .join(gone, Seq("media_id"), "left_anti").localCheckpoint()
-    try graft.io.IO.writeBucketed(kept, s"${name}_bands", s"$path/bands",
-      Seq("band_id", "band_val"), buckets, Seq("band_id", "band_val"))
-    finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(kept)
+    graft.io.IO.rewriteTable(spark, s"${name}_bands")(
+      _.join(gone, Seq("media_id"), "left_anti"))
   }
 
   /** Probe: every (batch image, indexed image) pair within Hamming

@@ -789,7 +789,10 @@ object Sampling {
     var cum = 0L
     val srcs = sh.select(col("source")).distinct()
       .orderBy(col("source")).collect().map(_.getString(0))
-    if (srcs.length <= 20) {
+    // empty source universe (no docs, or every text shorter than
+    // shingleK): empty in, empty out — no round can pick anything
+    if (srcs.isEmpty) ()
+    else if (srcs.length <= 20) {
       // mask-histogram fast path: one aggregate over sh, then the greedy
       // touches only the ≤ 2^nSrc-row (mask, count) histogram
       val bitExpr = srcs.zipWithIndex.tail.foldLeft(

@@ -2314,28 +2314,35 @@ object Similarity {
       }
     }
 
-  /** Append new vectors to the standing index — batch-cost (one code
-    * computation over the batch, two appends), exact by construction
-    * (per-row codes have no trained state to drift). Idempotent and
-    * crash-window self-healing: EACH half anti-joins its own stored ids,
-    * so replay completes whichever half is missing and no-ops the other.
-    */
-  /** Crash recovery for an interrupted binary-quant append — the shared
-    * [[IndexCommit]] marker over the vectors+codes pair (a crashed
+  /** The binary-quant marker over the vectors+codes pair (a crashed
     * half-append is otherwise exactly the HALF-BUILT state the
     * maintenance sweep can only detect, not repair; path-based tables,
     * so no catalog refresh needed).
     */
+  private def binaryQuantMarker(spark: org.apache.spark.sql.SparkSession,
+                                path: String): IndexCommit.Marker =
+    IndexCommit.Marker(spark, path, Seq("vectors", "codes"))
+
+  /** Crash recovery for an interrupted binary-quant append — the shared
+    * [[IndexCommit]] marker. Every writer entry (append, delete, the
+    * maintenance compaction) runs it first.
+    */
   def recoverBinaryQuantIndex(spark: org.apache.spark.sql.SparkSession,
                               path: String): Boolean =
-    IndexCommit.recover(spark, path, Seq("vectors", "codes"))
+    binaryQuantMarker(spark, path).recover()
 
+  /** Append new vectors to the standing index — batch-cost (one code
+    * computation over the batch, two appends), exact by construction
+    * (per-row codes have no trained state to drift). Idempotent and
+    * crash-window self-healing: EACH half anti-joins its own stored ids,
+    * so replay completes whichever half is missing and no-ops the other;
+    * the marker rolls a crashed half-append back at the next entry.
+    */
   def appendToBinaryQuantIndex(spark: org.apache.spark.sql.SparkSession,
                                path: String, newEmb: DataFrame,
                                idCol: String = "vec_id",
                                vecCol: String = "embedding"): Unit =
-    IndexCommit.withMarkerFenced(spark, path,
-      Seq("vectors", "codes")) { fenceCheck =>
+    binaryQuantMarker(spark, path).guard { fenceCheck =>
     val batch = newEmb
       .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
       .localCheckpoint()
@@ -2362,23 +2369,20 @@ object Similarity {
   /** GDPR delete for the binary-quant index: per-row state erases
     * EXACTLY — both tables rewrite without the ids (materialize-before-
     * overwrite), searches over the survivors are bit-equal to a fresh
-    * build over them by construction. Absent ids are a no-op (no
-    * rewrite churn).
+    * build over them by construction. Recovers first; absent ids are a
+    * no-op (no rewrite churn).
     */
   def deleteFromBinaryQuantIndex(spark: org.apache.spark.sql.SparkSession,
                                  path: String, deleteIds: DataFrame,
                                  idCol: String = "vec_id"): Unit = {
+    recoverBinaryQuantIndex(spark, path)
     val del = deleteIds.select(col(idCol)).distinct().localCheckpoint()
     try {
       val present = !spark.read.parquet(s"$path/vectors")
         .join(broadcast(del), Seq(idCol), "left_semi").isEmpty
       if (present) Seq("vectors", "codes").foreach { sub =>
-        val kept = spark.read.parquet(s"$path/$sub")
-          .join(broadcast(del), Seq(idCol), "left_anti")
-          .localCheckpoint()
-        try graft.io.IO.writeDir(kept, s"$path/$sub")
-        finally org.apache.spark.sql.graftbridge.ColumnBridge
-          .releaseLocalCheckpoint(kept)
+        graft.io.IO.rewriteDir(spark, s"$path/$sub")(
+          _.join(broadcast(del), Seq(idCol), "left_anti"))
       }
     } finally org.apache.spark.sql.graftbridge.ColumnBridge
       .releaseLocalCheckpoint(del)
@@ -2628,24 +2632,25 @@ object Similarity {
           .join(broadcast(freshIds), col("__ida") === col("__fid"),
             "left_anti") // a-side = stored rows only
           .select(col("__ida").as("src"), col("__idb").as("dst"), col("sim"))
-        // crash-window self-heal: if a prior attempt wrote topk but died
-        // before the vectors append, the stored topk already holds this
-        // batch's src lists — drop them so they come solely from batchTopk
-        // (a no-op in the clean path: topk srcs ⊆ stored vector ids)
-        val storedTopk = spark.read.parquet(s"$path/topk")
-          .join(broadcast(freshIds), col("src") === col("__fid"), "left_anti")
-        // distinct before the cut: in the crash-replay state the surviving
-        // stored lists were ALREADY re-cut against this batch in attempt 1,
-        // so they overlap oldAdd row-for-row (sims are round-6
-        // deterministic) — without it a duplicated dst could double inside
-        // a k-cut. Clean path: zero overlap, distinct is a no-op.
-        val mergedOld = graft.plans.TopK.perGroup(
-          storedTopk.unionByName(oldAdd).distinct(),
-          Seq("src"), Seq(("sim", true), ("dst", false)), k)
-        val out = mergedOld.unionByName(batchTopk).localCheckpoint()
-        try graft.io.IO.writeDir(out, s"$path/topk")
-        finally org.apache.spark.sql.graftbridge.ColumnBridge
-          .releaseLocalCheckpoint(out)
+        graft.io.IO.rewriteDir(spark, s"$path/topk") { topk =>
+          // crash-window self-heal: if a prior attempt wrote topk but
+          // died before the vectors append, the stored topk already
+          // holds this batch's src lists — drop them so they come solely
+          // from batchTopk (a no-op in the clean path: topk srcs ⊆
+          // stored vector ids)
+          val storedTopk = topk.join(broadcast(freshIds),
+            col("src") === col("__fid"), "left_anti")
+          // distinct before the cut: in the crash-replay state the
+          // surviving stored lists were ALREADY re-cut against this batch
+          // in attempt 1, so they overlap oldAdd row-for-row (sims are
+          // round-6 deterministic) — without it a duplicated dst could
+          // double inside a k-cut. Clean path: zero overlap, distinct is
+          // a no-op.
+          graft.plans.TopK.perGroup(
+            storedTopk.unionByName(oldAdd).distinct(),
+            Seq("src"), Seq(("sim", true), ("dst", false)), k)
+            .unionByName(batchTopk)
+        }
         fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$path/vectors")
       } finally org.apache.spark.sql.graftbridge.ColumnBridge

@@ -377,6 +377,8 @@ object TextAnalysis {
     * only orphaned fingerprints leave the index. Cost is one remaining-
     * corpus fingerprint pass per call — batch forget requests rather
     * than calling per doc. (k, w, shingleHash) MUST match the build.
+    * Location and bucket spec come from the catalog; `path` and
+    * `numBuckets` are not read.
     */
   def deleteFromContaminationIndex(spark: org.apache.spark.sql.SparkSession,
                                    name: String, path: String,
@@ -398,13 +400,9 @@ object TextAnalysis {
         Seq("fp"), "left_semi")
       .distinct()
     val removable = goneFps.join(sponsored, Seq("fp"), "left_anti")
-    val kept = spark.table(name)
-      .join(removable, Seq("fp"), "left_anti").localCheckpoint()
-    graft.io.IO.writeBucketed(kept, name, path, Seq("fp"), numBuckets,
-      Seq("fp"))
-    org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(kept)
-    org.apache.spark.sql.graftbridge.ColumnBridge
+    try graft.io.IO.rewriteTable(spark, name)(
+      _.join(removable, Seq("fp"), "left_anti"))
+    finally org.apache.spark.sql.graftbridge.ColumnBridge
       .releaseLocalCheckpoint(goneFps)
   }
 
@@ -441,7 +439,8 @@ object TextAnalysis {
     * the index are anti-joined away before the bucketed append, so the
     * stored relation stays a DISTINCT set and repeated appends of the
     * same slice are idempotent. Probe-time (k, w, shingleHash) must
-    * still match the ORIGINAL build.
+    * still match the ORIGINAL build. The bucket spec comes from the
+    * catalog; `numBuckets` is not read.
     */
   def appendToContaminationIndex(spark: org.apache.spark.sql.SparkSession,
                                  name: String, newBench: DataFrame,
@@ -449,14 +448,11 @@ object TextAnalysis {
                                  textCol: String = "text",
                                  k: Int = 3, w: Int = 4,
                                  shingleHash: Column => Column,
-                                 numBuckets: Int = 32): Unit = {
-    val fresh = winnowFps(newBench, idCol, textCol, k, w, shingleHash)
-      .select("fp").distinct()
-      .join(spark.table(name), Seq("fp"), "left_anti")
-    fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(numBuckets, "fp").sortBy("fp")
-      .format("parquet").saveAsTable(name)
-  }
+                                 numBuckets: Int = 32): Unit =
+    graft.io.IO.appendBucketed(
+      winnowFps(newBench, idCol, textCol, k, w, shingleHash)
+        .select("fp").distinct()
+        .join(spark.table(name), Seq("fp"), "left_anti"), name)
 
   /** Overlapping token-window chunking (retrieval/context-window prep):
     * split each document into chunks of `size` tokens starting every
@@ -761,6 +757,39 @@ object TextAnalysis {
     meta.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("path", s"$path/meta").saveAsTable(s"${name}_meta")
 
+  /** The BM25 marker over postings+docstats — the shared
+    * [[IndexCommit]] discipline. The meta table overwrites in place, so
+    * the listing cannot roll it back; `postRecover` REBUILDS it from the
+    * recovered docstats instead ([[rebuildBm25Meta]]).
+    */
+  private def bm25Marker(spark: org.apache.spark.sql.SparkSession,
+                         name: String, path: String): IndexCommit.Marker =
+    IndexCommit.Marker(spark, path, Seq("postings", "docstats"),
+      Seq(s"${name}_postings", s"${name}_docstats"),
+      () => rebuildBm25Meta(spark, name, path))
+
+  /** The 1-row meta from the stored docstats: n_docs = row count,
+    * total_tf = Σ __dl — the exact identities the build wrote (each
+    * doc's __dl is the sum of its postings' tf).
+    */
+  private def rebuildBm25Meta(spark: org.apache.spark.sql.SparkSession,
+                              name: String, path: String): Unit =
+    writeBm25Meta(spark, name, path,
+      spark.table(s"${name}_docstats").agg(
+        count(lit(1)).as("n_docs"),
+        coalesce(sum(col("__dl")), lit(0L)).as("total_tf")))
+
+  /** Crash recovery for an interrupted BM25 index mutation. WITHOUT it,
+    * a crash between the postings and docstats writes doesn't just go
+    * stale, it CORRUPTS on replay: the batch guard anti-joins docstats
+    * (which never saw the batch), so the redelivered batch appends its
+    * postings a second time. Every writer entry (append, compact,
+    * delete, maintain) runs it first.
+    */
+  def recoverBm25Index(spark: org.apache.spark.sql.SparkSession,
+                       name: String, path: String): Boolean =
+    bm25Marker(spark, name, path).recover()
+
   /** Incremental index maintenance: append a NEW batch's postings and
     * doc stats (tokenized once, batch-sized work only — the standing
     * corpus is never re-read), then advance the 1-row meta by the
@@ -771,45 +800,17 @@ object TextAnalysis {
     * `<name>_docstats` first, so re-appending an already-ingested batch
     * (retry, micro-batch re-delivery — the streaming foreachBatch
     * reality) writes nothing and leaves the meta untouched
-    * (TextAnalysisSpec pins append-twice ≡ append-once). The guard makes
-    * whole-batch replays safe; the three writes are still not one atomic
-    * transaction — a failure BETWEEN the postings and docstats appends
-    * leaves the batch's postings orphaned (replay would then skip only
-    * docstats-present ids), and the recovery is [[deleteFromBm25Index]]
-    * on the batch's ids followed by a clean re-append, or a rebuild.
+    * (TextAnalysisSpec pins append-twice ≡ append-once). The three
+    * writes run under the marker ([[recoverBm25Index]]), so a crash
+    * between them rolls back at the next writer entry. The bucket specs
+    * come from the catalog; `numBuckets` is not read.
     */
-  /** Crash recovery for an interrupted BM25 index mutation — the shared
-    * [[IndexCommit]] marker over postings+docstats. WITHOUT it, a crash
-    * between the postings and docstats writes doesn't just go stale, it
-    * CORRUPTS on replay: the batch guard anti-joins docstats (which
-    * never saw the batch), so the redelivered batch appends its
-    * postings a second time. The meta table overwrites in place, so
-    * the listing cannot roll it back — it REBUILDS from the recovered
-    * docstats instead (n_docs = row count, total_tf = Σ __dl — the
-    * exact identities the build wrote).
-    */
-  def recoverBm25Index(spark: org.apache.spark.sql.SparkSession,
-                       name: String, path: String): Boolean =
-    IndexCommit.recover(spark, path, Seq("postings", "docstats"),
-      Seq(s"${name}_postings", s"${name}_docstats"),
-      postRecover = () => writeBm25Meta(spark, name, path,
-        spark.table(s"${name}_docstats").agg(
-          count(lit(1)).as("n_docs"),
-          coalesce(sum(col("__dl")), lit(0L)).as("total_tf"))))
-
   def appendToBm25Index(spark: org.apache.spark.sql.SparkSession,
                         name: String, path: String, newDocs: DataFrame,
                         idCol: String = "doc_id",
                         textCol: String = "text",
                         numBuckets: Int = 32): Unit =
-    IndexCommit.withMarkerFenced(spark, path,
-      Seq("postings", "docstats"),
-      Seq(s"${name}_postings", s"${name}_docstats"),
-      postRecover = () => writeBm25Meta(spark, name, path,
-        spark.table(s"${name}_docstats").agg(
-          count(lit(1)).as("n_docs"),
-          coalesce(sum(col("__dl")), lit(0L)).as("total_tf")))) {
-      fenceCheck =>
+    bm25Marker(spark, name, path).guard { fenceCheck =>
     // checkpoint the filtered batch: its lineage (anti-join against the
     // stored docstats) feeds three consumers below, and the docstats
     // table it probes is itself appended to mid-sequence
@@ -818,17 +819,13 @@ object TextAnalysis {
       .localCheckpoint()
     try if (!fresh.isEmpty) { // full replay: nothing new, nothing written
       val tf = termFrequencies(fresh, idCol, textCol)
-      tf.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(s"${name}_postings")
+      graft.io.IO.appendBucketed(tf, s"${name}_postings")
       fenceCheck() // between halves: bound the stolen-writer window
       val dl = fresh.select(col(idCol)).distinct()
         .join(tf.groupBy(col(idCol)).agg(sum(col("tf")).as("__tf")),
           Seq(idCol), "left")
         .select(col(idCol), coalesce(col("__tf"), lit(0L)).as("__dl"))
-      dl.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .bucketBy(numBuckets, idCol)
-        .format("parquet").saveAsTable(s"${name}_docstats")
+      graft.io.IO.appendBucketed(dl, s"${name}_docstats")
       fenceCheck()
       val old = spark.table(s"${name}_meta").head()
       val delta = fresh.agg(countDistinct(col(idCol)).as("nd"))
@@ -845,9 +842,9 @@ object TextAnalysis {
   /** GDPR path: drop documents from the index in place — both stored
     * relations rewrite through an id anti-join (materialized BEFORE the
     * overwrite so the read never races its own rewrite), and the meta
-    * recomputes from the REWRITTEN relations (no tokenize, no corpus).
+    * recomputes from the REWRITTEN docstats (no tokenize, no corpus).
     * Convenience overload for small driver-side id lists; the scale path
-    * is the DataFrame overload below.
+    * is the DataFrame overload below. `numBuckets` is not read.
     */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
                           name: String, path: String, deleteIds: Seq[Long],
@@ -864,29 +861,28 @@ object TextAnalysis {
     * join side input (distributed, broadcastable when small) instead of
     * an `isin(...)` literal whose expression tree grows with the set
     * (slow analysis, codegen limits). Same materialize-before-overwrite
-    * and meta-from-rewritten-relations discipline.
+    * and meta-from-rewritten-relations discipline. Location and bucket
+    * specs come from the catalog; `numBuckets` is not read.
     */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
                           name: String, path: String,
                           deleteIds: DataFrame, idCol: String,
                           numBuckets: Int): Unit = {
     val del = deleteIds.select(col(idCol)).distinct()
-    val keepP = spark.table(s"${name}_postings")
-      .join(del, Seq(idCol), "left_anti").localCheckpoint()
-    val keepD = spark.table(s"${name}_docstats")
-      .join(del, Seq(idCol), "left_anti").localCheckpoint()
-    graft.io.IO.writeBucketed(keepP, s"${name}_postings",
-      s"$path/postings", Seq("term"), numBuckets, sortCols = Seq("term"))
-    graft.io.IO.writeBucketed(keepD, s"${name}_docstats",
-      s"$path/docstats", Seq(idCol), numBuckets)
-    writeBm25Meta(spark, name, path,
-      keepD.agg(count(lit(1)).as("n_docs"))
-        .crossJoin(keepP.agg(coalesce(sum(col("tf")), lit(0L))
-          .as("total_tf"))))
-    // block-release hygiene: the rewrite checkpoints die with the call,
-    // not with driver GC
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(keepP)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(keepD)
+    rewriteBm25Index(spark, name, path)(_.join(del, Seq(idCol), "left_anti"))
+    rebuildBm25Meta(spark, name, path)
+  }
+
+  /** Writer entry of both in-place rewrites: recover, then rewrite
+    * postings and docstats as `keep(current)` at their catalog
+    * locations and bucket specs.
+    */
+  private def rewriteBm25Index(spark: org.apache.spark.sql.SparkSession,
+                               name: String, path: String)(
+                               keep: DataFrame => DataFrame): Unit = {
+    recoverBm25Index(spark, name, path)
+    Seq("postings", "docstats").foreach(t =>
+      graft.io.IO.rewriteTable(spark, s"${name}_$t")(keep))
   }
 
   /** [[buildBm25Index]] unless all three tables are registered in THIS
@@ -1002,39 +998,28 @@ object TextAnalysis {
   }
 
   /** Small-file hygiene after many appends: rewrite both bucketed
-    * relations in place (each append stacks `numBuckets` new files per
+    * relations in place (each append stacks a generation of files per
     * table; search-side bucket pruning then opens every generation).
-    * Same read-materialize-overwrite discipline as the delete path;
-    * results are bit-identical, only the file layout changes.
+    * Same recover-then-rewrite entry as the delete path; results are
+    * bit-identical, only the file layout changes. `idCol` and
+    * `numBuckets` are not read.
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        name: String, path: String,
                        idCol: String = "doc_id",
-                       numBuckets: Int = 32): Unit = {
-    val p = spark.table(s"${name}_postings").localCheckpoint()
-    val d = spark.table(s"${name}_docstats").localCheckpoint()
-    graft.io.IO.writeBucketed(p, s"${name}_postings", s"$path/postings",
-      Seq("term"), numBuckets, sortCols = Seq("term"))
-    graft.io.IO.writeBucketed(d, s"${name}_docstats", s"$path/docstats",
-      Seq(idCol), numBuckets)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(p)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(d)
-  }
+                       numBuckets: Int = 32): Unit =
+    rewriteBm25Index(spark, name, path)(identity)
 
   /** Small-file hygiene for the contamination fingerprint index — the
     * one-table sibling of [[compactBm25Index]]: every
-    * [[appendToContaminationIndex]] stacks `numBuckets` new files, and
-    * the probe's in-place bucket read opens every generation. Same
-    * read-materialize-overwrite discipline; the fp set is unchanged.
+    * [[appendToContaminationIndex]] stacks a generation of files, and
+    * the probe's in-place bucket read opens every generation. The fp set
+    * is unchanged. `path` and `numBuckets` are not read.
     */
   def compactContaminationIndex(spark: org.apache.spark.sql.SparkSession,
                                 name: String, path: String,
-                                numBuckets: Int = 32): Unit = {
-    val fp = spark.table(name).localCheckpoint()
-    graft.io.IO.writeBucketed(fp, name, path, Seq("fp"), numBuckets,
-      Seq("fp"))
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(fp)
-  }
+                                numBuckets: Int = 32): Unit =
+    graft.io.IO.rewriteTable(spark, name)(identity)
 
   /** Unigram language-model scoring (the CCNet-style quality filter):
     * learn p(token) = count/total over the corpus, then score each

@@ -78,16 +78,6 @@ object EventStream {
         unix_timestamp(col("window.start")).as("hour_epoch"),
         col("event_type"), col("n_events"), col("total_value"))
 
-  /** Sliding-window per-type rate (1 hour window, 15 minute slide). */
-  def slidingRate(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        unix_timestamp(col("window.start")).as("window_start"),
-        col("event_type"), col("n_events"))
-
   /** Session windows per user with a 30-minute gap. */
   def userSessions(events: DataFrame): DataFrame =
     events
@@ -1286,16 +1276,6 @@ object EventStream {
     } finally org.apache.spark.sql.graftbridge.ColumnBridge
       .releaseLocalCheckpoint(ah)
   }
-
-  /** The capstone wired to a stream: every micro-batch runs
-    * [[ingestBatch]] under `foreachBatch` — continuous curation against
-    * standing indexes, the operational loop of a 100 TB pipeline.
-    */
-  def ingestToIndexes(docs: DataFrame, ix: IngestIndexes,
-                      dest: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch((batch: Dataset[Row], _: Long) =>
-        ingestBatch(batch.toDF(), ix, dest))
 
   /** Run a streaming DataFrame to completion against a bounded file source
     * via the memory sink; returns the materialized result. Used by tests

@@ -74,18 +74,20 @@ object ColumnBridge {
     else None
   }
 
-  /** The catalog's bucket count for a bucketed table, if the table
-    * exists and was written with a bucket spec (`sessionState` is
-    * `private[sql]`). Lets in-place index rewrites (compaction, GDPR
-    * delete) reuse the BUILD's exact bucket count instead of trusting a
-    * caller-supplied default that may disagree with what's on disk.
+  /** The catalog's full bucket spec (count, bucket columns, sort
+    * columns) for a bucketed table, if the table exists and was written
+    * with one (`sessionState` is `private[sql]`). The build writes this
+    * spec once; every later append and in-place rewrite reuses it, so no
+    * caller restates a bucket count that may disagree with what's on
+    * disk.
     */
-  def tableNumBuckets(spark: org.apache.spark.sql.SparkSession,
-                      table: String): Option[Int] = {
+  def tableBucketSpec(spark: org.apache.spark.sql.SparkSession,
+                      table: String)
+      : Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = {
     val cat = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalog
     val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    if (cat.tableExists(id)) cat.getTableMetadata(id).bucketSpec.map(_.numBuckets)
+    if (cat.tableExists(id)) cat.getTableMetadata(id).bucketSpec
     else None
   }
 }

@@ -325,15 +325,11 @@ class DedupSpec extends SparkSpec {
       "doc_id", "text", shingleK = 2, numPerm = 32, bands = 8)
       .select("doc_id").as[Long].collect().toSet
     val dirD = java.nio.file.Files.createTempDirectory("graft_nd_del").toString
-    // build with a NON-default bucket count and delete with the default
-    // argument: the rewrite must derive the build's count from the
-    // catalog, not trust the caller (or probe plans change under it)
+    // (the bucket spec surviving the rewrite is pinned for every
+    // bucketed family in IndexBucketSpecSpec)
     Dedup.buildNearDupIndex(corpus, "del_nd", dirD, "doc_id", "text",
       shingleK = 2, numPerm = 32, bands = 8, numBuckets = 8)
     Dedup.deleteFromNearDupIndex(spark, "del_nd", dirD, gone)
-    assert(org.apache.spark.sql.graftbridge.ColumnBridge
-      .tableNumBuckets(spark, "del_nd_sig").contains(8),
-      "delete rewrite must preserve the build's bucket count")
     // every trace of the forgotten ids is out of both tables
     assert(spark.table("del_nd_sig")
       .join(gone, Seq("doc_id"), "left_semi").count() == 0)
@@ -880,12 +876,11 @@ class DedupSpec extends SparkSpec {
     Dedup.appendToFingerprintIndex(spark, "t_fp_idx", fps(40 until 60),
       keys, "id")
     assert(spark.table("t_fp_idx_fp").count() == rows)
-    // delete: forgotten corpus ids stop matching; bucket spec preserved
+    // delete: forgotten corpus ids stop matching (bucket spec: pinned
+    // in IndexBucketSpecSpec)
     Dedup.deleteFromFingerprintIndex(spark, "t_fp_idx", dir,
       Seq(0L, 4L, 44L).toDF("id"), keys, "id")
     assert(probe() == afterAppend.filterNot(p => Set(0L, 4L, 44L)(p._2)))
-    assert(org.apache.spark.sql.graftbridge.ColumnBridge
-      .tableNumBuckets(spark, "t_fp_idx_fp").contains(8))
     // scale shape: the probe's index side reads the bucketed table in
     // place (no exchange under the join)
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

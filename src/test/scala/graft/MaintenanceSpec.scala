@@ -281,6 +281,128 @@ class MaintenanceSpec extends SparkSpec {
     }
   }
 
+  /** The pending marker a crashed mutation leaves: the pre-mutation
+    * data-file listing of each participating directory.
+    */
+  private def writeCrashMarker(root: String,
+                               listing: Seq[(String, Set[String])]): Unit =
+    graft.io.IO.writeDir(
+      listing.flatMap { case (d, fs) => fs.toSeq.sorted.map((d, _)) }
+        .toDF("half", "file_name"),
+      s"$root/${graft.ops.IndexCommit.MarkerDir}")
+
+  private def dataFiles(root: String, d: String): Set[String] = {
+    val p = new org.apache.hadoop.fs.Path(root, d)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
+  }
+
+  /** Roll one directory back to `keep` by hand — the half of a crashed
+    * append that never landed.
+    */
+  private def dropNewFiles(root: String, d: String, keep: Set[String]): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root, d)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    dataFiles(root, d).diff(keep).foreach(f =>
+      fs.delete(new org.apache.hadoop.fs.Path(p, f), false))
+  }
+
+  test("near-dup index crash window, then compact and delete: every " +
+    "writer entry recovers first and the replay re-reaches the " +
+    "committed state") {
+    val docs = Tables.documents(spark, sf0001)
+    val path = tmp("ndcrash_rw")
+    def append(b: org.apache.spark.sql.DataFrame) =
+      Dedup.appendToNearDupIndex(spark, "crw_nd", b, "doc_id", "text",
+        shingleK = 2, numPerm = 32, bands = 8, numBuckets = 8)
+    Dedup.buildNearDupIndex(docs.filter(col("doc_id") < 200), "crw_nd",
+      path, "doc_id", "text", shingleK = 2, numPerm = 32, bands = 8,
+      numBuckets = 8)
+    try {
+      def state() = (spark.table("crw_nd_sig").count(),
+        spark.table("crw_nd_shingles").count(),
+        Dedup.nearDupNewOnlyIndexed(docs.filter(col("doc_id") >= 300),
+          "crw_nd", "doc_id", "text", shingleK = 2, numPerm = 32,
+          bands = 8).select("doc_id").as[Long].collect().toSet)
+      val l0 = Seq("sig", "shingles").map(d => d -> dataFiles(path, d))
+      val batch = docs.filter(col("doc_id") >= 200 && col("doc_id") < 300)
+      append(batch)
+      val committed = state()
+      // crash between halves: sig holds the batch, shingles doesn't
+      dropNewFiles(path, "shingles", l0(1)._2)
+      spark.catalog.refreshTable("crw_nd_shingles")
+      writeCrashMarker(path, l0)
+      Dedup.compactNearDupIndex(spark, "crw_nd", path, "doc_id", 8)
+      Dedup.deleteFromNearDupIndex(spark, "crw_nd", path,
+        batch.select("doc_id").limit(5), numBuckets = 8)
+      append(batch) // the replay
+      assert(state() == committed)
+    } finally {
+      Seq("crw_nd_sig", "crw_nd_shingles", "crw_nd_params")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
+  test("bm25 index crash window, then compact and delete: every writer " +
+    "entry recovers first, so the replay re-reaches the committed " +
+    "postings, docstats, search results and meta") {
+    val docs = Tables.documents(spark, sf0001)
+    val path = tmp("bm25crash_rw")
+    TextAnalysis.buildBm25Index(docs.filter(col("doc_id") < 300),
+      "crw_bm", path, numBuckets = 8)
+    try {
+      def state() = (spark.table("crw_bm_postings").count(),
+        spark.table("crw_bm_docstats").count(),
+        TextAnalysis.bm25SearchIndexed(spark, "crw_bm",
+          Seq("table", "scan", "vector"), topK = 10).collect().toSeq,
+        spark.table("crw_bm_meta").collect().toSeq)
+      val l0 = Seq("postings", "docstats").map(d => d -> dataFiles(path, d))
+      val batch = docs.filter(col("doc_id") >= 300 && col("doc_id") < 400)
+      TextAnalysis.appendToBm25Index(spark, "crw_bm", path, batch,
+        numBuckets = 8)
+      val committed = state()
+      // crash between halves: postings appended, docstats not, meta stale
+      dropNewFiles(path, "docstats", l0(1)._2)
+      spark.catalog.refreshTable("crw_bm_docstats")
+      writeCrashMarker(path, l0)
+      TextAnalysis.compactBm25Index(spark, "crw_bm", path, numBuckets = 8)
+      TextAnalysis.deleteFromBm25Index(spark, "crw_bm", path,
+        batch.select("doc_id").as[Long].collect().take(5).toSeq,
+        numBuckets = 8)
+      TextAnalysis.appendToBm25Index(spark, "crw_bm", path, batch,
+        numBuckets = 8) // the replay
+      assert(state() == committed)
+    } finally {
+      Seq("crw_bm_postings", "crw_bm_docstats", "crw_bm_meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
+  test("binary-quant index crash window, then compact and delete: every " +
+    "writer entry recovers first and the replay re-reaches the " +
+    "committed state") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val path = tmp("binq_crash_rw")
+    Similarity.buildBinaryQuantIndex(emb.filter(col("vec_id") < 300), path)
+    def state() = (spark.read.parquet(s"$path/vectors").count(),
+      spark.read.parquet(s"$path/codes").collect().toSet,
+      Similarity.binaryQuantTopKIndexed(spark, path,
+        emb.filter(col("vec_id") % 101 === 0), shortlist = 40, k = 10)
+        .collect().toSet)
+    val l0 = Seq("vectors", "codes").map(d => d -> dataFiles(path, d))
+    val batch = emb.filter(col("vec_id") >= 300 && col("vec_id") < 400)
+    Similarity.appendToBinaryQuantIndex(spark, path, batch)
+    val committed = state()
+    // crash between halves: vectors hold the batch, codes don't
+    dropNewFiles(path, "codes", l0(1)._2)
+    writeCrashMarker(path, l0)
+    Maintenance.maintainBinaryQuantIndex(spark, path, maxFiles = 1)
+    Similarity.deleteFromBinaryQuantIndex(spark, path,
+      batch.select("vec_id").limit(5))
+    Similarity.appendToBinaryQuantIndex(spark, path, batch)
+    assert(state() == committed)
+  }
+
   test("binary-quant: fragmented tables compact, search unchanged, quiet untouched") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val path = tmp("binq")

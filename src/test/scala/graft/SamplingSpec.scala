@@ -422,6 +422,12 @@ class SamplingSpec extends SparkSpec {
     val t = Sampling.greedySourceCoverage(tied, shingleK = 1, rounds = 2)
       .as[(Int, String, Long, Long)].collect().toSeq
     assert(t == Seq((1, "a", 2L, 2L), (2, "b", 2L, 4L)))
+    // degenerate inputs: no docs, and every text shorter than shingleK —
+    // the source universe is empty, so empty in gives empty out
+    val empty = docs.limit(0)
+    assert(Sampling.greedySourceCoverage(empty, shingleK = 1).count() == 0L)
+    val short = Seq(("A", "x1 x2"), ("B", "y1")).toDF("source", "text")
+    assert(Sampling.greedySourceCoverage(short, shingleK = 3).count() == 0L)
   }
 
   test("groupSample: exact n per group (whole group when smaller), " +

@@ -949,16 +949,18 @@ class StreamingSpec extends SparkSpec {
       .filter(col("doc_id") % 37 === 0 && col("doc_id") / 37 < 16)
       .select((col("doc_id") / 37).cast("int").as("cid"),
         col("embedding").as("centroid"))
-    def setup(tag: String): (EventStream.IngestIndexes, String) = {
+    def setup(tag: String, numBuckets: Int = 32)
+        : (EventStream.IngestIndexes, String) = {
       val root = java.nio.file.Files
         .createTempDirectory(s"graft_capstone_$tag").toString
       graft.ops.Dedup.buildNearDupIndex(seed, s"cap_nd_$tag", s"$root/nd",
-        "doc_id", "text", shingleK = 2, numPerm = 32, bands = 8)
+        "doc_id", "text", shingleK = 2, numPerm = 32, bands = 8,
+        numBuckets = numBuckets)
       graft.ops.TextAnalysis.buildContaminationIndex(seed,
         s"cap_ct_$tag", s"$root/ct", "doc_id", "text", k = 5, w = 8,
-        shingleHash = graft.functions.md5Hash31(_))
+        shingleHash = graft.functions.md5Hash31(_), numBuckets = numBuckets)
       graft.ops.TextAnalysis.buildBm25Index(seed, s"cap_bm_$tag",
-        s"$root/bm")
+        s"$root/bm", numBuckets = numBuckets)
       graft.ops.Similarity.buildIvfPqIndex(seedEmb, cellCentroids,
         codebook, s"$root/ivf", m = 4, idCol = "doc_id")
       graft.ops.Similarity.buildBinaryQuantIndex(seedEmb, s"$root/bq",
@@ -1001,6 +1003,14 @@ class StreamingSpec extends SparkSpec {
     assert(keptIds(destA).nonEmpty)
     assert(keptIds(destA) == keptIds(destB))
     assert(indexState(ixA) == indexState(ixB))
+    // C: the two micro-batches over indexes built with 8 buckets — the
+    // loop's default-argument appends take the catalog's spec
+    val (ixC, destC) = setup("b8", numBuckets = 8)
+    EventStream.ingestBatch(docs.filter(col("doc_id") >= 200 &&
+      col("doc_id") < 350), ixC, destC)
+    EventStream.ingestBatch(docs.filter(col("doc_id") >= 350), ixC, destC)
+    assert(keptIds(destC) == keptIds(destA))
+    assert(indexState(ixC) == indexState(ixA))
     // the cluster relation did NOT go stale under streaming ingest:
     // ingested docs' near-dup edges landed in the standing clusters
     assert(graft.ops.Dedup.cachedClusters(spark, ixA.clustersPath.get)
@@ -1021,7 +1031,9 @@ class StreamingSpec extends SparkSpec {
     Seq("cap_nd_inc_sig", "cap_nd_inc_shingles", "cap_ct_inc",
       "cap_bm_inc_postings", "cap_bm_inc_docstats", "cap_bm_inc_meta",
       "cap_nd_one_sig", "cap_nd_one_shingles", "cap_ct_one",
-      "cap_bm_one_postings", "cap_bm_one_docstats", "cap_bm_one_meta")
+      "cap_bm_one_postings", "cap_bm_one_docstats", "cap_bm_one_meta",
+      "cap_nd_b8_sig", "cap_nd_b8_shingles", "cap_ct_b8",
+      "cap_bm_b8_postings", "cap_bm_b8_docstats", "cap_bm_b8_meta")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
@@ -1042,11 +1054,12 @@ class StreamingSpec extends SparkSpec {
         Tables.documents(spark, sf0001)
           .filter(col("doc_id") >= lo && col("doc_id") < hi)
           .select("doc_id"), "doc_id", patternMod = 45), everyNth = 7)
-    def setup(tag: String): (EventStream.MediaIngestIndexes, String, String) = {
+    def setup(tag: String, numBuckets: Int = 32)
+        : (EventStream.MediaIngestIndexes, String, String) = {
       val root = java.nio.file.Files
         .createTempDirectory(s"graft_mingest_$tag").toString
       graft.ops.Multimodal.buildAHashIndex(media(0, 30), s"mi_$tag",
-        s"$root/ah")
+        s"$root/ah", numBuckets = numBuckets)
       (EventStream.MediaIngestIndexes(s"mi_$tag",
         censusDest = Some(s"$root/census")), s"$root/kept", s"$root/census")
     }
@@ -1072,13 +1085,19 @@ class StreamingSpec extends SparkSpec {
     assert(census(cenA) == census(cenB))
     // 20 image rows crossed the loop, 3 quarantined (42, 63, 84)
     assert(census(cenA) == Set(("image", 20L, 17L, 3L)), census(cenA))
+    // the same two batches over an index built with 8 buckets
+    val (ixC, destC, _) = setup("b8", numBuckets = 8)
+    EventStream.ingestMediaBatch(media(30, 60), ixC, destC)
+    EventStream.ingestMediaBatch(media(60, 90), ixC, destC)
+    assert(kept(destC) == kept(destA))
+    assert(bands("mi_b8") == bands("mi_inc"))
     // replay: the re-delivered batch dedups to nothing; census counts
     // it again (at-least-once, the documented contract)
     val bandsBefore = bands("mi_inc")
     EventStream.ingestMediaBatch(media(60, 90), ixA, destA)
     assert(bands("mi_inc") == bandsBefore)
     assert(kept(destA) == kept(destB))
-    Seq("mi_inc_bands", "mi_one_bands")
+    Seq("mi_inc_bands", "mi_one_bands", "mi_b8_bands")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
