@@ -1052,15 +1052,12 @@ object SparkEntry {
       val key = s"graft.internal.curationStagesBuilt.$path"
       if (s.conf.getOption(key).isEmpty) {
         val docs = T(s, d, "documents")
-        val lang = TextAnalysis.languageIdDf(docs)
-          .filter(col("lang_pred") =!= "und").drop("lang_pred")
-          .localCheckpoint()
-        val exact = Dedup.exactNormalized(lang, "text", "doc_id")
-          .localCheckpoint()
-        try {
-          val clusters = Dedup.clusterNearDups(
+        Materialize.using(TextAnalysis.languageIdDf(docs)
+          .filter(col("lang_pred") =!= "und").drop("lang_pred")) { lang =>
+        Materialize.using(Dedup.exactNormalized(lang, "text", "doc_id")) { exact =>
+        Materialize.owning(Dedup.clusterNearDups(
             Dedup.minhashNearDupPairs(exact, "doc_id", "text",
-              shingleK = 2, numPerm = 64, bands = 16, threshold = 0.8))
+              shingleK = 2, numPerm = 64, bands = 16, threshold = 0.8))) { clusters =>
           val near = exact.join(clusters, Seq("doc_id"), "left")
             .filter(col("cluster_rep").isNull ||
               col("cluster_rep") === col("doc_id"))
@@ -1078,12 +1075,7 @@ object SparkEntry {
                 coalesce(col("__n"), lit(0)).as("near_unique")),
             path)
           s.conf.set(key, "true")
-        } finally {
-          org.apache.spark.sql.graftbridge.ColumnBridge
-            .releaseLocalCheckpoint(lang)
-          org.apache.spark.sql.graftbridge.ColumnBridge
-            .releaseLocalCheckpoint(exact)
-        }
+        }}}
       }
       path
     }

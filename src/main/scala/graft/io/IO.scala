@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.Materialize
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
@@ -237,7 +238,7 @@ object IO {
                   (keep: DataFrame => DataFrame): Unit = {
     val spec = catalogSpec(spark, table)
     val loc = ColumnBridge.tableLocation(spark, table).get.toString
-    rewrite(keep(spark.table(table))) { m =>
+    Materialize.using(keep(spark.table(table))) { m =>
       saveBucketed(m.write.mode(SaveMode.Overwrite).option("path", loc),
         table, spec)
     }
@@ -248,12 +249,7 @@ object IO {
     */
   def rewriteDir(spark: SparkSession, dir: String)
                 (keep: DataFrame => DataFrame): Unit =
-    rewrite(keep(spark.read.parquet(dir)))(writeDir(_, dir))
-
-  private def rewrite(df: DataFrame)(write: DataFrame => Unit): Unit = {
-    val m = df.localCheckpoint()
-    try write(m) finally ColumnBridge.releaseLocalCheckpoint(m)
-  }
+    Materialize.using(keep(spark.read.parquet(dir)))(writeDir(_, dir))
 
   private def catalogSpec(spark: SparkSession, table: String): BucketSpec =
     ColumnBridge.tableBucketSpec(spark, table).getOrElse(

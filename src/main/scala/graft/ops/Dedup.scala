@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -481,27 +482,23 @@ object Dedup {
     Dedup.synchronized { withPathLockFenced(spark, path) { fenceCheck =>
       // key on idCol, not columns.head: a multi-column ids frame (e.g.
       // full document rows) must still anti-join on the id
-      val gone = ids.select(col(idCol)).toDF("__gone")
-        .distinct().localCheckpoint(true)
-      val stored = spark.read.parquet(s"$path/pairs")
-      val before = stored.count()
-      val kept = stored
-        .join(gone, stored("id_a") === col("__gone"), "left_anti")
-        .join(gone, stored("id_b") === col("__gone"), "left_anti")
-        .localCheckpoint(true) // materialize BEFORE touching the dir
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/meta"), true)
-      graft.io.IO.writeDir(kept, s"$path/pairs")
-      graft.io.IO.writeDir(
-        clusterNearDups(spark.read.parquet(s"$path/pairs")
-          .select(col("id_a"), col("id_b")), idCol = idCol),
-        s"$path/clusters")
-      val removed = before - kept.count()
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(kept)
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(gone)
+      val removed = Materialize.using(
+          ids.select(col(idCol)).toDF("__gone").distinct()) { gone =>
+        val stored = spark.read.parquet(s"$path/pairs")
+        val before = stored.count()
+        Materialize.using(stored // materialize BEFORE touching the dir
+          .join(gone, stored("id_a") === col("__gone"), "left_anti")
+          .join(gone, stored("id_b") === col("__gone"), "left_anti")) { kept =>
+          val fs = org.apache.hadoop.fs.FileSystem.get(
+            new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+          fs.delete(new org.apache.hadoop.fs.Path(s"$path/meta"), true)
+          graft.io.IO.writeDir(kept, s"$path/pairs")
+          Materialize.owning(clusterNearDups(spark.read.parquet(s"$path/pairs")
+            .select(col("id_a"), col("id_b")), idCol = idCol))(
+            graft.io.IO.writeDir(_, s"$path/clusters"))
+          before - kept.count()
+        }
+      }
       fenceCheck() // COMMIT gate: never validate a stolen store
       fingerprint.foreach(f => graft.io.IO.writeDir(
         f.withColumn("params_tag",
@@ -881,21 +878,29 @@ object Dedup {
                       idCol: String = "doc_id"): DataFrame = {
     // materialize the pair list once — `pairs` is typically a full LSH
     // pipeline, and edges are re-read every iteration
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("node"))
+    Materialize.using(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))) { edges =>
+    // convergence via the label-sum invariant: labels only ever DECREASE,
+    // so the total is strictly monotone and equal sums ⟺ no change — one
+    // aggregation scan per round instead of a join with the previous state
+    // (decimal(38) accumulator: 10^11 nodes × 10^11 max id overflows long).
+    // An empty pair list has no nodes, so the sum is null: converge
+    // immediately instead of NPEing on BigDecimal.compareTo
+    var labelSum: java.math.BigDecimal = null
+    var converged = false
+    def unchanged(labels: DataFrame): Boolean = {
+      val s = labels.agg(sum(col("label").cast("decimal(38,0)")))
+        .head().getDecimal(0)
+      converged = s == null || (labelSum != null && s.compareTo(labelSum) == 0)
+      labelSum = s
+      converged
+    }
+    // each round's labels feed the next round and the sum above; the
+    // superseded round's blocks are released as soon as it is replaced
+    val labels = Materialize.iterate(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    var iter = 0
-    // empty pair list → no nodes → sum() is null; converge immediately
-    // instead of NPEing on BigDecimal.compareTo
-    var labelSum = labels.agg(sum(col("label").cast("decimal(38,0)")))
-      .head().getDecimal(0)
-    var converged = labelSum == null
-    while (iter < maxIter && !converged) {
+      .withColumn("label", col("node")), maxIter, unchanged) { labels =>
       // (a) neighbor-min: pull the smallest label across every edge.
       // The label relation is NODES-sized — it grows with the corpus, so
       // it must never ride a BroadcastExchange (an 8 MB labels frame at
@@ -929,30 +934,11 @@ object Dedup {
       // (b) pointer doubling: follow the label chain one hop — label
       // values are node ids, so the lookup is a self-join; the chained
       // label is never larger (labels are monotone decreasing)
-      val next = viaNeighbors.alias("n")
+      viaNeighbors.alias("n")
         .join(viaNeighbors.select(col("node").as("l_node"), col("label").as("l_label")).hint("merge"),
           col("n.label") === col("l_node"))
         .select(col("n.node").as("node"), col("l_label").as("label"))
-        .localCheckpoint(true) // next round + the sum below reuse it
-      // convergence via the label-sum invariant: labels only ever DECREASE,
-      // so the total is strictly monotone and equal sums ⟺ no change — one
-      // aggregation scan per round instead of a join with the previous state
-      // (decimal(38) accumulator: 10^11 nodes × 10^11 max id overflows long)
-      val nextSum = next.agg(sum(col("label").cast("decimal(38,0)")))
-        .head().getDecimal(0)
-      // `next` is materialized (eager checkpoint) — this round's
-      // intermediate and the superseded labels blocks are dead; release
-      // them now rather than accumulating 2·rounds checkpoints until
-      // driver GC (the long-session memory-pressure source)
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(labels)
-      labels = next
-      converged = nextSum.compareTo(labelSum) == 0
-      labelSum = nextSum
-      iter += 1
     }
-    // the returned labels checkpoint is self-contained — the edge
-    // materialization's blocks are dead once the loop ends
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(edges)
     // callers cannot distinguish converged from truncated labels from the
     // output alone — be loud when maxIter ran out (pointer doubling makes
     // this O(log diameter), so hitting the cap means a pathological graph
@@ -963,6 +949,7 @@ object Dedup {
           s"$maxIter iterations — returned cluster_rep labels may be " +
           s"partially merged (some components split). Increase maxIter.")
     labels.select(col("node").as(idCol), col("label").as("cluster_rep"))
+    }
   }
 
   // ----------------------------- session-cached pair / cluster relations
@@ -1045,10 +1032,9 @@ object Dedup {
             new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(metaPath), true)
           graft.io.IO.writeDir(pairs, s"$path/pairs")
-          graft.io.IO.writeDir(
-            clusterNearDups(spark.read.parquet(s"$path/pairs"),
-              idCol = idCol),
-            s"$path/clusters")
+          Materialize.owning(clusterNearDups(
+            spark.read.parquet(s"$path/pairs"), idCol = idCol))(
+            graft.io.IO.writeDir(_, s"$path/clusters"))
           fenceCheck() // COMMIT gate: never validate a stolen store
           meta.foreach(m => graft.io.IO.writeDir(m, metaPath))
         }
@@ -1217,12 +1203,11 @@ object Dedup {
         s"appendToPairClusters needs an ids-only pair relation " +
           s"(id_a, id_b); found ${stored.columns.mkString(", ")} — " +
           "scored pair relations stay on the full-rebuild path")
-      val canon = newPairs.select(
+      val nFresh = Materialize.using(newPairs.select( // materialize first
           least(col("id_a"), col("id_b")).as("id_a"),
           greatest(col("id_a"), col("id_b")).as("id_b"))
         .filter(col("id_a") =!= col("id_b"))
-        .distinct()
-        .localCheckpoint(true) // materialize BEFORE touching the dir
+        .distinct()) { canon =>
       // the anti-join guards the FILE append only (no duplicate rows on
       // disk); the cluster merge below uses ALL canonical batch pairs —
       // a replay after a crash between the pairs append and the clusters
@@ -1238,12 +1223,12 @@ object Dedup {
       val star = spark.read.parquet(s"$path/clusters")
         .filter(col(idCol) =!= col("cluster_rep"))
         .select(col("cluster_rep").as("id_a"), col(idCol).as("id_b"))
-      val merged = clusterNearDups(star.unionAll(canon), idCol = idCol)
       // clusterNearDups materializes its state eagerly, so overwriting
       // the clusters dir it read the star edges from is safe
-      graft.io.IO.writeDir(merged, s"$path/clusters")
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(canon)
+      Materialize.owning(clusterNearDups(star.unionAll(canon), idCol = idCol))(
+        graft.io.IO.writeDir(_, s"$path/clusters"))
+      nFresh
+      }
       fenceCheck() // COMMIT gate: never validate a stolen store
       fingerprint.foreach(f => graft.io.IO.writeDir(
         f.withColumn("params_tag",

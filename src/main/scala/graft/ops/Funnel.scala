@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -106,16 +107,15 @@ object Funnel {
                           userCol: String = "user_id", tsCol: String = "ts",
                           idCol: String = "event_id",
                           typeCol: String = "event_type"): DataFrame = {
-    val sess = sessionKeyed(events, gapMinutes, userCol, tsCol, idCol,
-      typeCol).localCheckpoint()
-    val out = funnelDepths(sess, steps, userCol = "__session_key",
-      tsCol = tsCol, idCol = idCol, typeCol = typeCol)
-      .groupBy("depth").agg(count(lit(1)).as("n_sessions"))
+    Materialize.using(sessionKeyed(events, gapMinutes, userCol, tsCol,
+        idCol, typeCol)) { sess =>
       // the result is ≤ steps.size+1 rows: materialize it so the
-      // checkpointed session relation can release before returning
-      .localCheckpoint()
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(sess)
-    out
+      // session relation and the per-step frontiers can release
+      Materialize.owning(funnelDepths(sess, steps, userCol = "__session_key",
+          tsCol = tsCol, idCol = idCol, typeCol = typeCol))(
+        _.groupBy("depth").agg(count(lit(1)).as("n_sessions"))
+          .localCheckpoint())
+    }
   }
 
   /** Gap-based sessionization projection shared by the session funnel
@@ -192,14 +192,13 @@ object Funnel {
                            userCol: String = "user_id", tsCol: String = "ts",
                            idCol: String = "event_id",
                            typeCol: String = "event_type"): DataFrame = {
-    val sess = sessionKeyed(events, gapMinutes, userCol, tsCol, idCol,
-      typeCol).localCheckpoint()
-    val out = frequentPaths(sess, n, k, userCol = "__session_key",
-      tsCol = tsCol, idCol = idCol, typeCol = typeCol)
-      // k-row result: materialize so the session relation can release
-      .localCheckpoint()
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(sess)
-    out
+    Materialize.using(sessionKeyed(events, gapMinutes, userCol, tsCol,
+        idCol, typeCol)) { sess =>
+      frequentPaths(sess, n, k, userCol = "__session_key",
+        tsCol = tsCol, idCol = idCol, typeCol = typeCol)
+        // k-row result: materialize so the session relation can release
+        .localCheckpoint()
+    }
   }
 
   /** Weekly cohort retention: users are cohorted by the ISO week of
@@ -240,24 +239,26 @@ object Funnel {
     require(steps.size >= 2, "conversionLatencies needs >= 2 steps")
     val after: (Column, Column, Column, Column) => Column =
       (ts, id, fts, fid) => ts > fts || (ts === fts && id > fid)
-    var frontier: DataFrame = null
-    for (step <- steps) {
+    def frontierOf(step: String, prev: Option[DataFrame]): DataFrame = {
       val cand = events.filter(col(typeCol) === step)
         .select(col(userCol), col(tsCol).as("__ets"), col(idCol).as("__eid"))
-      val qualified =
-        if (frontier == null) cand.withColumn("__t1c", col("__ets"))
-        else cand.join(frontier, Seq(userCol))
+      val qualified = prev.fold(cand.withColumn("__t1c", col("__ets")))(
+        cand.join(_, Seq(userCol))
           .filter(after(col("__ets"), col("__eid"),
             col("__fts"), col("__fid")))
           .select(col(userCol), col("__ets"), col("__eid"),
-            col("__t1").as("__t1c"))
-      frontier = qualified.groupBy(userCol)
+            col("__t1").as("__t1c")))
+      qualified.groupBy(userCol)
         .agg(min(struct(col("__ets"), col("__eid"), col("__t1c"))).as("__m"))
         .select(col(userCol), col("__m.__ets").as("__fts"),
           col("__m.__eid").as("__fid"), col("__m.__t1c").as("__t1"))
-        .localCheckpoint()
     }
-    frontier.select(col(userCol),
+    // one materialised frontier per step; only the last outlives the loop
+    var i = 0
+    Materialize.iterate(frontierOf(steps.head, None), steps.size - 1) { f =>
+      i += 1
+      frontierOf(steps(i), Some(f))
+    }.select(col(userCol),
       unix_micros(col("__t1")).as("first_us"),
       unix_micros(col("__fts")).as("last_us"),
       (unix_micros(col("__fts")) - unix_micros(col("__t1")))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -118,40 +119,37 @@ object Graph {
                            iterations: Int, damping: Double,
                            roundTo: Int): DataFrame = {
     require(iterations >= 1, s"iterations ($iterations) must be >= 1")
-    val release = org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
     // teleport membership rides the node relation as a flag
-    val flagged = (sources match {
+    val flaggedDf = sources match {
       case None => nodes.withColumn("__insrc", lit(true))
       case Some(src) =>
         val set = src.select(col(src.columns.head).as("node")).distinct()
           .withColumn("__f", lit(1))
         nodes.join(set, Seq("node"), "left")
           .select(col("node"), col("__f").isNotNull.as("__insrc"))
-    }).localCheckpoint()
+    }
+    Materialize.using(flaggedDf) { flagged =>
     // teleport-set size: the normalizer for init, base, and dangling mass
     val n = flagged.filter(col("__insrc")).count()
     require(n > 0, "pageRank: teleport set is empty — no nodes to rank " +
       "(an empty graph or disjoint source set would divide by zero)")
     val outdeg = edges.groupBy("src").agg(sum(col("weight")).as("__od"))
-    val norm = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"), (col("weight") / col("__od")).as("__norm"))
-      .localCheckpoint()
+    Materialize.using(edges.join(outdeg, "src")
+      .select(col("src"), col("dst"), (col("weight") / col("__od")).as("__norm"))) { norm =>
     // dangling = nodes with no out-edge; their set is iteration-invariant,
     // only their current rank mass changes
-    val dangling = flagged.select("node")
+    Materialize.using(flagged.select("node")
       .join(norm.select("src").distinct(),
-        col("node") === col("src"), "left_anti")
-      .localCheckpoint()
+        col("node") === col("src"), "left_anti")) { dangling =>
     val base = (1.0 - damping) / n // subtract-then-divide, as the oracle
     def teleport(perMember: Double): Column =
       when(col("__insrc"), lit(perMember)).otherwise(lit(0.0))
-    var ranks = flagged
-      .select(col("node"), round(teleport(1.0 / n), roundTo).as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
+    Materialize.iterate(flagged
+      .select(col("node"), round(teleport(1.0 / n), roundTo).as("rank")),
+      iterations) { ranks =>
       // r17: the dangling mass rides the plan as a broadcast 1-row scalar
       // (the HITS normalizer shape) instead of a per-round driver
       // collect — one job per round (the checkpoint) instead of two.
@@ -162,7 +160,7 @@ object Graph {
       val contrib = ranks.drop("__insrc")
         .join(norm, col("node") === col("src"))
         .groupBy("dst").agg(sum(col("rank") * col("__norm")).as("__contrib"))
-      val next = flagged.join(contrib, col("node") === col("dst"), "left")
+      flagged.join(contrib, col("node") === col("dst"), "left")
         .crossJoin(broadcast(dmRow))
         .select(col("node"), col("__insrc"),
           round(teleport(base) + lit(damping) *
@@ -170,12 +168,8 @@ object Graph {
               when(col("__insrc"), col("__dm") / lit(n.toDouble))
                 .otherwise(lit(0.0))),
             roundTo).as("rank"))
-        .localCheckpoint()
-      release(ranks)
-      ranks = next
-    }
-    release(flagged); release(norm); release(dangling)
-    ranks.select("node", "rank")
+    }.select("node", "rank")
+    }}}
   }
 
   /** Deterministic label propagation (Raghavan et al. 2007, public) —
@@ -200,10 +194,9 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, iterations: Int = 5): DataFrame = {
     require(iterations >= 1, s"iterations ($iterations) must be >= 1")
-    val release = org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
-    val nodes = edges.select(col("src").as("node"))
+    Materialize.using(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct()) { nodes =>
     def phase(labels: DataFrame, parity: Int): DataFrame = {
       val votes = labels.join(edges, col("node") === col("src"))
         .groupBy(col("dst"), col("label"))
@@ -218,20 +211,14 @@ object Graph {
             coalesce(col("__newLabel"), col("label")))
             .otherwise(col("label")).as("label"))
     }
-    var labels = nodes.select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      // r17: ONE checkpoint per round (the clusterNearDups r16 fusion) —
-      // the phase-0 result stays lazy inside phase-1's plan; its two
-      // consumers (the vote join and the keep-label left join) dedupe
-      // through ReusedExchange, so the round pays one materialization
-      // job instead of two. Expressions are untouched — same labels.
-      val next = phase(phase(labels, 0), 1).localCheckpoint()
-      release(labels)
-      labels = next
+    // r17: ONE checkpoint per round (the clusterNearDups r16 fusion) —
+    // the phase-0 result stays lazy inside phase-1's plan; its two
+    // consumers (the vote join and the keep-label left join) dedupe
+    // through ReusedExchange, so the round pays one materialization
+    // job instead of two. Expressions are untouched — same labels.
+    Materialize.iterate(nodes.select(col("node"), col("node").as("label")),
+      iterations)(labels => phase(phase(labels, 0), 1))
     }
-    release(nodes)
-    labels
   }
 
   /** Oracle for [[labelPropagation]]: the two-phase vote/argmax/keep
@@ -344,32 +331,25 @@ object Graph {
   def cheapestPaths(edges: DataFrame, source: String, iterations: Int = 6,
                     roundTo: Int = 6): DataFrame = {
     require(iterations >= 1, s"iterations ($iterations) must be >= 1")
-    val release = org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     val INF = 1e18
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
     val outdeg = edges.groupBy("src").agg(sum(col("weight")).as("__od"))
-    val costs = edges.join(outdeg, "src")
+    Materialize.using(edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node")))
+      .distinct()) { nodes =>
+    Materialize.using(edges.join(outdeg, "src")
       .select(col("src"), col("dst"),
-        round(-log(col("weight") / col("__od")), roundTo).as("__c"))
-      .localCheckpoint()
-    var dist = nodes.select(col("node"),
-      when(col("node") === source, lit(0.0)).otherwise(lit(INF)).as("dist"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
+        round(-log(col("weight") / col("__od")), roundTo).as("__c"))) { costs =>
+    Materialize.iterate(nodes.select(col("node"),
+      when(col("node") === source, lit(0.0)).otherwise(lit(INF)).as("dist")),
+      iterations) { dist =>
       val relaxed = dist.join(costs, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + col("__c")).as("dist"))
-      val next = dist.select(col("node"), col("dist"))
+      dist.select(col("node"), col("dist"))
         .unionByName(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      release(dist)
-      dist = next
-    }
-    release(nodes); release(costs)
-    dist.filter(col("dist") < lit(1e17))
+    }.filter(col("dist") < lit(1e17))
       .select(col("node"), round(col("dist"), roundTo).as("cost"))
+    }}
   }
 
   /** Per-node triangle participation over the UNDIRECTED simple graph
@@ -559,7 +539,6 @@ object Graph {
             srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(k >= 1, s"k ($k) must be >= 1")
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
-    val release = org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     // r17: iterate on the CANONICAL (a ≤ b) edge set — half the rows of
     // the symmetrized relation through every per-round checkpoint and
     // survivor join; the degree aggregate recovers both directions with
@@ -570,28 +549,22 @@ object Graph {
       .select(explode(when(col("a") === col("b"), array(col("a")))
         .otherwise(array(col("a"), col("b")))).as("a"))
       .groupBy(col("a")).agg(count(lit(1)).as("__deg"))
-    var adj = edges
+    val adj = Materialize.iterate(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
-      .distinct()
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
+      .distinct(), rounds) { adj =>
       val keep = degrees(adj).filter(col("__deg") >= k).select(col("a"))
       // each round's adjacency feeds TWO consumers (the degree aggregate
       // and the survivor joins), so it must materialize per round — an
       // every-N-rounds checkpoint recomputes the un-materialized rounds
       // once per consumer (measured slower, not faster)
-      val next = adj
+      adj
         .join(keep, Seq("a"), "left_semi")
         .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .localCheckpoint()
-      release(adj)
-      adj = next
     }
-    // the final iterate stays checkpointed (the [[pageRankImpl]] `ranks`
-    // precedent) — releasing it here would unpin the blocks before the
-    // caller's lazy aggregate runs
+    // the final iterate stays checkpointed — the caller's lazy aggregate
+    // reads it
     degrees(adj).select(col("a").as("node"), col("__deg").as("degree"))
   }
 
@@ -679,10 +652,9 @@ object Graph {
   def hits(edges: DataFrame, iterations: Int = 10,
            roundTo: Int = 6): DataFrame = {
     require(iterations >= 1, s"iterations ($iterations) must be >= 1")
-    val release = org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
-    val nodes = edges.select(col("src").as("node"))
+    Materialize.using(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct()) { nodes =>
     val n = nodes.count()
     require(n > 0, "hits: empty graph")
     // r17 note: a one-checkpoint-per-round fusion (authority half lazy
@@ -692,45 +664,39 @@ object Graph {
     // normalizer, so leaving it lazy re-executes the deep half twice per
     // round — more than the saved checkpoint job costs. Two half-step
     // checkpoints stand.
-    var hubs = nodes.select(col("node"),
-      round(lit(1.0 / n), roundTo).as("hub")).localCheckpoint()
-    var auth: DataFrame = null
-    for (_ <- 1 to iterations) {
-      // the L1 normalizer rides the plan as a broadcast 1-row scalar
-      // (same aggregate the oracle computes — no driver round-trip, so
-      // each half-step is ONE job: the checkpoint of the normalized
-      // scores)
-      val araw = nodes
-        .join(hubs.join(edges, col("node") === col("src"))
-          .groupBy(col("dst"))
-          .agg(round(sum(col("hub") * col("weight")), roundTo).as("__r")),
-          col("node") === col("dst"), "left")
-        .select(col("node"), coalesce(col("__r"), lit(0.0)).as("__r"))
-      val nextAuth = araw
-        .crossJoin(broadcast(araw.agg(sum(col("__r")).as("__s"))))
-        .select(col("node"),
-          round(col("__r") / col("__s"), roundTo).as("authority"))
-        .localCheckpoint()
-      if (auth != null) release(auth)
-      auth = nextAuth
-      val hraw = nodes
-        .join(auth.join(edges, col("node") === col("dst"))
-          .groupBy(col("src"))
-          .agg(round(sum(col("authority") * col("weight")), roundTo)
-            .as("__r")),
-          col("node") === col("src"), "left")
-        .select(col("node"), coalesce(col("__r"), lit(0.0)).as("__r"))
-      val nextHubs = hraw
-        .crossJoin(broadcast(hraw.agg(sum(col("__r")).as("__s"))))
-        .select(col("node"), round(col("__r") / col("__s"), roundTo).as("hub"))
-        .localCheckpoint()
-      release(hubs)
-      hubs = nextHubs
+    // The L1 normalizer rides the plan as a broadcast 1-row scalar (same
+    // aggregate the oracle computes — no driver round-trip, so each
+    // half-step is ONE job: the checkpoint of the normalized scores).
+    def normalized(raw: DataFrame, name: String): DataFrame = raw
+      .crossJoin(broadcast(raw.agg(sum(col("__r")).as("__s"))))
+      .select(col("node"), round(col("__r") / col("__s"), roundTo).as(name))
+    def authorities(hubs: DataFrame): DataFrame = normalized(nodes
+      .join(hubs.join(edges, col("node") === col("src"))
+        .groupBy(col("dst"))
+        .agg(round(sum(col("hub") * col("weight")), roundTo).as("__r")),
+        col("node") === col("dst"), "left")
+      .select(col("node"), coalesce(col("__r"), lit(0.0)).as("__r")),
+      "authority")
+    def hubsOf(auth: DataFrame): DataFrame = normalized(nodes
+      .join(auth.join(edges, col("node") === col("dst"))
+        .groupBy(col("src"))
+        .agg(round(sum(col("authority") * col("weight")), roundTo)
+          .as("__r")),
+        col("node") === col("src"), "left")
+      .select(col("node"), coalesce(col("__r"), lit(0.0)).as("__r")),
+      "hub")
+    // rounds of the loop are half-steps, authority and hub in turn; it
+    // stops on the last authority half so that both of the last halves
+    // outlive it
+    val auth = Materialize.iterate(nodes.select(col("node"),
+        round(lit(1.0 / n), roundTo).as("hub")), 2 * iterations - 1) { s =>
+      if (s.columns.contains("hub")) authorities(s) else hubsOf(s)
     }
-    val out = hubs.join(auth, Seq("node"))
-      .select(col("node"), col("hub"), col("authority"))
-    release(nodes)
-    out
+    Materialize.handOff(auth) { auth =>
+      hubsOf(auth).localCheckpoint().join(auth, Seq("node"))
+        .select(col("node"), col("hub"), col("authority"))
+    }
+    }
   }
 
   /** Unrolled-layer DuckDB mirror of [[hits]]. `edgesCte` must expose

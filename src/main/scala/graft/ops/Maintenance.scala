@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -382,13 +383,11 @@ object Maintenance {
     swap.recover()
     val files = Layout.dataFiles(spark, path)
     if (files.isEmpty) return 0L
-    val gone = ids.select(col(idCol)).distinct().localCheckpoint(true)
-    val before = spark.read.parquet(path).count()
-    try {
+    Materialize.using(ids.select(col(idCol)).distinct()) { gone =>
+      val before = spark.read.parquet(path).count()
       swap.rewrite(files.map(_.getPath.getName), zCols, numFiles, bits)(
         _.join(gone, Seq(idCol), "left_anti"))
       before - spark.read.parquet(path).count()
-    } finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(gone)
+    }
   }
 }

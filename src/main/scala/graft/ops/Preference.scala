@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -137,50 +138,40 @@ object Preference {
     // explosion was paid once. The side-exploded shape stands.
     require(rounds >= 1 && rounds <= 16,
       s"rounds ($rounds) must be in [1, 16]")
-    val release =
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
-    val sides = m.select(explode(array(
+    Materialize.using(m.select(explode(array(
         struct(col("item_a").as("item"), col("item_b").as("opp"),
           (col("wins_a") + col("wins_b")).as("n"), col("wins_a").as("w")),
         struct(col("item_b").as("item"), col("item_a").as("opp"),
           (col("wins_a") + col("wins_b")).as("n"), col("wins_b").as("w"))))
         .as("__s"))
       .select(col("__s.item").as("item"), col("__s.opp").as("opp"),
-        col("__s.n").as("n"), col("__s.w").as("w"))
-      .localCheckpoint()
-    val wins = sides.groupBy(col("item"))
-      .agg(sum(col("w")).as("n_wins"), sum(col("n")).as("n_games"))
-      .localCheckpoint()
-    var s = wins.select(col("item"), lit(1000000L).as("strength_micro"))
-      .localCheckpoint()
-    try {
-      for (_ <- 1 to rounds) {
-        val d = sides
-          .join(broadcast(s.select(col("item"),
-            col("strength_micro").as("__wi"))), Seq("item"))
-          .join(broadcast(s.select(col("item").as("opp"),
-            col("strength_micro").as("__wj"))), Seq("opp"))
-          .groupBy(col("item"))
-          .agg(sum(expr("n * 1000000000 DIV greatest(__wi + __wj, 1)"))
-            .as("__d"))
-        val raw = wins.join(d, Seq("item"))
-          .select(col("item"),
-            expr("n_wins * 1000000000 DIV greatest(__d, 1)").as("__raw"))
-        val mx = raw.agg(max(col("__raw")).as("__mx"))
-        val next = raw.crossJoin(broadcast(mx))
-          .select(col("item"),
-            expr("__raw * 1000000 DIV greatest(__mx, 1)")
-              .as("strength_micro"))
-          .localCheckpoint()
-        release(s)
-        s = next
-      }
-      wins.join(s, Seq("item"))
-        .select(col("item"), col("strength_micro"), col("n_wins"),
-          col("n_games"))
-        .localCheckpoint()
-    } finally {
-      release(s); release(wins); release(sides)
+        col("__s.n").as("n"), col("__s.w").as("w"))) { sides =>
+    Materialize.using(sides.groupBy(col("item"))
+      .agg(sum(col("w")).as("n_wins"), sum(col("n")).as("n_games"))) { wins =>
+    val strengths = Materialize.iterate(
+        wins.select(col("item"), lit(1000000L).as("strength_micro")),
+        rounds) { s =>
+      val d = sides
+        .join(broadcast(s.select(col("item"),
+          col("strength_micro").as("__wi"))), Seq("item"))
+        .join(broadcast(s.select(col("item").as("opp"),
+          col("strength_micro").as("__wj"))), Seq("opp"))
+        .groupBy(col("item"))
+        .agg(sum(expr("n * 1000000000 DIV greatest(__wi + __wj, 1)"))
+          .as("__d"))
+      val raw = wins.join(d, Seq("item"))
+        .select(col("item"),
+          expr("n_wins * 1000000000 DIV greatest(__d, 1)").as("__raw"))
+      val mx = raw.agg(max(col("__raw")).as("__mx"))
+      raw.crossJoin(broadcast(mx))
+        .select(col("item"),
+          expr("__raw * 1000000 DIV greatest(__mx, 1)")
+            .as("strength_micro"))
     }
+    Materialize.owning(strengths)(s => wins.join(s, Seq("item"))
+      .select(col("item"), col("strength_micro"), col("n_wins"),
+        col("n_games"))
+      .localCheckpoint())
+    }}
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -321,8 +322,8 @@ object Sampling {
   def dsirLambdaPpm(docs: DataFrame, isTarget: Column,
                     idCol: String = "doc_id", textCol: String = "text",
                     buckets: Int = 1024): Map[Long, Long] =
-    dsirLambdaFrame(docs, isTarget, idCol, textCol, buckets)._2
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Materialize.owning(dsirLambdaFrame(docs, isTarget, idCol, textCol,
+        buckets)._2)(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
 
   /** Map-only DSIR score against FROZEN λ (ppm BIGINT sum over the
     * doc's n-gram bucket occurrences — Σ_occurrences λ(bucket) equals
@@ -775,18 +776,16 @@ object Sampling {
                            textCol: String = "text", shingleK: Int = 3,
                            rounds: Int = 5): DataFrame = {
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
-    val release = org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     val spark = docs.sparkSession
-    val sh = Spread.spread(docs.select(col(srcCol), col(textCol)))
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, Long, Long)]
+    var cum = 0L
+    Materialize.using(Spread.spread(docs.select(col(srcCol), col(textCol)))
       .select(col(srcCol).as("source"),
         explode(graft.functions.wordShingles(col(textCol), shingleK))
           .as("__s"))
       .select(col("source"), graft.functions.md5Hash31(col("__s")).as("__h"))
-      .distinct()
-      .localCheckpoint()
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, Long, Long)]
-    var cum = 0L
+      .distinct()) { sh =>
     val srcs = sh.select(col("source")).distinct()
       .orderBy(col("source")).collect().map(_.getString(0))
     // empty source universe (no docs, or every text shorter than
@@ -827,40 +826,46 @@ object Sampling {
         }
       }
     } else {
-      var picked = List.empty[String]
-      var covered: DataFrame = null
-      var exhausted = false
-      for (r <- 1 to rounds if !exhausted) {
+      // round r's argmax over the shingles no pick covers yet; the covered
+      // set is the loop state, one materialised round per pick
+      def best(picked: Seq[String], covered: Option[DataFrame])
+          : Option[(String, Long)] = {
         val remaining =
           if (picked.isEmpty) sh
           else sh.filter(!col("source").isin(picked: _*))
-        val freshRel =
-          if (covered == null) remaining
-          else remaining.join(covered, Seq("__h"), "left_anti")
+        val freshRel = covered.fold(remaining)(
+          remaining.join(_, Seq("__h"), "left_anti"))
         // sh is distinct per (source, h): count(*) IS the distinct marginal
-        val best = freshRel.groupBy(col("source"))
+        freshRel.groupBy(col("source"))
           .agg(count(lit(1)).as("__m"))
           .orderBy(desc("__m"), col("source"))
           .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val src = best(0).getString(0)
-          val m = best(0).getLong(1)
-          cum += m
-          out += ((r, src, m, cum))
-          picked = picked :+ src
-          val nextCov = (if (covered == null)
-              sh.filter(col("source") === src).select(col("__h"))
-            else covered.union(
-              sh.filter(col("source") === src).select(col("__h"))).distinct())
-            .localCheckpoint()
-          if (covered != null) release(covered)
-          covered = nextCov
-        }
+          .headOption.map(r => (r.getString(0), r.getLong(1)))
       }
-      if (covered != null) release(covered)
+      def pick(src: String, m: Long): Unit = {
+        cum += m
+        out += ((out.size + 1, src, m, cum))
+      }
+      def covers(src: String) = sh.filter(col("source") === src).select(col("__h"))
+      best(Nil, None).foreach { case (first, m) =>
+        pick(first, m)
+        var next: Option[(String, Long)] = None
+        // stop once `rounds` picks are made (no argmax past the last) or
+        // nothing fresh is left
+        def exhausted(covered: DataFrame): Boolean = out.size >= rounds || {
+          next = best(out.map(_._2).toSeq, Some(covered))
+          next.isEmpty
+        }
+        // every pick is made inside the loop; its last covered set is dead
+        Materialize.owning(Materialize.iterate(covers(first), rounds, exhausted) {
+          covered =>
+            val (src, m) = next.get
+            pick(src, m)
+            covered.union(covers(src)).distinct()
+        })(_ => ())
+      }
     }
-    release(sh)
+    }
     import spark.implicits._
     out.toSeq
       .toDF("round", "source", "new_shingles", "cumulative_shingles")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -283,10 +284,8 @@ object Similarity {
       : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], Seq[Double]) = {
     require(m > 0 && k > 1 && rounds >= 1 && lloydRounds >= 1,
       s"bad OPQ config (m=$m k=$k rounds=$rounds lloydRounds=$lloydRounds)")
-    val release = org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
-    val v = sample
-      .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__x"))
-      .localCheckpoint()
+    Materialize.using(sample
+      .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__x"))) { v =>
     val dims = v.select(size(col("__x"))).limit(1).collect()
     require(dims.nonEmpty, "empty OPQ training sample")
     val d = dims(0).getInt(0)
@@ -296,10 +295,8 @@ object Similarity {
     var codebooks: Seq[Seq[Seq[Double]]] = null
     val mses = scala.collection.mutable.ArrayBuffer.empty[Double]
     val n = v.count().toDouble
-    for (round <- 1 to rounds) {
-      val rotated = v
-        .select(col("__id"), col("__x"), rotate(col("__x"), rot).as("__z"))
-        .localCheckpoint()
+    for (round <- 1 to rounds) Materialize.using(v
+        .select(col("__id"), col("__x"), rotate(col("__x"), rot).as("__z"))) { rotated =>
       // warm-start each round from the previous round's codebooks: after
       // the Procrustes step the old codes remain a FEASIBLE encoding under
       // the new rotation, so assignment+Lloyd can only descend from the
@@ -337,10 +334,9 @@ object Similarity {
             combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
         rot = procrustesRotation(mFlat, d)
       }
-      release(rotated)
     }
-    release(v)
     (rot, codebooks, mses.toSeq)
+    }
   }
 
   /** Per-subspace argmin code against literal centroids: exact min-struct
@@ -655,15 +651,15 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       seed: Long = 42L, tol: Double = 1e-9): (DataFrame, Int) = {
     val spark = emb.sparkSession
-    val v = emb.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-      .localCheckpoint(true)
+    Materialize.using(
+        emb.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))) { v =>
     // one TakeOrdered job: k hash-picked rows, collected (k rows only —
     // they are driver-resident by design, as the broadcast side of assign)
     val chosen: Seq[Seq[Double]] = v
       .orderBy(xxhash64(col(idCol), lit(seed)), col(idCol))
       .limit(k)
       .select("__v").collect().toSeq.map(_.getSeq[Double](0))
-    var centroids = spark.createDataFrame(
+    val init = spark.createDataFrame(
       spark.sparkContext.parallelize(
         chosen.zipWithIndex.map { case (c, i) => org.apache.spark.sql.Row(i, c) }, 1),
       org.apache.spark.sql.types.StructType(Seq(
@@ -672,10 +668,19 @@ object Similarity {
         org.apache.spark.sql.types.StructField("centroid",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType)))))
-      .localCheckpoint(true)
     var rounds = 0
-    var moved = Double.MaxValue
-    while (rounds < iterations && moved > tol) {
+    var prev: DataFrame = null
+    // early exit: total squared centroid movement (k-row join, one
+    // scalar to the driver — the Dedup.clusterNearDups convergence
+    // pattern), computed while both rounds' checkpoints are live
+    def settled(next: DataFrame): Boolean = prev != null &&
+      !(prev.alias("a").join(next.alias("b"), Seq("cell_id"))
+        .select(aggregate(zip_with(col("a.centroid"), col("b.centroid"),
+          (x, y) => (x - y) * (x - y)), lit(0.0), (s, x) => s + x).as("__d2"))
+        .agg(coalesce(sum(col("__d2")), lit(0.0))).head().getDouble(0) > tol)
+    val centroids = Materialize.iterate(init, iterations, settled) { centroids =>
+      prev = centroids
+      rounds += 1
       val assigned = assignCells(v, centroids, "__v", idCol)
       val means = assigned
         .select(col("cell_id"), posexplode(col("__v")).as(Seq("__dim", "__x")))
@@ -693,27 +698,13 @@ object Similarity {
           when(col("__n") > 0, zip_with(col("centroid"),
             array_repeat(col("__n"), size(col("centroid"))), (x, n) => x / n))
             .otherwise(col("centroid")).as("centroid"))
-      val next = centroids.alias("o")
+      centroids.alias("o")
         .join(normalized.alias("m"), Seq("cell_id"), "left")
         .select(col("cell_id"),
           coalesce(col("m.centroid"), col("o.centroid")).as("centroid"))
-        .localCheckpoint(true)
-      // early exit: total squared centroid movement (k-row join, one
-      // scalar to the driver — the Dedup.clusterNearDups convergence
-      // pattern). Runs BEFORE the release so both checkpoints are live.
-      moved = centroids.alias("a").join(next.alias("b"), Seq("cell_id"))
-        .select(aggregate(zip_with(col("a.centroid"), col("b.centroid"),
-          (x, y) => (x - y) * (x - y)), lit(0.0), (s, x) => s + x).as("__d2"))
-        .agg(coalesce(sum(col("__d2")), lit(0.0))).head().getDouble(0)
-      // the superseded round's centroid blocks are dead — release them now
-      // instead of leaving `iterations` checkpoints for driver GC
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(centroids)
-      centroids = next
-      rounds += 1
     }
-    // only the returned centroids' blocks outlive the call
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(v)
     (centroids, rounds)
+    }
   }
 
   /** Exact-arithmetic Lloyd training REPORT — the oracle-checkable twin of
@@ -745,10 +736,9 @@ object Similarity {
     require(k >= 1 && rounds >= 1, s"bad k-means config (k=$k rounds=$rounds)")
     val spark = emb.sparkSession
     import spark.implicits._
-    val v = emb.select(col(idCol).cast("long").as("__id"),
+    Materialize.using(emb.select(col(idCol).cast("long").as("__id"),
         transform(col(vecCol),
-          x => round(x.cast("double") * 1000000d).cast("long")).as("__q"))
-      .localCheckpoint(true)
+          x => round(x.cast("double") * 1000000d).cast("long")).as("__q"))) { v =>
     val init: Array[Array[Long]] = v.orderBy(col("__id")).limit(k)
       .select(col("__q")).collect().map(_.getSeq[Long](0).toArray)
     require(init.length == k, s"need at least k=$k vectors, got ${init.length}")
@@ -785,7 +775,7 @@ object Similarity {
       .map { case (c, j) => (j, c.sum) }.toSeq.toDF("cluster", "centroid_sum")
     // the k-row report materializes BEFORE the corpus checkpoint is
     // released (it still reads v for the final assignment pass)
-    val report = assigned(cents)
+    assigned(cents)
       .groupBy(col("__cl").as("cluster"))
       .agg(count(lit(1)).as("n_members"),
         sum(col("__id")).as("sum_vec_id"),
@@ -794,8 +784,7 @@ object Similarity {
       .select(col("cluster"), col("n_members"), col("sum_vec_id"),
         col("inertia"), col("centroid_sum"))
       .localCheckpoint(true)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(v)
-    report
+    }
   }
 
   /** Greedy k-center coreset selection (Gonzalez 1985, the 2-approx
@@ -816,6 +805,9 @@ object Similarity {
     * front by the portable hash gate (`poolPercent` via md5Hash31, the
     * [[Sampling.hashSamplePortable]] discipline) — each round is one
     * TakeOrdered(1) job over the checkpointed pool, never the corpus.
+    * An empty or fully gated pool returns the empty
+    * (selection_rank, <idCol>, min_dist_sq) frame; a non-empty pool
+    * smaller than k throws.
     */
   def kCenterCoreset(emb: DataFrame, k: Int, poolPercent: Int = 100,
                      idCol: String = "vec_id",
@@ -829,19 +821,18 @@ object Similarity {
       if (poolPercent >= 100) emb
       else emb.filter(graft.functions.md5Hash31(col(idCol).cast("string"))
         % 100 < poolPercent)
-    val pool = gated.select(col(idCol).cast("long").as("__id"),
-        transform(col(vecCol),
-          x => round(x.cast("double") * 1000000d).cast("long")).as("__q"))
-      .localCheckpoint(true)
     def distTo(c: Array[Long]): Column =
       aggregate(zip_with(col("__q"), typedLit(c.toSeq),
         (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
+    val selected = Materialize.using(gated.select(col(idCol).cast("long").as("__id"),
+        transform(col(vecCol),
+          x => round(x.cast("double") * 1000000d).cast("long")).as("__q"))) { pool =>
     val seed = pool.orderBy(col("__id")).limit(1)
       .select(col("__id"), col("__q")).collect()
-    require(seed.nonEmpty, "empty pool — raise poolPercent or check input")
-    var selected =
-      Vector((seed.head.getLong(0), seed.head.getSeq[Long](1).toArray, 0L))
-    (2 to k).foreach { _ =>
+    // an empty (or fully gated) pool selects nothing: empty in, empty out
+    var selected = seed.map(r => (r.getLong(0), r.getSeq[Long](1).toArray, 0L))
+      .toVector
+    if (seed.nonEmpty) (2 to k).foreach { _ =>
       val dists = array(selected.map { case (_, c, _) => distTo(c) }: _*)
       val picked = pool
         .filter(!col("__id").isin(selected.map(_._1): _*))
@@ -852,7 +843,8 @@ object Similarity {
       selected :+= ((picked.head.getLong(0),
         picked.head.getSeq[Long](1).toArray, picked.head.getLong(2)))
     }
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(pool)
+    selected
+    }
     selected.zipWithIndex
       .map { case ((id, _, d), i) => (i + 1, id, d) }
       .toDF("selection_rank", idCol, "min_dist_sq")
@@ -1400,8 +1392,8 @@ object Similarity {
     // and the overwrite — and it must be computed BEFORE the write starts
     // rewriting the directory it logically derives nothing from (the new
     // codes never read the codes dir, but the merge below does)
-    val newCodes = encodeCodes(newEmb, centroids, codebook, m, residual,
-      idCol, vecCol, "appendToIvfPqIndex").localCheckpoint()
+    Materialize.using(encodeCodes(newEmb, centroids, codebook, m, residual,
+      idCol, vecCol, "appendToIvfPqIndex")) { newCodes =>
     val touched: Seq[Int] = newCodes.select("cell_id").distinct()
       .collect().map(_.getInt(0)).toSeq
     if (touched.nonEmpty) {
@@ -1414,7 +1406,7 @@ object Similarity {
           newCodes.select(col(idCol), col("cell_id"), col("codes"))),
         s"$indexPath/codes", Seq("cell_id"))
     }
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(newCodes)
+    }
   }
 
   /** Delete ids from a persisted IVF-PQ index — the lifecycle's remove
@@ -1436,17 +1428,17 @@ object Similarity {
   def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String, deleteIds: DataFrame,
                            idCol: String = "vec_id"): Unit = {
-    val ids = deleteIds.select(col(idCol)).distinct().localCheckpoint()
+    Materialize.using(deleteIds.select(col(idCol)).distinct()) { ids =>
     val touched: Seq[Int] = spark.read.parquet(s"$indexPath/codes")
       .join(broadcast(ids), Seq(idCol), "left_semi")
       .select("cell_id").distinct()
       .collect().map(_.getInt(0)).toSeq
-    if (touched.nonEmpty) {
-      val remaining = spark.read.parquet(s"$indexPath/codes")
+    // consumed twice: emptied-cell check + write
+    if (touched.nonEmpty) Materialize.using(
+      spark.read.parquet(s"$indexPath/codes")
         .filter(col("cell_id").isin(touched: _*)) // partition-pruned read
         .join(broadcast(ids), Seq(idCol), "left_anti")
-        .select(col(idCol), col("cell_id"), col("codes"))
-        .localCheckpoint() // consumed twice: emptied-cell check + write
+        .select(col(idCol), col("cell_id"), col("codes"))) { remaining =>
       val nonEmpty: Set[Int] = remaining.select("cell_id").distinct()
         .collect().map(_.getInt(0)).toSet
       if (nonEmpty.nonEmpty)
@@ -1459,10 +1451,8 @@ object Similarity {
         fs.delete(new org.apache.hadoop.fs.Path(
           s"$indexPath/codes/cell_id=$c"), true)
       }
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(remaining)
     }
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(ids)
+    }
   }
 
   /** Compact a persisted IVF-PQ index's codes back to one file per cell.
@@ -1791,17 +1781,15 @@ object Similarity {
     require(k >= 1 && poolSize >= k, s"need 1 <= k ($k) <= poolSize ($poolSize)")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda ($lambda) must be in [0,1]")
     val spark = emb.sparkSession
-    val release = org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     val q = emb.filter(col(idCol) === queryId)
       .select(col(vecCol).cast("array<double>").as("__qvec"))
-    val pool = emb.filter(col(idCol) =!= queryId)
+    val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Double], Double)]
+    Materialize.using(emb.filter(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .select(col(idCol), col(vecCol).cast("array<double>").as("__v"),
         round(cosineSimilarity(col(vecCol), col("__qvec")), 6).as("__simq"))
       .orderBy(desc("__simq"), col(idCol))
-      .limit(poolSize)
-      .localCheckpoint()
-    val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Double], Double)]
+      .limit(poolSize)) { pool =>
     for (_ <- 1 to k) {
       val penalty =
         if (selected.isEmpty) lit(0.0)
@@ -1828,7 +1816,7 @@ object Similarity {
       val row = rows(0)
       selected += ((row.getLong(0), row.getSeq[Double](1), row.getDouble(2)))
     }
-    release(pool)
+    }
     import spark.implicits._
     selected.zipWithIndex
       .map { case ((id, _, s), i) => (i + 1, id, s) }.toSeq
@@ -1856,7 +1844,8 @@ object Similarity {
     * (element_at(cents, cid + 1) in [[pqAdc]]) silently scores against the
     * wrong centroid — or null, which ascending sort ranks FIRST — if cids
     * are gapped or duplicated, so a codebook whose cids are not exactly
-    * distinct 0..k−1 fails the query loudly instead.
+    * distinct 0..k−1 fails the query loudly instead. `__clen` carries the
+    * centroids' common length (−1 when they differ) for [[pqSubLen]].
     */
   private def pqCodebook(codebook: DataFrame): DataFrame =
     codebook
@@ -1864,8 +1853,11 @@ object Similarity {
         col("centroid").cast("array<double>").as("c"))
       .agg(sort_array(collect_list(struct(col("cid"), col("c")))).as("__raw"),
         min(col("cid")).as("__mn"), max(col("cid")).as("__mx"),
-        count(lit(1)).as("__k"), countDistinct(col("cid")).as("__kd"))
+        count(lit(1)).as("__k"), countDistinct(col("cid")).as("__kd"),
+        min(size(col("c"))).as("__lmin"), max(size(col("c"))).as("__lmax"))
       .select(
+        when(col("__lmin") === col("__lmax"), col("__lmin"))
+          .otherwise(lit(-1)).as("__clen"),
         when(col("__mn") === 0 && col("__mx") === col("__k") - 1 &&
             col("__kd") === col("__k"), col("__raw"))
           .otherwise(raise_error(concat(
@@ -1876,12 +1868,19 @@ object Similarity {
             .cast("array<struct<cid:int,c:array<double>>>"))
           .as("__cents"))
 
-  /** Subspace length with the divisibility guard: a silent floor would
+  /** Subspace length with the divisibility guard — a silent floor would
     * drop the last size % m dims from BOTH encode and ADC (quietly wrong
-    * distances).
+    * distances) — and the codebook-width guard: a centroid shorter than
+    * the vector makes [[subDist]]'s zip_with pad with null, so every
+    * distance and argmin code would be NULL. Reads the crossed-in
+    * codebook's `__clen` ([[pqCodebook]]).
     */
   private def pqSubLen(v: Column, m: Int, who: String): Column =
-    when(pmod(size(v), lit(m)) === 0, (size(v) / m).cast("int"))
+    when(col("__clen") =!= size(v), raise_error(concat(
+        lit(s"$who: PQ codebook centroids must have the vector dim "),
+        size(v).cast("string"), lit(", got length "),
+        col("__clen").cast("string"))).cast("int"))
+      .when(pmod(size(v), lit(m)) === 0, (size(v) / m).cast("int"))
       .otherwise(raise_error(concat(
         lit(s"$who: vector dim not divisible by m=$m, got "),
         size(v).cast("string"))).cast("int"))
@@ -2343,10 +2342,8 @@ object Similarity {
                                idCol: String = "vec_id",
                                vecCol: String = "embedding"): Unit =
     binaryQuantMarker(spark, path).guard { fenceCheck =>
-    val batch = newEmb
-      .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
-      .localCheckpoint()
-    try {
+    Materialize.using(newEmb
+      .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))) { batch =>
       val freshV = batch.join(
         spark.read.parquet(s"$path/vectors").select(col(idCol)),
         Seq(idCol), "left_anti")
@@ -2362,8 +2359,7 @@ object Similarity {
       if (!freshC.isEmpty)
         freshC.write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$path/codes")
-    } finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(batch)
+    }
   }
 
   /** GDPR delete for the binary-quant index: per-row state erases
@@ -2376,16 +2372,14 @@ object Similarity {
                                  path: String, deleteIds: DataFrame,
                                  idCol: String = "vec_id"): Unit = {
     recoverBinaryQuantIndex(spark, path)
-    val del = deleteIds.select(col(idCol)).distinct().localCheckpoint()
-    try {
+    Materialize.using(deleteIds.select(col(idCol)).distinct()) { del =>
       val present = !spark.read.parquet(s"$path/vectors")
         .join(broadcast(del), Seq(idCol), "left_semi").isEmpty
       if (present) Seq("vectors", "codes").foreach { sub =>
         graft.io.IO.rewriteDir(spark, s"$path/$sub")(
           _.join(broadcast(del), Seq(idCol), "left_anti"))
       }
-    } finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(del)
+    }
   }
 
   /** [[binaryQuantTopK]] over the STORED state: the Hamming lane scans
@@ -2600,11 +2594,10 @@ object Similarity {
     val meta = spark.read.parquet(s"$path/meta").head()
     val k = meta.getAs[Int]("k")
     val stored = spark.read.parquet(s"$path/vectors")
-    val fresh = newEmb
+    Materialize.using(newEmb
       .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
-      .join(stored.select(col(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    try if (!fresh.isEmpty) {
+      .join(stored.select(col(idCol)), Seq(idCol), "left_anti")) { fresh =>
+    if (!fresh.isEmpty) {
       def normed(df: DataFrame, side: String) = df.select(
         col(idCol).as(s"__id$side"),
         col(vecCol).cast("array<double>").as(s"__v$side"))
@@ -2612,14 +2605,12 @@ object Similarity {
       // one scoring pass: every (corpus ∪ batch) row × the broadcast
       // batch — covers batch→all (take a-side = batch rows' transpose)
       // and old→batch (a-side = stored rows) in the same relation
-      val scored = normed(stored.unionByName(fresh), "a")
+      Materialize.using(normed(stored.unionByName(fresh), "a")
         .crossJoin(broadcast(normed(fresh, "b")))
         .filter(col("__ida") =!= col("__idb"))
         .select(col("__ida"), col("__idb"),
           round(dotProduct(col("__va"), col("__vb")) /
-            (col("__na") * col("__nb")), 6).as("sim"))
-        .localCheckpoint()
-      try {
+            (col("__na") * col("__nb")), 6).as("sim"))) { scored =>
         val freshIds = fresh.select(col(idCol).as("__fid"))
         // batch-src lists: all of a batch vector's candidates are in the
         // scored relation (b-side transposed = batch → stored∪batch)
@@ -2653,11 +2644,9 @@ object Similarity {
         }
         fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$path/vectors")
-      } finally org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(scored)
-    } finally
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(fresh)
+      }
+    }
+    }
   }
 
   /** Mutual pairs from the PERSISTED graph: the reciprocal tail over the
@@ -2687,8 +2676,7 @@ object Similarity {
                               vecCol: String = "embedding"): Unit = {
     val meta = spark.read.parquet(s"$path/meta").head()
     val k = meta.getAs[Int]("k")
-    val del = deleteIds.select(col(idCol)).distinct().localCheckpoint()
-    try {
+    Materialize.using(deleteIds.select(col(idCol)).distinct()) { del =>
       val vectors = spark.read.parquet(s"$path/vectors")
       // ids absent from the index are a no-op — bail before any rewrite
       if (!vectors.join(broadcast(del), Seq(idCol), "left_semi").isEmpty) {
@@ -2696,14 +2684,12 @@ object Similarity {
         val remaining = vectors.join(broadcast(del), Seq(idCol), "left_anti")
         // sources whose stored list referenced a deleted neighbor —
         // excluding deleted sources themselves (their lists just drop)
-        val affected = topk
+        Materialize.using(topk
           .join(broadcast(del.withColumnRenamed(idCol, "dst")), Seq("dst"),
             "left_semi")
           .select(col("src")).distinct()
           .join(broadcast(del.withColumnRenamed(idCol, "src")), Seq("src"),
-            "left_anti")
-          .localCheckpoint()
-        try {
+            "left_anti")) { affected =>
           def normed(df: DataFrame, side: String) = df.select(
             col(idCol).as(s"__id$side"),
             col(vecCol).cast("array<double>").as(s"__v$side"))
@@ -2725,20 +2711,12 @@ object Similarity {
             .join(broadcast(del.withColumnRenamed(idCol, "src")),
               Seq("src"), "left_anti")
             .join(broadcast(affected), Seq("src"), "left_anti")
-          val out = kept.unionByName(affTopk).localCheckpoint()
-          try graft.io.IO.writeDir(out, s"$path/topk")
-          finally org.apache.spark.sql.graftbridge.ColumnBridge
-            .releaseLocalCheckpoint(out)
-          val remMat = remaining.localCheckpoint()
-          try graft.io.IO.writeDir(remMat, s"$path/vectors")
-          finally org.apache.spark.sql.graftbridge.ColumnBridge
-            .releaseLocalCheckpoint(remMat)
-        } finally
-          org.apache.spark.sql.graftbridge.ColumnBridge
-            .releaseLocalCheckpoint(affected)
+          Materialize.using(kept.unionByName(affTopk))(
+            graft.io.IO.writeDir(_, s"$path/topk"))
+          Materialize.using(remaining)(
+            graft.io.IO.writeDir(_, s"$path/vectors"))
+        }
       }
-    } finally
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(del)
+    }
   }
 }

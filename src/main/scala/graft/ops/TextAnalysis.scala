@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -127,13 +128,11 @@ object TextAnalysis {
     require(featureCols.nonEmpty, "featureCols must be non-empty")
     val spark = df.sparkSession
     val d = featureCols.size
-    val f = df.select(col(labelCol).cast("long").as("__y") +:
-        featureCols.zipWithIndex.map { case (c, i) =>
-          col(c).cast("long").as(s"__x$i") }: _*)
-      .localCheckpoint(true)
     val w = Array.fill(d)(0L)
     val out = Seq.newBuilder[org.apache.spark.sql.Row]
-    try {
+    Materialize.using(df.select(col(labelCol).cast("long").as("__y") +:
+        featureCols.zipWithIndex.map { case (c, i) =>
+          col(c).cast("long").as(s"__x$i") }: _*)) { f =>
       for (r <- 1 to rounds) {
         val margin = (0 until d)
           .map(i => lit(w(i)) * col(s"__x$i")).reduce(_ + _) * col("__y")
@@ -144,8 +143,7 @@ object TextAnalysis {
         out += org.apache.spark.sql.Row.fromSeq(
           r +: row.getLong(0) +: w.toSeq)
       }
-    } finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(f)
+    }
     val schema = org.apache.spark.sql.types.StructType(
       org.apache.spark.sql.types.StructField("round",
         org.apache.spark.sql.types.IntegerType) ::
@@ -389,8 +387,8 @@ object TextAnalysis {
                                    k: Int = 3, w: Int = 4,
                                    shingleHash: Column => Column = xxhash64(_),
                                    numBuckets: Int = 32): Unit = {
-    val goneFps = winnowFps(forgotten, idCol, textCol, k, w, shingleHash)
-      .select("fp").distinct().localCheckpoint(true)
+    Materialize.using(winnowFps(forgotten, idCol, textCol, k, w, shingleHash)
+      .select("fp").distinct()) { goneFps =>
     // fingerprints a remaining doc still sponsors — map-side filtered by
     // the (broadcastable) forgotten-fp set, never materializing the
     // remaining corpus's full fp relation past the semi-join
@@ -400,10 +398,9 @@ object TextAnalysis {
         Seq("fp"), "left_semi")
       .distinct()
     val removable = goneFps.join(sponsored, Seq("fp"), "left_anti")
-    try graft.io.IO.rewriteTable(spark, name)(
+    graft.io.IO.rewriteTable(spark, name)(
       _.join(removable, Seq("fp"), "left_anti"))
-    finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(goneFps)
+    }
   }
 
   /** [[buildContaminationIndex]] unless `name` already exists in this
@@ -814,10 +811,9 @@ object TextAnalysis {
     // checkpoint the filtered batch: its lineage (anti-join against the
     // stored docstats) feeds three consumers below, and the docstats
     // table it probes is itself appended to mid-sequence
-    val fresh = newDocs.join(spark.table(s"${name}_docstats")
-        .select(col(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    try if (!fresh.isEmpty) { // full replay: nothing new, nothing written
+    Materialize.using(newDocs.join(spark.table(s"${name}_docstats")
+        .select(col(idCol)), Seq(idCol), "left_anti")) { fresh =>
+    if (!fresh.isEmpty) { // full replay: nothing new, nothing written
       val tf = termFrequencies(fresh, idCol, textCol)
       graft.io.IO.appendBucketed(tf, s"${name}_postings")
       fenceCheck() // between halves: bound the stolen-writer window
@@ -834,9 +830,8 @@ object TextAnalysis {
         spark.range(1).select(
           lit(old.getLong(0) + delta.getLong(0)).as("n_docs"),
           lit(old.getLong(1) + delta.getLong(1)).as("total_tf")))
-    } finally
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(fresh)
+    }
+    }
   }
 
   /** GDPR path: drop documents from the index in place — both stored
@@ -1141,9 +1136,8 @@ object TextAnalysis {
     * order up: single tokenize, positional trigrams array-side, < 3
     * tokens → empty.
     */
-  private[graft] def trigramFrequencies(docs: DataFrame, idCol: String,
-                                        textCol: String,
-                                        materialize: Boolean = true): DataFrame = {
+  private def trigramFrequencies(docs: DataFrame, idCol: String,
+                                 textCol: String): DataFrame = {
     // spread before the gram expansion (Spread scaladoc)
     val base = Spread.spread(docs.select(col(idCol),
         tokens(col(textCol)).as("__t")))
@@ -1154,9 +1148,8 @@ object TextAnalysis {
           i => concat_ws(" ", element_at(col("__t"), i),
             element_at(col("__t"), i + 1),
             element_at(col("__t"), i + 2))))).as("__tg"))
-    val tf = trigrams.groupBy(col(idCol), col("__tg"))
+    trigrams.groupBy(col(idCol), col("__tg"))
       .agg(count(lit(1)).as("__tf"))
-    if (materialize) tf.localCheckpoint() else tf
   }
 
   /** Trigram LM scoring with INTERPOLATED KNESER–NEY-style discounting —
@@ -1193,12 +1186,11 @@ object TextAnalysis {
     require(discount > 0.0 && discount < 1.0,
       s"discount ($discount) must be in (0, 1)")
     val d = lit(discount)
-    val release =
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     // r17: ONE tokenize pass feeds both orders (the q331
     // allOrderFrequencies discipline) — the separate trigram + bigram
     // passes each re-scanned and re-tokenized the corpus
-    val tfAll = allOrderFrequencies(docs, idCol, textCol, maxOrder = 3)
+    Materialize.using(
+        allOrderFrequencies(docs, idCol, textCol, maxOrder = 3)) { tfAll =>
     val tf3 = tfAll.filter(col("__k") === 3)
       .select(col(idCol), col("__g").as("__tg"), col("__tf"))
     val c3 = tf3.groupBy(col("__tg")).agg(sum(col("__tf")).as("__c3"))
@@ -1206,11 +1198,10 @@ object TextAnalysis {
       .withColumn("__b23", substring_index(col("__tg"), " ", -2))
     val l12 = c3.groupBy(col("__p12"))
       .agg(sum(col("__c3")).as("__c12dot"), count(lit(1)).as("__n1p12"))
-    val c2 = tfAll.filter(col("__k") === 2)
+    // three consumers: tail counts, prefix level, continuation counts
+    Materialize.using(tfAll.filter(col("__k") === 2)
       .select(col("__g").as("__bg"), col("__tf"))
-      .groupBy(col("__bg")).agg(sum(col("__tf")).as("__c2"))
-      .localCheckpoint() // three consumers: tail counts, prefix level,
-                         // continuation counts
+      .groupBy(col("__bg")).agg(sum(col("__tf")).as("__c2"))) { c2 =>
     val l2 = c2.withColumn("__w2", substring_index(col("__bg"), " ", 1))
       .groupBy(col("__w2"))
       .agg(sum(col("__c2")).as("__c2dot"), count(lit(1)).as("__n1p2"))
@@ -1243,16 +1234,14 @@ object TextAnalysis {
             col("__c2dot").cast("double")) *
             (col("__n1pdot3").cast("double") /
               col("__n1pdd").cast("double")))).as("__lnp"))
-    val res = tf3.join(lnP, "__tg")
+    tf3.join(lnP, "__tg")
       .groupBy(col(idCol))
       .agg(sum(col("__tf")).as("n_trigrams"),
         round(-sum(col("__tf").cast("double") * col("__lnp")) /
           sum(col("__tf")).cast("double"), 6)
           .as("trigram_kn_cross_entropy"))
       .localCheckpoint()
-    release(tfAll)
-    release(c2)
-    res
+    }}
   }
 
   /** CROSS-CORPUS interpolated-KN trigram scoring — the actual CCNet
@@ -1292,21 +1281,19 @@ object TextAnalysis {
     require(discount > 0.0 && discount < 1.0,
       s"discount ($discount) must be in (0, 1)")
     val d = lit(discount)
-    val release =
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     // reference count tables (type-granular) — ONE tokenize pass feeds
     // both orders (r17, the q331 allOrderFrequencies discipline)
-    val rAll = allOrderFrequencies(reference, idCol, textCol, maxOrder = 3)
+    Materialize.using(
+        allOrderFrequencies(reference, idCol, textCol, maxOrder = 3)) { rAll =>
     val c3 = rAll.filter(col("__k") === 3)
       .select(col("__g").as("__tg"), col("__tf"))
       .groupBy(col("__tg")).agg(sum(col("__tf")).as("__c3"))
       .withColumn("__p12", substring_index(col("__tg"), " ", 2))
     val l12 = c3.groupBy(col("__p12"))
       .agg(sum(col("__c3")).as("__c12dot"), count(lit(1)).as("__n1p12"))
-    val c2 = rAll.filter(col("__k") === 2)
+    Materialize.using(rAll.filter(col("__k") === 2)
       .select(col("__g").as("__bg"), col("__tf"))
-      .groupBy(col("__bg")).agg(sum(col("__tf")).as("__c2"))
-      .localCheckpoint()
+      .groupBy(col("__bg")).agg(sum(col("__tf")).as("__c2"))) { c2 =>
     val l2 = c2.withColumn("__w2", substring_index(col("__bg"), " ", 1))
       .groupBy(col("__w2"))
       .agg(sum(col("__c2")).as("__c2dot"), count(lit(1)).as("__n1p2"))
@@ -1321,7 +1308,7 @@ object TextAnalysis {
     // trigram is itself a target 2-suffix, so the final join is total);
     // the trigram-type frame pays three joins instead of five, and the
     // per-level NULLs (the backoff signal) are preserved level by level
-    val ttf = trigramFrequencies(target, idCol, textCol)
+    Materialize.using(trigramFrequencies(target, idCol, textCol)) { ttf =>
     val types = ttf.select(col("__tg")).distinct()
       .withColumn("__p12", substring_index(col("__tg"), " ", 2))
       .withColumn("__b23", substring_index(col("__tg"), " ", -2))
@@ -1352,7 +1339,7 @@ object TextAnalysis {
           col("__c12dot").cast("double")) * p2)
     val lnP = scored.select(col("__tg"), log(p3).as("__lnp"),
       col("__c3").isNull.cast("int").as("__unseen"))
-    val res = ttf.join(lnP, "__tg")
+    ttf.join(lnP, "__tg")
       .groupBy(col(idCol))
       .agg(sum(col("__tf")).as("n_trigrams"),
         sum(col("__tf") * col("__unseen")).as("n_unseen_trigrams"),
@@ -1360,10 +1347,7 @@ object TextAnalysis {
           sum(col("__tf")).cast("double"), 6)
           .as("ref_trigram_kn_cross_entropy"))
       .localCheckpoint()
-    release(rAll)
-    release(c2)
-    release(ttf)
-    res
+    }}}
   }
 
   /** ALL-ORDERS n-gram frequencies from ONE tokenize pass: per doc, the
@@ -1373,11 +1357,11 @@ object TextAnalysis {
     * (q324's trigram + bigram passes) pays one per level. Corpus-level
     * type counts derive by a further groupBy — never a second scan.
     * Docs shorter than k tokens contribute no k-grams (the sequence()
-    * counts-down guard, same landmine as [[bigramFrequencies]]).
+    * counts-down guard, same landmine as [[bigramFrequencies]]). Lazy:
+    * the KN tiers materialise it with [[graft.Materialize.using]].
     */
   private[graft] def allOrderFrequencies(docs: DataFrame, idCol: String,
-                                         textCol: String, maxOrder: Int,
-                                         materialize: Boolean = true)
+                                         textCol: String, maxOrder: Int)
       : DataFrame = {
     require(maxOrder >= 2 && maxOrder <= 6,
       s"maxOrder ($maxOrder) must be in [2, 6]")
@@ -1395,12 +1379,11 @@ object TextAnalysis {
             concat_ws(" ", (0 until k).map(j =>
               element_at(col("__t"), i + lit(j))): _*).as("__g"))))
     }
-    val tf = base
+    base
       .select(col(idCol), explode(concat(perOrder: _*)).as("__e"))
       .select(col(idCol), col("__e.__k").as("__k"), col("__e.__g").as("__g"))
       .groupBy(col(idCol), col("__k"), col("__g"))
       .agg(count(lit(1)).as("__tf"))
-    if (materialize) tf.localCheckpoint() else tf
   }
 
   /** The order-N KN reference SNAPSHOT relation: corpus-global
@@ -1416,8 +1399,7 @@ object TextAnalysis {
   def knReferenceCounts(reference: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text",
                         order: Int = 5): DataFrame =
-    allOrderFrequencies(reference, idCol, textCol, order,
-      materialize = false)
+    allOrderFrequencies(reference, idCol, textCol, order)
       .groupBy(col("__k"), col("__g")).agg(sum(col("__tf")).as("__c"))
 
   /** Per-level relations for the order-N KN chain, cut from ONE
@@ -1479,16 +1461,13 @@ object TextAnalysis {
     require(discount > 0.0 && discount < 1.0,
       s"discount ($discount) must be in (0, 1)")
     val d = lit(discount)
-    val release =
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
-    val tfAll = allOrderFrequencies(docs, idCol, textCol, order)
+    Materialize.using(allOrderFrequencies(docs, idCol, textCol, order)) { tfAll =>
     // the type-count relation feeds every level cut (2 per order) plus
     // the continuation tables — ~10 consumers; materialize it once so
     // each cut re-reads a type-granular relation instead of re-running
     // the doc-granular aggregation
-    val counts = tfAll.groupBy(col("__k"), col("__g"))
-      .agg(sum(col("__tf")).as("__c"))
-      .localCheckpoint()
+    Materialize.using(tfAll.groupBy(col("__k"), col("__g"))
+      .agg(sum(col("__tf")).as("__c"))) { counts =>
     val (levels, cont, contTotal) = knLevelTables(counts, order)
     val tfN = tfAll.filter(col("__k") === order)
       .select(col(idCol), col("__g"), col("__tf"))
@@ -1526,15 +1505,13 @@ object TextAnalysis {
           col(s"__cdot$k").cast("double")) * p
     }
     val lnP = scored.select(col("__g"), log(p).as("__lnp"))
-    val res = tfN.join(lnP, "__g")
+    tfN.join(lnP, "__g")
       .groupBy(col(idCol))
       .agg(sum(col("__tf")).as("n_ngrams"),
         round(-sum(col("__tf").cast("double") * col("__lnp")) /
           sum(col("__tf")).cast("double"), 6).as("kn_cross_entropy"))
       .localCheckpoint()
-    release(tfAll)
-    release(counts)
-    res
+    }}
   }
 
   /** CROSS-CORPUS order-N interpolated KN — [[refTrigramKnCrossEntropy]]
@@ -1551,14 +1528,11 @@ object TextAnalysis {
                              idCol: String = "doc_id",
                              textCol: String = "text", order: Int = 5,
                              discount: Double = 0.75): DataFrame = {
-    val release =
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
-    val rAll = allOrderFrequencies(reference, idCol, textCol, order)
-    val res = refNgramKnFromCounts(target,
-      rAll.groupBy(col("__k"), col("__g")).agg(sum(col("__tf")).as("__c")),
-      idCol, textCol, order, discount)
-    release(rAll)
-    res
+    Materialize.using(allOrderFrequencies(reference, idCol, textCol, order)) {
+      rAll => refNgramKnFromCounts(target,
+        rAll.groupBy(col("__k"), col("__g")).agg(sum(col("__tf")).as("__c")),
+        idCol, textCol, order, discount)
+    }
   }
 
   /** The cross-corpus scoring chain against a PRECOMPUTED reference
@@ -1580,16 +1554,14 @@ object TextAnalysis {
     require(discount > 0.0 && discount < 1.0,
       s"discount ($discount) must be in (0, 1)")
     val d = lit(discount)
-    val release =
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     // materialize the type-count snapshot once for its ~10 level-table
     // cuts (the ngramKnCrossEntropy rationale; also saves the streaming
     // twin re-scanning the stored snapshot per cut)
-    val countsMat = refCounts.localCheckpoint()
+    Materialize.using(refCounts) { countsMat =>
     val (levels, cont, contTotal) = knLevelTables(countsMat, order)
     val totals = contTotal
       .crossJoin(cont.agg(count(lit(1)).as("__v")))
-    val tAll = allOrderFrequencies(target, idCol, textCol, order)
+    Materialize.using(allOrderFrequencies(target, idCol, textCol, order)) { tAll =>
     val ttf = tAll.filter(col("__k") === order)
       .select(col(idCol), col("__g"), col("__tf"))
     // (r17: the suffix-chain variant measured slower here too — see
@@ -1621,7 +1593,7 @@ object TextAnalysis {
     }
     val lnP = scored.select(col("__g"), log(p).as("__lnp"),
       col(s"__c$order").isNull.cast("int").as("__unseen"))
-    val res = ttf.join(lnP, "__g")
+    ttf.join(lnP, "__g")
       .groupBy(col(idCol))
       .agg(sum(col("__tf")).as("n_ngrams"),
         sum(col("__tf") * col("__unseen")).as("n_unseen_ngrams"),
@@ -1629,9 +1601,7 @@ object TextAnalysis {
           sum(col("__tf")).cast("double"), 6)
           .as("ref_kn_cross_entropy"))
       .localCheckpoint()
-    release(tAll)
-    release(countsMat)
-    res
+    }}
   }
 
   /** Cross-corpus LM quality scoring — the ACTUAL CCNet shape: the LM is
@@ -1910,11 +1880,13 @@ object TextAnalysis {
     * by construction; StreamingSpec pins it).
     */
   /** Symmetrized integer-weight PPMI edge list (x, y, w) — the matrix
-    * both power-iteration tiers iterate against; checkpointed (callers
-    * release).
+    * both power-iteration tiers iterate against; materialised, with the
+    * scored-pair checkpoint it was cut from released (callers release
+    * the edges).
     */
-  private def ppmiEdges(counts: DataFrame, minCount: Long): DataFrame = {
-    val scored = ppmiScoredPairs(counts, minCount)
+  private def ppmiEdges(counts: DataFrame, minCount: Long): DataFrame =
+    Materialize.owning(ppmiScoredPairs(counts, minCount)) { pairs =>
+    val scored = pairs
       .filter(col("ppmi") > 0.0)
       .select(col("__a").as("a"), col("__b").as("b"),
         expr("CAST(round(ppmi * 1000000) AS BIGINT)").as("w"))
@@ -1929,35 +1901,27 @@ object TextAnalysis {
         .as("__e"))
       .select(col("__e.x").as("x"), col("__e.y").as("y"), col("__e.w"))
       .localCheckpoint()
-  }
+    }
 
   def ppmiPowerIterationFromCounts(counts: DataFrame, minCount: Long = 5,
                                    rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 8,
       s"rounds ($rounds) must be in [1, 8]")
-    val release =
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
-    val edges = ppmiEdges(counts, minCount)
-    var v = edges.select(col("x").as("word")).distinct()
-      .withColumn("score_micro", lit(1000000L))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    Materialize.owning(ppmiEdges(counts, minCount)) { edges =>
+    Materialize.iterate(edges.select(col("x").as("word")).distinct()
+      .withColumn("score_micro", lit(1000000L)), rounds) { v =>
       val u = edges
         .join(v.select(col("word").as("y"),
           col("score_micro").as("__v")), Seq("y"))
         .groupBy(col("x"))
         .agg(sum((col("w") * col("__v")).cast("decimal(38,0)")).as("__u"))
       val mx = u.agg(max(col("__u")).as("__mx"))
-      val next = u.crossJoin(broadcast(mx))
+      u.crossJoin(broadcast(mx))
         .select(col("x").as("word"),
           expr("CAST(__u * 1000000 DIV greatest(__mx, 1) AS BIGINT)")
             .as("score_micro"))
-        .localCheckpoint()
-      release(v)
-      v = next
     }
-    release(edges)
-    v
+    }
   }
 
   /** Rank-k PPMI factorization by HOTELLING DEFLATION over the same
@@ -1996,24 +1960,19 @@ object TextAnalysis {
     require(rounds >= 1 && rounds <= 8,
       s"rounds ($rounds) must be in [1, 8]")
     require(k >= 1 && k <= 4, s"k ($k) must be in [1, 4]")
-    val release =
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint _
     // truncate-toward-zero integral division (b > 0): the ONE spelling
     // both engines compute identically on negatives
     def tdiv(a: String, b: String) =
       s"(CASE WHEN $a < 0 THEN -((-($a)) DIV ($b)) ELSE ($a) DIV ($b) END)"
-    val edges = ppmiEdges(counts, minCount)
-    val vocab = edges.select(col("x").as("word")).distinct()
-      .localCheckpoint()
-    // priors: per extracted direction, the converged integer vector and
-    // its 1-row (A = uᵀMu, B = uᵀu) scalar frame (both checkpointed)
-    var priors = List.empty[(DataFrame, DataFrame)]
-    var out = List.empty[DataFrame]
-    var finalVs = List.empty[DataFrame]
-    for (e <- 1 to k) {
-      var v = vocab.withColumn("score_micro", lit(1000000L))
-        .localCheckpoint()
-      for (_ <- 1 to rounds) {
+    Materialize.owning(ppmiEdges(counts, minCount)) { edges =>
+    Materialize.using(edges.select(col("x").as("word")).distinct()) { vocab =>
+    // direction e iterates the operator deflated by `priors` — per
+    // extracted direction, the converged integer vector and its 1-row
+    // (A = uᵀMu, B = uᵀu) scalar frame, both checkpointed and held until
+    // the union of all directions has materialised
+    def direction(e: Int, priors: List[(DataFrame, DataFrame)]): DataFrame = {
+      val converged = Materialize.iterate(
+          vocab.withColumn("score_micro", lit(1000000L)), rounds) { v =>
         val mv = edges
           .join(v.select(col("word").as("y"),
             col("score_micro").as("__v")), Seq("y"))
@@ -2036,45 +1995,41 @@ object TextAnalysis {
                   "__B")}").cast("decimal(38,0)").as("__u"))
         }
         val mx = u.agg(max(abs(col("__u"))).as("__mx"))
-        val next = u.crossJoin(broadcast(mx))
+        u.crossJoin(broadcast(mx))
           .select(col("word"),
             expr(s"CAST(${tdiv("__u * 1000000", "greatest(__mx, 1)")} " +
               "AS BIGINT)").as("score_micro"))
-          .localCheckpoint()
-        release(v)
-        v = next
       }
-      out ::= v.withColumn("direction", lit(e))
-      finalVs ::= v
-      if (e < k) {
-        // scalars for deflating the NEXT directions
-        val a = edges
-          .join(v.select(col("word").as("x"), col("score_micro").as("__sx")),
-            Seq("x"))
-          .join(v.select(col("word").as("y"), col("score_micro").as("__sy")),
-            Seq("y"))
-          // widen BEFORE multiplying: w (PPMI micro) can exceed ~9.2e6
-          // at large corpus N, and w·sx·sy with |s| up to 1e6 then
-          // passes int64 — ANSI Spark would throw ARITHMETIC_OVERFLOW
-          // if the product were computed in BIGINT first (the oracle
-          // mirrors with HUGEINT for the same reason)
-          .agg(sum(col("w").cast("decimal(38,0)") * col("__sx")
-            * col("__sy")).as("__A"))
-        val b = v.agg(sum((col("score_micro") * col("score_micro"))
-          .cast("decimal(38,0)")).as("__B"))
-        priors :+= ((v, a.crossJoin(b).localCheckpoint()))
+      Materialize.owning(converged) { v =>
+        if (e == k)
+          (priors.map(_._1) :+ v).zipWithIndex
+            .map { case (u, i) => u.withColumn("direction", lit(i + 1)) }
+            .reduce(_ unionAll _)
+            .select(col("word"), col("direction"), col("score_micro"))
+            .localCheckpoint()
+        else {
+          // scalars for deflating the NEXT directions
+          val a = edges
+            .join(v.select(col("word").as("x"), col("score_micro").as("__sx")),
+              Seq("x"))
+            .join(v.select(col("word").as("y"), col("score_micro").as("__sy")),
+              Seq("y"))
+            // widen BEFORE multiplying: w (PPMI micro) can exceed ~9.2e6
+            // at large corpus N, and w·sx·sy with |s| up to 1e6 then
+            // passes int64 — ANSI Spark would throw ARITHMETIC_OVERFLOW
+            // if the product were computed in BIGINT first (the oracle
+            // mirrors with HUGEINT for the same reason)
+            .agg(sum(col("w").cast("decimal(38,0)") * col("__sx")
+              * col("__sy")).as("__A"))
+          val b = v.agg(sum((col("score_micro") * col("score_micro"))
+            .cast("decimal(38,0)")).as("__B"))
+          Materialize.using(a.crossJoin(b))(ab =>
+            direction(e + 1, priors :+ ((v, ab))))
+        }
       }
     }
-    release(edges)
-    val res = out.reverse.reduce(_ unionAll _)
-      .select(col("word"), col("direction"), col("score_micro"))
-      .localCheckpoint()
-    // res is materialized — every per-direction checkpoint (they back
-    // both `out` and `priors`) and the AB scalar frames are dead now
-    finalVs.foreach(release)
-    priors.foreach { case (_, ab) => release(ab) }
-    release(vocab)
-    res
+    direction(1, Nil)
+    }}
   }
 
   def termCooccurrencePmi(docs: DataFrame, idCol: String = "doc_id",
@@ -2192,12 +2147,12 @@ object TextAnalysis {
     * per-word state `(__w, __s, __n)` (word, delimiter-encoded symbol
     * sequence after `rounds` merges, corpus frequency). The final state
     * frame is checkpointed and NOT released — callers either release it
-    * ([[bpeTrainMerges]]) or build on it ([[bpeEncodedLengths]]).
+    * ([[bpeTrainMerges]]) or build on it ([[bpeEncodedLengths]]). A
+    * round that finds no pair left throws with no state left behind.
     */
   private def bpeCore(docs: DataFrame, textCol: String, rounds: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
     // no Spread on the word base: measured flat (q171/q179/q193 within
     // noise, r17 matched A/B) — the per-round pair aggregation over the
     // checkpointed vocab dominates, not the tokenize
@@ -2205,13 +2160,13 @@ object TextAnalysis {
       .select(explode(graft.functions.tokens(col(textCol))).as("__w"))
       .filter(!col("__w").contains("|"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__n"))
-    var state = words.select(col("__w"),
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    val state = Materialize.iterate(words.select(col("__w"),
       concat(lit("|"),
         array_join(filter(split(col("__w"), ""), c => length(c) > 0), "||"),
         lit("|")).as("__s"),
-      col("__n")).localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    for (r <- 1 to rounds) {
+      col("__n")), rounds) { state =>
+      val r = merges.size + 1
       val tk = split(expr("substr(__s, 2, length(__s) - 2)"), "\\|\\|")
       val top = state
         .select(col("__n"), tk.as("__tk"))
@@ -2230,11 +2185,8 @@ object TextAnalysis {
       val (l, rr, cnt) = (top(0).getString(0), top(0).getString(1),
         top(0).getLong(2))
       merges += ((r, l, rr, cnt))
-      val next = state.withColumn("__s",
+      state.withColumn("__s",
         replace(col("__s"), lit(s"|$l||$rr|"), lit(s"|$l$rr|")))
-        .localCheckpoint()
-      bridge.releaseLocalCheckpoint(state)
-      state = next
     }
     (merges.toSeq, state)
   }
@@ -2242,10 +2194,10 @@ object TextAnalysis {
   def bpeTrainMerges(docs: DataFrame, textCol: String = "text",
                      rounds: Int = 6): DataFrame = {
     val spark = docs.sparkSession
-    val (merges, state) = bpeCore(docs, textCol, rounds)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(state)
     import spark.implicits._
-    merges.toDF("merge_round", "lhs", "rhs", "pair_count")
+    val (merges, state) = bpeCore(docs, textCol, rounds)
+    Materialize.owning(state)(_ =>
+      merges.toDF("merge_round", "lhs", "rhs", "pair_count"))
   }
 
   /** The inference half of BPE: encode every document with the merge

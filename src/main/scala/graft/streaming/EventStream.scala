@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
@@ -544,21 +545,26 @@ object EventStream {
     * bounded relation, never the stream.
     */
   def upsertCategoryCounts(batch: DataFrame, catCol: String,
-                           dest: String): Unit = {
-    val spark = batch.sparkSession
-    val bc = batch.groupBy(col(catCol)).agg(count(lit(1)).as("n"))
+                           dest: String): Unit =
+    upsertCounts(batch.groupBy(col(catCol)).agg(count(lit(1)).as("n")),
+      dest)(_.groupBy(col(catCol)).agg(sum(col("n")).as("n")))
+
+  /** The one snapshot upsert under every `upsert*` fold: `merge` the
+    * stored snapshot at `dest` (when there is one) ∪ the batch's
+    * `counts`, materialise the merged relation BEFORE overwriting the
+    * path it reads, overwrite, and release the checkpoint however the
+    * write ends.
+    */
+  private def upsertCounts(counts: DataFrame, dest: String)
+                          (merge: DataFrame => DataFrame): Unit = {
+    val spark = counts.sparkSession
     val destPath = new org.apache.hadoop.fs.Path(dest)
-    val destExists = destPath
+    val exists = destPath
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(destPath)
-    val existing =
-      if (destExists) spark.read.parquet(dest) else bc.limit(0)
-    val merged = existing.unionByName(bc)
-      .groupBy(col(catCol)).agg(sum(col("n")).as("n"))
-      // materialize before overwriting the path being read
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(dest)
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(merged)
+    Materialize.using(merge(
+        if (exists) spark.read.parquet(dest).unionByName(counts) else counts))(
+      _.write.mode("overwrite").parquet(dest))
   }
 
   /** Streaming drift monitor — the streaming twin of q132: every
@@ -627,29 +633,16 @@ object EventStream {
     * the overwrite so the read-your-own-write cycle is safe. Counts
     * are mergeable integers — delivery batching is invisible (pinned).
     */
-  def upsertScoreCounts(batch: DataFrame, dest: String): Unit = {
-    val spark = batch.sparkSession
-    val scored = graft.ops.TextAnalysis
+  def upsertScoreCounts(batch: DataFrame, dest: String): Unit =
+    upsertCounts(graft.ops.TextAnalysis
       .qualityLogistic(batch, carryCols = Seq("lang"))
       .select(col("quality_prob").as("threshold"),
         (col("lang") === "en").cast("long").as("__y"))
       .groupBy(col("threshold"))
       .agg(sum(col("__y")).as("n_pos"),
-        (count(lit(1)) - sum(col("__y"))).as("n_neg"))
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val exists = destPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(destPath)
-    val merged = (if (exists)
-        spark.read.parquet(dest).unionByName(scored)
-      else scored)
-      .groupBy(col("threshold"))
-      .agg(sum(col("n_pos")).as("n_pos"), sum(col("n_neg")).as("n_neg"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(dest)
-    org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(merged)
-  }
+        (count(lit(1)) - sum(col("__y"))).as("n_neg")), dest)(
+      _.groupBy(col("threshold"))
+        .agg(sum(col("n_pos")).as("n_pos"), sum(col("n_neg")).as("n_neg")))
 
   /** Streaming twin of q282's quarantine census: merge a micro-batch's
     * per-modality decode outcomes into the standing snapshot at `dest` —
@@ -660,26 +653,13 @@ object EventStream {
     * merge by sum ([[upsertScoreCounts]]'s snapshot discipline), so
     * multi-batch ≡ one-shot (StreamingSpec pins it).
     */
-  def upsertDecodeCensus(decoded: DataFrame, dest: String): Unit = {
-    val spark = decoded.sparkSession
-    val census = graft.ops.Multimodal.decodeCensus(decoded,
-      groupCols = Seq("modality"))
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val exists = destPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(destPath)
-    val merged = (if (exists)
-        spark.read.parquet(dest).unionByName(census)
-      else census)
-      .groupBy(col("modality"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("n_decoded")).as("n_decoded"),
-        sum(col("n_quarantined")).as("n_quarantined"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(dest)
-    org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(merged)
-  }
+  def upsertDecodeCensus(decoded: DataFrame, dest: String): Unit =
+    upsertCounts(graft.ops.Multimodal.decodeCensus(decoded,
+      groupCols = Seq("modality")), dest)(
+      _.groupBy(col("modality"))
+        .agg(sum(col("n_rows")).as("n_rows"),
+          sum(col("n_decoded")).as("n_decoded"),
+          sum(col("n_quarantined")).as("n_quarantined")))
 
   /** Streaming twin of q301's preference leaderboard: merge a
     * micro-batch of (winner, loser) comparison records into the standing
@@ -691,23 +671,10 @@ object EventStream {
     * stream runs — the shape a continuously-collected RLHF comparison
     * log needs.
     */
-  def upsertMatchups(batch: DataFrame, dest: String): Unit = {
-    val spark = batch.sparkSession
-    val m = graft.ops.Preference.matchups(batch)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val exists = destPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(destPath)
-    val merged = (if (exists)
-        spark.read.parquet(dest).unionByName(m)
-      else m)
-      .groupBy(col("item_a"), col("item_b"))
-      .agg(sum(col("wins_a")).as("wins_a"), sum(col("wins_b")).as("wins_b"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(dest)
-    org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(merged)
-  }
+  def upsertMatchups(batch: DataFrame, dest: String): Unit =
+    upsertCounts(graft.ops.Preference.matchups(batch), dest)(
+      _.groupBy(col("item_a"), col("item_b"))
+        .agg(sum(col("wins_a")).as("wins_a"), sum(col("wins_b")).as("wins_b")))
 
   /** Live leaderboard off the streamed matchup snapshot through the ONE
     * shared [[graft.ops.Preference.leaderboardFromMatchups]] fold —
@@ -740,23 +707,9 @@ object EventStream {
     * pair-vocabulary-sized, never corpus-sized.
     */
   def upsertCooccurrence(batch: DataFrame, dest: String,
-                         window: Int = 4): Unit = {
-    val spark = batch.sparkSession
-    val m = graft.ops.TextAnalysis.windowedPairCounts(batch, window)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val exists = destPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(destPath)
-    val merged = (if (exists)
-        spark.read.parquet(dest).unionByName(m)
-      else m)
-      .groupBy(col("a"), col("b"))
-      .agg(sum(col("n")).as("n"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(dest)
-    org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(merged)
-  }
+                         window: Int = 4): Unit =
+    upsertCounts(graft.ops.TextAnalysis.windowedPairCounts(batch, window),
+      dest)(_.groupBy(col("a"), col("b")).agg(sum(col("n")).as("n")))
 
   /** Streaming twin of q309's blocklist census: merge a micro-batch's
     * per-phrase counts into the standing (phrase, docs_hit, total_hits,
@@ -767,25 +720,12 @@ object EventStream {
     * one-shot). Snapshot is |phrases|-sized, never corpus-sized.
     */
   def upsertBlocklistCounts(batch: DataFrame, dest: String,
-                            phrases: Seq[String]): Unit = {
-    val spark = batch.sparkSession
-    val m = graft.ops.TextAnalysis.blocklistCounts(batch, phrases)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val exists = destPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(destPath)
-    val merged = (if (exists)
-        spark.read.parquet(dest).unionByName(m)
-      else m)
-      .groupBy(col("phrase"))
-      .agg(sum(col("docs_hit")).as("docs_hit"),
-        sum(col("total_hits")).as("total_hits"),
-        sum(col("n_docs")).as("n_docs"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(dest)
-    org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(merged)
-  }
+                            phrases: Seq[String]): Unit =
+    upsertCounts(graft.ops.TextAnalysis.blocklistCounts(batch, phrases),
+      dest)(_.groupBy(col("phrase"))
+        .agg(sum(col("docs_hit")).as("docs_hit"),
+          sum(col("total_hits")).as("total_hits"),
+          sum(col("n_docs")).as("n_docs")))
 
   /** Live blocklist board off the streamed count snapshot through the
     * ONE shared [[graft.ops.TextAnalysis.blocklistCensusFromCounts]]
@@ -808,23 +748,10 @@ object EventStream {
     */
   def upsertPrivacyCells(batch: DataFrame, dest: String,
                          qiCols: Seq[String],
-                         sensitiveCol: String): Unit = {
-    val spark = batch.sparkSession
-    val m = graft.ops.Redact.sensitiveCells(batch, qiCols, sensitiveCol)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val exists = destPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(destPath)
-    val merged = (if (exists)
-        spark.read.parquet(dest).unionByName(m)
-      else m)
-      .groupBy((qiCols :+ sensitiveCol).map(col): _*)
-      .agg(sum(col("n_gv")).as("n_gv"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(dest)
-    org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(merged)
-  }
+                         sensitiveCol: String): Unit =
+    upsertCounts(graft.ops.Redact.sensitiveCells(batch, qiCols, sensitiveCol),
+      dest)(_.groupBy((qiCols :+ sensitiveCol).map(col): _*)
+        .agg(sum(col("n_gv")).as("n_gv")))
 
   /** Live k-anonymity census off the streamed privacy-cell snapshot
     * through the ONE shared [[graft.ops.Redact.kAnonymityFromCells]]
@@ -871,26 +798,13 @@ object EventStream {
                              srcCol: String = "source",
                              langCol: String = "lang",
                              lenCol: String = "n_chars",
-                             bucketWidth: Int = 200): Unit = {
-    val spark = batch.sparkSession
-    val m = graft.ops.Redact.releaseGateCells(batch, phrases, srcCol,
-      langCol, lenCol, bucketWidth)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val exists = destPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(destPath)
-    val merged = (if (exists)
-        spark.read.parquet(dest).unionByName(m)
-      else m)
-      .groupBy(col(srcCol), col("len_bucket"), col(langCol))
-      .agg(sum(col("n_docs_cell")).as("n_docs_cell"),
-        sum(col("pii_docs")).as("pii_docs"),
-        sum(col("blocked_docs")).as("blocked_docs"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(dest)
-    org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(merged)
-  }
+                             bucketWidth: Int = 200): Unit =
+    upsertCounts(graft.ops.Redact.releaseGateCells(batch, phrases, srcCol,
+      langCol, lenCol, bucketWidth), dest)(
+      _.groupBy(col(srcCol), col("len_bucket"), col(langCol))
+        .agg(sum(col("n_docs_cell")).as("n_docs_cell"),
+          sum(col("pii_docs")).as("pii_docs"),
+          sum(col("blocked_docs")).as("blocked_docs")))
 
   /** Live release scorecard off the streamed cell snapshot through the
     * ONE shared [[graft.ops.Redact.releaseGateFromCells]] fold — equal
@@ -1159,18 +1073,15 @@ object EventStream {
     // checkpoint first: `clean`'s lineage (two index probes) feeds the
     // pair pipeline AND the final semi-join, and the indexes it probes
     // are appended to in step 3
-    val cleanMat = clean.localCheckpoint()
-    try {
-      val reps = graft.ops.Dedup.clusterNearDups(
+    Materialize.using(clean) { cleanMat =>
+    Materialize.owning(graft.ops.Dedup.clusterNearDups(
         graft.ops.Dedup.minhashNearDupPairs(cleanMat, ix.idCol, ix.textCol,
           ix.shingleK, ix.numPerm, ix.bands, ix.threshold),
-        idCol = ix.idCol)
-      val kept = cleanMat.join(reps, Seq(ix.idCol), "left")
+        idCol = ix.idCol)) { reps =>
+      Materialize.using(cleanMat.join(reps, Seq(ix.idCol), "left")
         .filter(col("cluster_rep").isNull ||
           col("cluster_rep") === col(ix.idCol))
-        .drop("cluster_rep")
-        .localCheckpoint() // consumed by 4 appends + the emit
-      try {
+        .drop("cluster_rep")) { kept => // consumed by 4 appends + the emit
         // 3. the appends — each one replay-idempotent on its own
         graft.ops.Dedup.appendToNearDupIndex(spark, ix.ndName, kept,
           ix.idCol, ix.textCol, ix.shingleK, ix.numPerm, ix.bands)
@@ -1200,12 +1111,9 @@ object EventStream {
         if (ix.zOrderCols.nonEmpty)
           graft.ops.Maintenance.maintainZOrderedTable(spark, dest,
             ix.zOrderCols, ix.zMaxUnclusteredPpm, ix.zNumFiles, ix.zBits)
-      } finally
-        org.apache.spark.sql.graftbridge.ColumnBridge
-          .releaseLocalCheckpoint(kept)
-    } finally
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(cleanMat)
+      }
+    }
+    }
   }
 
   /** Config for [[ingestMediaBatch]]: the standing aHash index
@@ -1244,9 +1152,7 @@ object EventStream {
                        dest: String): Unit = {
     val spark = batch.sparkSession
     // 0. one decode pass feeds census, probe, and within-batch dedup
-    val ah = graft.ops.Multimodal.imageAHash(batch, ix.grid)
-      .localCheckpoint()
-    try {
+    Materialize.using(graft.ops.Multimodal.imageAHash(batch, ix.grid)) { ah =>
       ix.censusDest.foreach(cd => upsertDecodeCensus(
         ah.select(lit("image").as("modality"), col("decode_error")), cd))
       val good = ah.filter(col("decode_error").isNull)
@@ -1256,25 +1162,22 @@ object EventStream {
         .select(col("batch_id").as("media_id")).distinct()
       val fresh = good.join(dupIds, Seq("media_id"), "left_anti")
       // 2. batch-level: perceptual clusters keep their lowest id
-      val clusters = graft.ops.Dedup.clusterNearDups(
+      Materialize.owning(graft.ops.Dedup.clusterNearDups(
         graft.ops.Multimodal.ahashNearDupPairs(fresh, ix.maxDist,
-          ix.bands), idCol = "media_id")
-      val reps = fresh.join(clusters, Seq("media_id"), "left")
+          ix.bands), idCol = "media_id")) { clusters =>
+      Materialize.using(fresh.join(clusters, Seq("media_id"), "left")
         .filter(col("cluster_rep").isNull ||
           col("cluster_rep") === col("media_id"))
-        .select(col("media_id"))
-      val keptIds = reps.localCheckpoint() // consumed by append + emit
-      try {
+        .select(col("media_id"))) { keptIds => // consumed by append + emit
         val kept = batch.join(keptIds, Seq("media_id"), "left_semi")
         // 3. replay-idempotent append (re-decodes survivors only)
         graft.ops.Multimodal.appendToAHashIndex(spark, ix.ahashName,
           kept, ix.grid, ix.bands)
         // 4. emit the surviving media rows
         kept.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(dest)
-      } finally org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseLocalCheckpoint(keptIds)
-    } finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .releaseLocalCheckpoint(ah)
+      }
+      }
+    }
   }
 
   /** Run a streaming DataFrame to completion against a bounded file source

@@ -43,6 +43,12 @@ object ColumnBridge {
     * localCheckpoint truncates lineage, so a released block cannot be
     * recomputed — a consumer that still needs it fails with a missing-
     * block error rather than silently recomputing.
+    *
+    * Ownership rule: an operator releases every checkpoint it makes
+    * except the ones its result reads, and the caller releases those by
+    * releasing the result. Inside the engine every release goes through
+    * `graft.Materialize`, which runs it in `finally`; callers outside it
+    * (benchmarks, tests) call this directly.
     */
   def releaseLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.foreach {

@@ -109,41 +109,6 @@ class ClusterSpec extends SparkSpec {
     assert(evenCells.size == 1 && oddCells.size == 1 && evenCells != oddCells)
   }
 
-  test("kmeansCentroids exits early on a converged fixture and releases superseded blocks") {
-    // two tight, well-separated clusters: assignment is stable after the
-    // first mean update, so the movement delta hits zero long before a
-    // generous iteration budget — the early exit must fire
-    val vecs = (0 until 30).map { i =>
-      if (i % 2 == 0) (i.toLong, Array(1.0f, 0.0f, 0.0f))
-      else (i.toLong, Array(0.0f, 1.0f, 0.0f))
-    }.toDF("vec_id", "embedding")
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val (centroids, rounds) =
-      Similarity.kmeansCentroidsWithRounds(vecs, k = 2, iterations = 50)
-    assert(rounds < 50, s"ran all $rounds rounds — early exit never fired")
-    assert(rounds >= 1)
-    assert(centroids.count() == 2) // result unchanged by the exit/release
-    // block hygiene: only the RETURNED centroids' checkpoint survives the
-    // call — every superseded round (and the input materialization) is gone
-    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    assert(added.size == 1,
-      s"${added.size} persistent RDDs outlive the call (expected 1: the result)")
-    // cleanup so later tests see a quiet BlockManager
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(centroids)
-  }
-
-  test("clusterNearDups releases all per-round checkpoint blocks except the result") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val labels = Dedup.clusterNearDups(pairs)
-    val got = labels.as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    assert(added.size == 1,
-      s"${added.size} persistent RDDs outlive the call (expected 1: the result)")
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(labels)
-  }
-
   test("kmeans → persisted IVF end-to-end: trained centroids route an indexed probe") {
     // the full production composition: train centroids on the corpus,
     // persist the partitioned index, probe it — no DuckDB oracle exists
@@ -218,6 +183,14 @@ class ClusterSpec extends SparkSpec {
     val got = Similarity.kCenterCoreset(emb, k = 3)
       .as[(Int, Long, Long)].collect().toSeq
     assert(got == Seq((1, 1L, 0L), (2, 2L, 100L), (3, 5L, 25L)))
+    // empty in, empty out: an empty corpus and a pool the hash gate
+    // empties both select nothing, with the result's schema intact
+    val empty = Similarity.kCenterCoreset(emb.limit(0), k = 3)
+    assert(empty.columns.toSeq == Seq("selection_rank", "vec_id", "min_dist_sq"))
+    assert(empty.count() == 0)
+    val gated = emb.filter(graft.functions.md5Hash31(
+      col("vec_id").cast("string")) % 100 >= 1)
+    assert(Similarity.kCenterCoreset(gated, k = 3, poolPercent = 1).count() == 0)
   }
 
   test("integerKMeansReport: coincident init centroids tie to the " +

@@ -25,6 +25,7 @@ object DiagKn {
     for (rep <- 1 to 2) {
       val tfAll = time(s"allOrderFreq(materialize) r$rep") {
         graft.ops.TextAnalysis.allOrderFrequencies(docs, "doc_id", "text", 5)
+          .localCheckpoint()
       }
       time(s"tfAll.count r$rep") { tfAll.count() }
       val counts = tfAll.groupBy(col("__k"), col("__g"))

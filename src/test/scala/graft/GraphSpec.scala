@@ -170,17 +170,6 @@ class GraphSpec extends SparkSpec {
       "d" -> (1L, 0L, 0.0)))
   }
 
-  test("pageRank releases its per-round checkpoint blocks") {
-    val edges = Seq(("a", "b", 1L), ("b", "a", 1L)).toDF("src", "dst", "weight")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val out = Graph.pageRank(edges, iterations = 4)
-    out.collect()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // only the returned frame's own checkpoint may remain
-    assert(after <= before + 1, s"before=$before after=$after")
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(out)
-  }
-
   test("wccCensus: multi-component graph histograms sizes correctly") {
     // three weak components: {a,b,c} (chain), {d,e} (pair), {f} (pure
     // self-loop) → histogram {3→1, 2→1, 1→1}; direction must not matter

@@ -422,6 +422,19 @@ class SamplingSpec extends SparkSpec {
     val t = Sampling.greedySourceCoverage(tied, shingleK = 1, rounds = 2)
       .as[(Int, String, Long, Long)].collect().toSeq
     assert(t == Seq((1, "a", 2L, 2L), (2, "b", 2L, 4L)))
+    // more than 20 sources takes the per-round anti-join loop instead of
+    // the mask histogram: z covers u01..u05 and v1, so a01..a05 add
+    // nothing after it and the rest tie at 1 (lexicographic order); the
+    // loop stops at `rounds` picks, or earlier when nothing fresh is left
+    val many = (Seq(("z", "u01 u02 u03 u04 u05 v1")) ++
+      (1 to 21).map(i => (f"a$i%02d", f"u$i%02d"))).toDF("source", "text")
+    val m3 = Sampling.greedySourceCoverage(many, shingleK = 1, rounds = 3)
+      .as[(Int, String, Long, Long)].collect().toSeq
+    assert(m3 == Seq((1, "z", 6L, 6L), (2, "a06", 1L, 7L), (3, "a07", 1L, 8L)))
+    val mAll = Sampling.greedySourceCoverage(many, shingleK = 1, rounds = 30)
+      .as[(Int, String, Long, Long)].collect().toSeq
+    assert(mAll.map(_._2) == "z" +: (6 to 21).map(i => f"a$i%02d"))
+    assert(mAll.last == ((17, "a21", 1L, 22L)))
     // degenerate inputs: no docs, and every text shorter than shingleK —
     // the source universe is empty, so empty in gives empty out
     val empty = docs.limit(0)

@@ -309,6 +309,16 @@ class SimilaritySpec extends SparkSpec {
         Option(ex.getCause).exists(_.getMessage.contains("contiguous")),
         s"cids=$badCids threw the wrong error: ${ex.getMessage}")
     }
+    // centroids shorter than the vector: zip_with would pad with null and
+    // every ADC distance and code would come back NULL without an error
+    val short = Seq((0, Seq(0.0, 0.0)), (1, Seq(1.0, 1.0)))
+      .toDF("cid", "centroid")
+    val ex = intercept[Exception] {
+      Similarity.pqEncodeAdc(emb, short, probeId = 1L, m = 2).collect()
+    }
+    assert(ex.getMessage.contains("codebook centroids") ||
+      Option(ex.getCause).exists(_.getMessage.contains("codebook centroids")),
+      s"short codebook threw the wrong error: ${ex.getMessage}")
   }
 
   // ------------------------------------------------ persisted IVF-PQ index
