@@ -1,6 +1,8 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.io.{IO, PathDerive}
 import graft.ops.{AddCountry, GeoAggregate}
@@ -14,10 +16,12 @@ import graft.ops.{AddCountry, GeoAggregate}
   *                                                        (agg.py:262-272)
   *
   * Parallelism note: the reference fans a thread pool over input files
-  * (X1, `csv2parquet.py:43-60`). In Spark, per-ROW parallelism is the
-  * engine's job; for per-FILE output granularity (X4) we loop jobs on the
-  * driver — each job is itself partition-parallel, which is strictly more
-  * parallelism than the reference's one-thread-per-file.
+  * (X1, `csv2parquet.py:43-60`). Here every subcommand runs a number of
+  * Spark jobs that does not grow with the file count: one schema pass
+  * over all inputs (one job for every CSV, none for Parquet — the footer
+  * is read on the driver), then per (format, schema) group one read and
+  * one grouped write (`IO.writePerFile`) that writes each input's output
+  * file in its own task, files in parallel (X4).
   */
 object Main {
 
@@ -55,39 +59,67 @@ object Main {
     case other => throw new IllegalArgumentException(s"unknown subcommand: $other")
   }
 
-  /** `csv2parquet src [dest]`: file → file; dir → recursive discovery with
-    * mirrored basenames (`csv2parquet.py:125-133`).
-    */
   private def debugFlag(args: Array[String]): Boolean =
     args.contains("-d") || args.contains("--debug")
 
+  /** `csv2parquet src [dest]`: file → file; dir → recursive discovery with
+    * mirrored basenames (`csv2parquet.py:125-133`).
+    */
   def csv2parquet(spark: SparkSession, args: Array[String]): Unit =
     withLog(new CliLog("csv2parquet", debugFlag(args))) { log =>
     val pos = args.filterNot(_.startsWith("-"))
     require(pos.nonEmpty, "csv2parquet needs a src argument")
     val src = pos(0)
     val dest = if (pos.length > 1) pos(1) else ""
-    val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.getFileStatus(new org.apache.hadoop.fs.Path(src)).isDirectory) {
-      val files = IO.discoverCsvFiles(spark, src)
-      // deviation from csv2parquet.py:89-90, which logs this error even on
-      // success: we log it only when the glob is actually empty
-      if (files.isEmpty) log.error("no CSV files found")
-      files.foreach { f =>
-        val d =
-          if (dest.isEmpty) PathDerive.csvToParquetDest(f, "")
-          else PathDerive.csvToParquetDest(f, dest.stripSuffix("/") + "/")
-        log.debug(s"csv_file: $f -> $d")
-        IO.writeSingleFile(IO.readCsv(spark, f), d, IO.ParquetExt)
-      }
-      log.info(s"converted ${files.length} file(s) under $src")
-    } else {
-      val d = PathDerive.csvToParquetDest(src, dest)
-      log.debug(s"csv_file: $src -> $d")
-      IO.writeSingleFile(IO.readCsv(spark, src), d, IO.ParquetExt)
-      log.info(s"converted $src")
+    val srcPath = new Path(src)
+    val isDir = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(srcPath).isDirectory
+    val files = if (isDir) IO.discoverCsvFiles(spark, src) else Seq(src)
+    // deviation from csv2parquet.py:89-90, which logs this error even on
+    // success: we log it only when the glob is actually empty
+    if (isDir && files.isEmpty) log.error("no CSV files found")
+    val destOf: String => String =
+      if (!isDir) _ => PathDerive.csvToParquetDest(src, dest)
+      else if (dest.isEmpty) PathDerive.csvToParquetDest(_, "")
+      else PathDerive.csvToParquetDest(_, dest.stripSuffix("/") + "/")
+    // every input reads as CSV, whatever its extension (single-file mode)
+    val n = perFile(spark, log, "csv_file", files, _ => IO.CsvExt, destOf,
+      _ => IO.ParquetExt)(identity)
+    if (isDir) log.info(s"converted $n file(s) under $src")
+    else if (n == 1) log.info(s"converted $src")
+  }
+
+  /** `files` with their schemas in `format` (`IO.fileSchemas`); a CSV with
+    * no header line — 0 bytes or blank lines only, where Spark infers no
+    * columns — is skipped with a logged error so the other files still
+    * convert.
+    */
+  private def withSchemas(spark: SparkSession, log: CliLog, files: Seq[String],
+                          format: String => String): Seq[(String, StructType)] =
+    files.zip(IO.fileSchemas(spark, files, format)).flatMap {
+      case (f, Some(schema)) => Some(f -> schema)
+      case (f, None) => log.error(s"$f has no header line; skipped"); None
     }
+
+  /** Each input file, read in `inFormat(f)`, to its own output `dest(f)`
+    * in `outFormat(f)`: one schema pass over all files, then per (input
+    * format, schema) group one read of the group's files, `transform`, and
+    * one grouped write. Returns the number of files written.
+    */
+  private def perFile(spark: SparkSession, log: CliLog, tag: String, files: Seq[String],
+                      inFormat: String => String, dest: String => String,
+                      outFormat: String => String)
+                     (transform: DataFrame => DataFrame): Int = {
+    val inputs = withSchemas(spark, log, files, inFormat)
+    val key = (input: (String, StructType)) => (inFormat(input._1), input._2)
+    val groups = inputs.groupBy(key)
+    inputs.map(key).distinct.foreach { case k @ (format, schema) =>
+      val group = groups(k).map(_._1)
+      group.foreach(f => log.debug(s"$tag: $f -> ${dest(f)}"))
+      IO.writePerFile(transform(IO.readTagged(spark, group, format, schema)),
+        group.map(dest), outFormat(group.head))
+    }
+    inputs.size
   }
 
   /** Run `body` with a CliLog, releasing its file handle afterwards (one
@@ -107,21 +139,19 @@ object Main {
     val suffix = if (pos.length > 1) pos(1) else "_with_country"
     val boxes = AddCountry.boxesDf(spark)
     val files = IO.globFiles(spark, pos(0))
-    for (f <- files) {
-      val dest = PathDerive.addSuffix(f, suffix)
-      log.debug(s"data_file: $f -> $dest")
-      val out = AddCountry(IO.readFile(spark, f), boxes)
-      IO.writeFile(out, dest)
-    }
-    log.info(s"enriched ${files.length} file(s) matching ${pos(0)}")
+    val n = perFile(spark, log, "data_file", files, IO.formatOf, PathDerive.addSuffix(_, suffix),
+      IO.formatOf)(AddCountry(_, boxes))
+    log.info(s"enriched $n file(s) matching ${pos(0)}")
   }
 
   /** `agg glob [suffix] [-m mode] [-s meters] [--collate]` (`agg.py:262-272`;
     * defaults: suffix `_geo_aggregated` agg.py:29, mode `median`
     * agg.py:265-266, size 10 m agg.py:267-268). Output is ALWAYS Parquet —
-    * reference quirk preserved (`agg.py:171-172`). Collate mode is one
-    * multi-path read + one aggregation (X3, Spark's default shape);
-    * per-file mode loops one job per input (X4).
+    * reference quirk preserved (`agg.py:171-172`). Both modes read each
+    * file on its own (so each keeps the scan splits, and the mean its
+    * summation order, of a one-file read) and union the reads: collate
+    * runs one aggregation into one output (X3); per-file mode runs one
+    * aggregation keyed by source file and one grouped write (X4).
     */
   def agg(spark: SparkSession, args: Array[String]): Unit = {
     var mode = "median"
@@ -148,25 +178,26 @@ object Main {
     val step = GeoAggregate.metersToDegrees(meters)
     log.debug(s"mode=$mode size_m=$meters step_deg=$step collate=$collate " +
       s"files=${files.length}")
+    val cols = Seq("Latitude", "Longitude", "Data")
+    val inputs = withSchemas(spark, log, files, IO.formatOf)
     if (collate) {
-      // one multi-path read → one aggregate → one output (agg.py:174-193)
-      val cols = Seq("Latitude", "Longitude", "Data")
-      val dfs = files.map(f => IO.readFile(spark, f, cols))
-      require(dfs.nonEmpty, s"no files matched ${pos(0)}")
-      val all = dfs.reduce(_ unionByName _)
+      // one aggregate → one output (agg.py:174-193)
+      require(inputs.nonEmpty, s"no files matched ${pos(0)}")
+      val all = IO.readEach(spark, inputs.map(_._1), inputs.map(_._2), cols).drop(IO.FileIdx)
       IO.writeSingleFile(
         GeoAggregate(all, mode, step), s"$suffix.parquet", IO.ParquetExt) // agg.py:169
-      log.info(s"collated ${files.length} file(s) -> $suffix.parquet")
+      log.info(s"collated ${inputs.length} file(s) -> $suffix.parquet")
     } else {
-      for (f <- files) {
+      val dests = inputs.map { case (f, _) =>
         val dest = PathDerive.addSuffix(f, suffix).replaceAll("\\.[^./]+$", ".parquet")
         log.debug(s"data_file: $f -> $dest")
-        val out = GeoAggregate(IO.readFile(spark, f, Seq("Latitude", "Longitude", "Data")),
-          mode, step)
-        // always parquet, even for CSV input (agg.py:171-172)
-        IO.writeSingleFile(out, dest, IO.ParquetExt)
+        dest
       }
-      log.info(s"aggregated ${files.length} file(s) matching ${pos(0)}")
+      // always parquet, even for CSV input (agg.py:171-172)
+      if (inputs.nonEmpty) IO.writePerFile(
+        GeoAggregate(IO.readEach(spark, inputs.map(_._1), inputs.map(_._2), cols),
+          mode, step, by = Seq(IO.FileIdx)), dests, IO.ParquetExt)
+      log.info(s"aggregated ${inputs.length} file(s) matching ${pos(0)}")
     }
     }
   }

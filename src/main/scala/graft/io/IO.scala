@@ -1,10 +1,21 @@
 package graft.io
 
+import com.univocity.parsers.csv.CsvParser
 import graft.Materialize
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.functions.{coalesce, col, concat, element_at, lit,
+  monotonically_increasing_id, raise_error, struct, typedLit}
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, NullType, StringType,
+  StructField, StructType}
 
 /** File IO surface of the reference, Spark-first (SURVEY.md §2.1).
   *
@@ -15,6 +26,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * - Format dispatch by extension mirrors `read_file`/`write_file`
   *   (`add_country.py:44-72`, `agg.py:47-77`): `.csv` / `.parquet`, error
   *   on anything else.
+  * - File reads run no schema job: CSV schemas for any number of files
+  *   come from one job, Parquet schemas from the footer on the driver, and
+  *   reads take the files as listed (no second listing).
   * - `agg` output stays Parquet-only regardless of input format — the
   *   reference quirk at `agg.py:171-172` (documented in SURVEY §2.1 S10).
   */
@@ -33,41 +47,132 @@ object IO {
     if (i < 0) "" else base.substring(i + 1).toLowerCase(java.util.Locale.ROOT)
   }
 
-  /** `read_csv(src, index_col=False, skipinitialspace=True, low_memory=True)`
-    * parity (`csv2parquet.py:75`). Chunked low-memory parse is Spark's
-    * native partition-wise CSV reader; dtype inference is `inferSchema`.
-    *
-    * Integer columns are upcast to long: pandas infers int64 (never int32),
-    * so without the upcast a converted Parquet file would carry INT32 where
-    * the reference emits INT64 — a schema-level deviation visible to any
-    * downstream reader. The full inference matrix (incl. the two remaining
+  /** The options of the pandas-parity CSV read (`read_csv(src,
+    * index_col=False, skipinitialspace=True, low_memory=True)`,
+    * `csv2parquet.py:75`): header, schema inference, leading-whitespace
+    * strip (Spark's read-side default is false — set explicitly).
+    */
+  private val CsvReadOptions = Map(
+    "header" -> "true", "inferSchema" -> "true", "ignoreLeadingWhiteSpace" -> "true")
+
+  /** `read_csv` parity for one file: its [[csvSchemas]] schema, then a
+    * read under that schema. Chunked low-memory parse is Spark's native
+    * partition-wise CSV reader. The full inference matrix (incl. the
     * documented deviations: int-with-NA and lowercase booleans) is pinned
     * by CsvInferenceParitySpec.
     */
-  def readCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .option("ignoreLeadingWhiteSpace", "true")
-      .csv(path)
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val cols = raw.schema.fields.map { f =>
-      if (f.dataType == IntegerType) col(f.name).cast(LongType).as(f.name)
-      else col(f.name)
+  def readCsv(spark: SparkSession, path: String): DataFrame = readFile(spark, path)
+
+  /** Each CSV file's schema as Spark's `header` + `inferSchema` +
+    * `ignoreLeadingWhiteSpace` read of that file alone infers it, with
+    * integer columns upcast to long: pandas infers int64 (never int32), so
+    * without the upcast a converted Parquet file would carry INT32 where
+    * the reference emits INT64. None for a file with no header line (0
+    * bytes, or blank lines only), where Spark infers no columns.
+    *
+    * All files together cost one Spark job. Each file's header line is
+    * read on the driver; one `text` scan over every file, keyed by
+    * `_metadata.file_path`, is folded per file with catalyst's
+    * `CSVInferSchema` under the `CSVOptions` Spark's CSV source builds —
+    * the per-row fold and merge that source runs over one file. The job
+    * collects one type array per file and scan split.
+    */
+  def csvSchemas(spark: SparkSession, files: Seq[String]): Seq[Option[StructType]] = {
+    val sql = ColumnBridge.sqlConf(spark)
+    val opts = new CSVOptions(CsvReadOptions, sql.csvColumnPruning,
+      sql.sessionLocalTimeZone, sql.columnNameOfCorruptRecord)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val parser = new CsvParser(opts.asParserSettings)
+    // (status, header line, column names) of every file with a header line
+    val headed = files.map(f => status(f, conf)).map { st =>
+      headerLine(st, conf).flatMap { line =>
+        Option(parser.parseLine(line)).map(row =>
+          (st, line, CSVUtils.makeSafeHeader(row, sql.caseSensitiveAnalysis, opts)))
+      }
     }
-    raw.select(cols.toSeq: _*)
+    val firstLines = headed.flatten.map { case (st, line, names) =>
+      pathKey(st) -> (line, names.length)
+    }.toMap
+    val infer = new CSVInferSchema(opts)
+    val types =
+      if (firstLines.isEmpty) Map.empty[String, Array[DataType]]
+      else {
+        val text = ColumnBridge.readListed(spark, headed.flatten.map(_._1), "text",
+          StructType(Seq(StructField("value", StringType))), Map.empty)
+          .select(col("_metadata.file_path"), col("value"))
+        ColumnBridge.withSQLConfPropagated(spark) {
+          text.rdd.mapPartitions(foldCsvTypes(opts, firstLines)).collect()
+        }.toSeq.groupMapReduce(_._1)(_._2)(infer.mergeRowTypes)
+      }
+    headed.map(_.map { case (st, _, names) =>
+      val fields = infer.toStructFields(
+        types.getOrElse(pathKey(st), Array.fill[DataType](names.length)(NullType)), names)
+      StructType(fields.map(f =>
+        if (f.dataType == IntegerType) f.copy(dataType = LongType) else f))
+    })
   }
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** ORC read (columnar sibling of Parquet — common in Hive-era lakes;
-    * an extension beyond the reference's csv/parquet surface). Spark's
-    * native reader gives the same pushdown/pruning behavior as Parquet.
+  /** One partition of the inference scan, folded per file: the lines
+    * Spark's CSV inference keeps (`CSVUtils.filterCommentAndEmpty`, then
+    * `filterHeaderLine`, which drops every copy of the header line), each
+    * tokenized and folded into its file's types with `inferRowType`.
     */
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
+  private def foldCsvTypes(opts: CSVOptions, firstLines: Map[String, (String, Int)])
+                          (rows: Iterator[Row]): Iterator[(String, Array[DataType])] = {
+    val parser = new CsvParser(opts.asParserSettings)
+    val infer = new CSVInferSchema(opts)
+    val acc = scala.collection.mutable.LinkedHashMap.empty[String, Array[DataType]]
+    rows.foreach { r =>
+      val (key, line) = (r.getString(0), r.getString(1))
+      val (header, width) = firstLines(key)
+      if (line.trim.nonEmpty && line != header &&
+          !(opts.isCommentSet && line.startsWith(opts.comment.toString)))
+        infer.inferRowType(
+          acc.getOrElseUpdate(key, Array.fill[DataType](width)(NullType)),
+          parser.parseLine(line))
+    }
+    acc.iterator
+  }
+
+  /** A CSV file's header line as Spark's inference takes it: the first
+    * line, split as the `text` source splits it (Hadoop's line reader:
+    * `\n`, `\r`, `\r\n`, a leading UTF-8 BOM dropped), that SQL `trim`
+    * (spaces only) leaves non-empty.
+    */
+  private def headerLine(file: FileStatus, conf: Configuration): Option[String] = {
+    val reader = new LineRecordReader()
+    try {
+      reader.initialize(new FileSplit(file.getPath, 0, file.getLen, Array.empty[String]),
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+      var line = Option.empty[String]
+      while (line.isEmpty && reader.nextKeyValue()) {
+        val s = reader.getCurrentValue.toString
+        if (s.exists(_ != ' ')) line = Some(s)
+      }
+      line
+    } finally reader.close()
+  }
+
+  /** A file's status with its block locations, as Spark's listing gives
+    * it. Each input is one file: a directory is rejected.
+    */
+  private def status(file: String, conf: Configuration): FileStatus = {
+    val p = new Path(file)
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    require(st.isFile, s"$file is not a file")
+    new LocatedFileStatus(st, fs.getFileBlockLocations(st, 0, st.getLen))
+  }
+
+  /** A listed file's `_metadata.file_path`: its path as a URI string (a
+    * space reads `%20`, a `%` reads `%25`), rebuilt so that an empty
+    * authority (`file:///x`, a local file's status) reads as none
+    * (`file:/x`, what the scan reports).
+    */
+  private def pathKey(file: FileStatus): String = {
+    val u = file.getPath.toUri
+    new java.net.URI(u.getScheme, u.getAuthority, u.getPath, null, null).toString
+  }
 
   /** JSON-lines read (one object per line — the interchange format of
     * web-scale text corpora; an extension beyond the reference's csv/
@@ -75,41 +180,108 @@ object IO {
     * corpus scale pass `schema` explicitly and keep the read single-pass.
     */
   def readJson(spark: SparkSession, path: String,
-               schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+               schema: Option[StructType] = None): DataFrame = {
     val r = spark.read
     schema.fold(r)(r.schema).json(path)
   }
+
+  /** The format a file is read and written in, from its extension
+    * (`add_country.py:44-72`, `agg.py:47-77`): `.csv`, `.parquet`, `.orc`,
+    * or `.json(l)` as JSON; anything else is rejected.
+    */
+  def formatOf(path: String): String = extensionOf(path) match {
+    case e @ (CsvExt | ParquetExt | OrcExt) => e
+    case JsonExt | JsonlExt => JsonExt
+    case other =>
+      throw new IllegalArgumentException(
+        s"unsupported file type '.$other' for $path (expected .csv, .parquet, .orc, or .json(l))")
+  }
+
+  /** Each file's schema in its `format`, as a read of that file alone
+    * infers it, with no schema job for CSV (all CSV files: one job,
+    * [[csvSchemas]]) or Parquet (the footer, read on the driver,
+    * [[parquetSchema]]). JSON is sampled by Spark, ORC read from its
+    * footer by Spark. None for a CSV with no header line.
+    */
+  def fileSchemas(spark: SparkSession, files: Seq[String],
+                  format: String => String = formatOf): Seq[Option[StructType]] = {
+    val formats = files.map(format)
+    val csv = files.zip(formats).collect { case (f, CsvExt) => f }
+    val csvSchema = csv.zip(csvSchemas(spark, csv)).toMap
+    files.zip(formats).map {
+      case (f, CsvExt) => csvSchema(f)
+      case (f, ParquetExt) => Some(parquetSchema(spark, f))
+      case (f, other) => Some(spark.read.format(other).load(f).schema)
+    }
+  }
+
+  /** A Parquet file's schema from its footer, read on the driver: what
+    * `spark.read.parquet(file).schema` infers, without its schema job.
+    */
+  def parquetSchema(spark: SparkSession, file: String): StructType =
+    ColumnBridge.parquetFooterSchema(spark, new Path(file))
+
+  /** `files` read in `format` as one relation under `schema`: no schema
+    * job. CSV keeps the pandas-parity options.
+    */
+  private def load(spark: SparkSession, files: Seq[FileStatus], format: String,
+                   schema: StructType): DataFrame =
+    ColumnBridge.readListed(spark, files, format, schema,
+      if (format == CsvExt) CsvReadOptions else Map.empty)
 
   /** `read_file(path[, cols])` — extension dispatch + optional projection
     * pushdown (`agg.py:47-61`). The select is logical: Catalyst prunes
     * columns into the scan (ColumnPruning), so Parquet reads only `cols`.
     */
   def readFile(spark: SparkSession, path: String, cols: Seq[String] = Nil): DataFrame = {
-    val df = extensionOf(path) match {
-      case CsvExt => readCsv(spark, path)
-      case ParquetExt => readParquet(spark, path)
-      case JsonExt | JsonlExt => readJson(spark, path)
-      case OrcExt => readOrc(spark, path)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported file type '.$other' for $path (expected .csv, .parquet, .orc, or .json(l))")
-    }
+    val schema = fileSchemas(spark, Seq(path)).head.getOrElse(
+      throw new IllegalArgumentException(s"$path has no header line"))
+    val df = load(spark, Seq(status(path, spark.sparkContext.hadoopConfiguration)),
+      formatOf(path), schema)
     if (cols.isEmpty) df else df.select(cols.head, cols.tail: _*)
   }
+
+  /** The column [[readTagged]] and [[readEach]] add: the index in `files`
+    * of the file a row was read from. [[writePerFile]] writes by it.
+    */
+  val FileIdx = "__file_idx"
+
+  /** The column [[readTagged]] adds: a row's position in its file (the
+    * start of its scan split, then its row id within the split).
+    */
+  val FilePos = "__file_pos"
+
+  /** `files` (all in `format`, all with `schema`) read as one relation,
+    * each row tagged with [[FileIdx]] and [[FilePos]].
+    */
+  def readTagged(spark: SparkSession, files: Seq[String], format: String,
+                 schema: StructType): DataFrame = {
+    val listed = files.map(status(_, spark.sparkContext.hadoopConfiguration))
+    val index = typedLit(listed.zipWithIndex.map { case (f, i) => pathKey(f) -> i }.toMap)
+    val path = col("_metadata.file_path")
+    load(spark, listed, format, schema)
+      .withColumn(FileIdx, coalesce(element_at(index, path),
+        raise_error(concat(lit("no file index for "), path))))
+      .withColumn(FilePos, struct(col("_metadata.file_block_start"), monotonically_increasing_id()))
+  }
+
+  /** Each of `files` read on its own under its schema — so each keeps the
+    * scan splits of a one-file read — projected to `cols`, tagged with
+    * [[FileIdx]] and unioned by name.
+    */
+  def readEach(spark: SparkSession, files: Seq[String], schemas: Seq[StructType],
+               cols: Seq[String]): DataFrame =
+    files.indices.map { i =>
+      load(spark, Seq(status(files(i), spark.sparkContext.hadoopConfiguration)),
+        formatOf(files(i)), schemas(i)).select(cols.map(col): _*)
+        .withColumn(FileIdx, lit(i))
+    }.reduce(_ unionByName _)
 
   /** `write_file(df, path, file_type)` (`add_country.py:59-72`): format
     * chosen by the target extension; CSV keeps the header, Parquet has no
     * index concept (parity with `index=False` is free).
     */
-  def writeFile(df: DataFrame, path: String): Unit = extensionOf(path) match {
-    case CsvExt => writeSingleFile(df, path, CsvExt)
-    case ParquetExt => writeSingleFile(df, path, ParquetExt)
-    case JsonExt | JsonlExt => writeSingleFile(df, path, JsonExt)
-    case OrcExt => writeSingleFile(df, path, OrcExt)
-    case other =>
-      throw new IllegalArgumentException(
-        s"unsupported file type '.$other' for $path (expected .csv, .parquet, .orc, or .json(l))")
-  }
+  def writeFile(df: DataFrame, path: String): Unit = writeSingleFile(df, path, formatOf(path))
 
   /** The reference emits ONE file per input file (`to_parquet(dest)`);
     * Spark emits a directory of parts. For CLI parity we write to a scratch
@@ -118,39 +290,83 @@ object IO {
     * large collated outputs should use `writeDir` instead.
     */
   def writeSingleFile(df: DataFrame, dest: String, format: String): Unit = {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val destPath = new Path(dest)
-    val fs = destPath.getFileSystem(conf)
-    val tmp = new Path(
-      destPath.getParent,
-      s".${destPath.getName}_tmp_${System.nanoTime()}")
-    val writer = df.coalesce(1).write.mode(SaveMode.Overwrite)
+    val fs = destPath.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    withScratch(fs, destPath) { tmp =>
+      save(df.coalesce(1).write.mode(SaveMode.Overwrite), format, tmp.toString)
+      movePart(fs, tmp, destPath)
+    }
+  }
+
+  /** One output file per input file in one grouped write: `df`'s rows
+    * (tagged with [[FileIdx]], optionally [[FilePos]]) go to
+    * `dests(FileIdx)` in `format`.
+    *
+    * Rows are hash-partitioned by file over min(#files,
+    * `spark.sql.shuffle.partitions`) tasks — an explicit count, since AQE
+    * would coalesce a count-less repartition into one task — so every
+    * output is written by one task and files are written in parallel.
+    * Sorting by [[FilePos]] within the file keeps its row order. Each
+    * file's part then moves into place through [[movePart]]'s guards. A
+    * file with no rows gets the empty file of `df`'s schema that a
+    * one-file write gives. A single file is [[writeSingleFile]]'s plan:
+    * `coalesce(1)` keeps the scan order, with no shuffle and no sort.
+    */
+  def writePerFile(df: DataFrame, dests: Seq[String], format: String): Unit =
+    if (dests.size == 1) writeSingleFile(df.drop(FileIdx, FilePos), dests.head, format)
+    else {
+      val spark = df.sparkSession
+      val n = math.min(dests.size, ColumnBridge.sqlConf(spark).numShufflePartitions)
+      val out = df.repartition(n, col(FileIdx))
+        .sortWithinPartitions(Seq(FileIdx, FilePos).filter(df.columns.contains).map(col): _*)
+        .drop(FilePos)
+      val first = new Path(dests.head)
+      val fs = first.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      withScratch(fs, first) { tmp =>
+        save(out.write.mode(SaveMode.Overwrite).partitionBy(FileIdx), format, tmp.toString)
+        dests.zipWithIndex.foreach { case (dest, i) =>
+          val part = new Path(tmp, s"$FileIdx=$i")
+          if (fs.exists(part)) movePart(fs, part, new Path(dest))
+          else writeSingleFile(spark.createDataFrame(
+            java.util.List.of[Row](), out.drop(FileIdx).schema), dest, format)
+        }
+      }
+    }
+
+  private def save(w: DataFrameWriter[Row], format: String, path: String): Unit =
     (format match {
-      case CsvExt => writer.option("header", "true").format("csv")
-      case JsonExt | JsonlExt => writer.format("json")
-      case ParquetExt => writer.format("parquet")
-      case OrcExt => writer.format("orc")
-    }).save(tmp.toString)
-    val part = fs.listStatus(tmp)
-      .map(_.getPath)
-      .find(p => p.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-    // guard the silent-loss paths: an existing non-empty DIRECTORY at dest
-    // would survive the non-recursive delete and swallow the rename (the
-    // part would land at dest/part-*); a false rename (e.g. cross-filesystem)
-    // would otherwise be followed by deleting the only copy in tmp.
-    if (fs.exists(destPath)) {
-      if (fs.getFileStatus(destPath).isDirectory)
+      case CsvExt => w.option("header", "true").format("csv")
+      case JsonExt | JsonlExt => w.format("json")
+      case other => w.format(other)
+    }).save(path)
+
+  /** Run `body` on a scratch directory beside `dest` (same filesystem, so
+    * moving a part out of it is a rename), deleted however `body` ends.
+    */
+  private def withScratch(fs: FileSystem, dest: Path)(body: Path => Unit): Unit = {
+    val tmp = new Path(dest.getParent, s".${dest.getName}_tmp_${System.nanoTime()}")
+    try body(tmp) finally fs.delete(tmp, true)
+  }
+
+  /** Move the one part file under `dir` to `dest`, guarding the
+    * silent-loss paths: an existing non-empty DIRECTORY at dest would
+    * survive the non-recursive delete and swallow the rename (the part
+    * would land at dest/part-*); a false rename (e.g. cross-filesystem)
+    * must not be taken for a move.
+    */
+  private def movePart(fs: FileSystem, dir: Path, dest: Path): Unit = {
+    val parts = fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-"))
+    if (parts.length != 1)
+      throw new IllegalStateException(s"expected one part file under $dir, found ${parts.length}")
+    if (fs.exists(dest)) {
+      if (fs.getFileStatus(dest).isDirectory)
         throw new IllegalStateException(
           s"destination $dest exists and is a directory; refusing to overwrite")
-      fs.delete(destPath, false)
+      fs.delete(dest, false)
     }
-    if (!fs.rename(part, destPath)) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(s"rename $part -> $destPath failed")
-    }
-    fs.delete(tmp, true)
+    fs.mkdirs(dest.getParent)
+    if (!fs.rename(parts.head, dest))
+      throw new IllegalStateException(s"rename ${parts.head} -> $dest failed")
   }
 
   /** Directory-output variant — the scalable default shape for big results
@@ -158,12 +374,8 @@ object IO {
     */
   def writeDir(df: DataFrame, dest: String, format: String = ParquetExt,
                partitionBy: Seq[String] = Nil): Unit = {
-    val w0 = df.write.mode(SaveMode.Overwrite)
-    val w1 = if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0
-    (format match {
-      case CsvExt => w1.option("header", "true").format("csv")
-      case _ => w1.format(format)
-    }).save(dest)
+    val w = df.write.mode(SaveMode.Overwrite)
+    save(if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w, format, dest)
   }
 
   /** Recursive count of .parquet data files under `dir`; 0 when the dir

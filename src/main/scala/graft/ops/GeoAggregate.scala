@@ -74,15 +74,18 @@ object GeoAggregate {
       latCol: String = "Latitude",
       lonCol: String = "Longitude",
       valCol: String = "Data",
-      scaleDiv: Double = 10.0): DataFrame = {
+      scaleDiv: Double = 10.0,
+      by: Seq[String] = Nil): DataFrame = {
     val aggFn = modes.getOrElse(
       mode.toLowerCase(java.util.Locale.ROOT),
       throw new IllegalArgumentException(
         s"mode must be one of ${modes.keys.mkString("|")}, got: $mode"))
-    df.select(col(latCol), col(lonCol), (col(valCol) / scaleDiv).as(valCol))
+    // `by`: extra grouping keys kept in front of the output (one
+    // aggregation for many inputs, e.g. per source file)
+    df.select(by.map(col) ++ Seq(col(latCol), col(lonCol), (col(valCol) / scaleDiv).as(valCol)): _*)
       .withColumn("latitude_bin_id", binId(col(latCol), -90.0, stepDegrees))
       .withColumn("longitude_bin_id", binId(col(lonCol), -180.0, stepDegrees))
-      .groupBy("latitude_bin_id", "longitude_bin_id")
+      .groupBy((by ++ Seq("latitude_bin_id", "longitude_bin_id")).map(col): _*)
       .agg(aggFn(col(valCol)).as(valCol))
       .withColumn(latCol, centroid(col("latitude_bin_id"), -90.0, stepDegrees))
       .withColumn(lonCol, centroid(col("longitude_bin_id"), -180.0, stepDegrees))

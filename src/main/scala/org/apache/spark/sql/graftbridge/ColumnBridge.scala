@@ -96,4 +96,64 @@ object ColumnBridge {
     if (cat.tableExists(id)) cat.getTableMetadata(id).bucketSpec
     else None
   }
+
+  /** The session's SQL conf (`sessionState` is `private[sql]`). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  /** Run `body` with the session's SQL conf set on the tasks it starts —
+    * what Spark's own RDD-level CSV schema inference does, so executors
+    * parse dates and timestamps under the session's settings.
+    */
+  def withSQLConfPropagated[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
+    org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])(body)
+
+  /** A Parquet file's Spark schema from its footer, read on the driver:
+    * the Spark row-metadata schema when the writer left one, else the
+    * Parquet schema converted under the session conf (binary-as-string,
+    * INT96, NTZ inference, `nanosAsLong`). It is the schema
+    * `spark.read.parquet(file)` infers, without that read's schema job.
+    */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+                          file: org.apache.hadoop.fs.Path): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, state.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(state.conf)).asNullable
+  }
+
+  /** The relation `spark.read.format(format).options(options).schema(schema)
+    * .load(files)` resolves to, over files the caller already listed:
+    * their statuses seed the file index, so Spark lists nothing again —
+    * no listing job however many files (above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths a
+    * read lists them in one) — and no path is taken for a glob.
+    */
+  def readListed(spark: org.apache.spark.sql.SparkSession,
+                 files: Seq[org.apache.hadoop.fs.FileStatus], format: String,
+                 schema: org.apache.spark.sql.types.StructType,
+                 options: Map[String, String]): org.apache.spark.sql.DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources._
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val listed = files.map(f => f.getPath -> Array(f)).toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(session, files.map(_.getPath), options, Some(schema), cache)
+    val fileFormat = DataSource.lookupDataSource(format, session.sessionState.conf)
+      .getConstructor().newInstance() match {
+        case source: v2.FileDataSourceV2 => source.fallbackFileFormat.getConstructor().newInstance()
+        case source: FileFormat => source
+      }
+    session.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      schema.asNullable, None, fileFormat, options)(session))
+  }
 }

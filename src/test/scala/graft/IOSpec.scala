@@ -156,4 +156,48 @@ class IOSpec extends SparkSpec {
     val got = spark.read.parquet(dest).as[(Long, String)].collect().toSet
     assert(got == Set((1L, "a"), (2L, "b")))
   }
+
+  test("a destination that is a directory throws and leaves no scratch directory") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir()
+    writeText(s"$dir/out.parquet/inner/keep", "x")
+    writeText(s"$dir/b.parquet/inner/keep", "x")
+    def names = Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.endsWith(".crc")).toSet
+    val df = Seq((1L, "a")).toDF("id", "v")
+    assertThrows[IllegalStateException](IO.writeSingleFile(df, s"$dir/out.parquet", "parquet"))
+    assert(names == Set("out.parquet", "b.parquet"))
+    // the grouped writer: the first file moves, the second refuses
+    val tagged = Seq((1L, 0), (2L, 1)).toDF("id", IO.FileIdx)
+    assertThrows[IllegalStateException](
+      IO.writePerFile(tagged, Seq(s"$dir/a.parquet", s"$dir/b.parquet"), "parquet"))
+    assert(names == Set("out.parquet", "a.parquet", "b.parquet"))
+    assert(Files.exists(Paths.get(s"$dir/out.parquet/inner/keep")))
+    assert(Files.exists(Paths.get(s"$dir/b.parquet/inner/keep")))
+  }
+
+  test("footer schema equals Spark's inferred schema, for non-Spark and Spark writers") {
+    import org.apache.spark.sql.functions._
+    import scala.util.Try
+    // pyarrow 16.1: no Spark row metadata, a TIMESTAMP(NANOS) column
+    val arrow = getClass.getResource("/fixtures/pyarrow_nanos.parquet").getPath
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val inferred = spark.read.parquet(arrow).schema
+    assert(IO.parquetSchema(spark, arrow) == inferred)
+    assert(inferred("ts").dataType == org.apache.spark.sql.types.LongType)
+    // without nanosAsLong both sides agree too (Spark 4 rejects the type)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    try assert(Try(IO.parquetSchema(spark, arrow)).toOption ==
+      Try(spark.read.parquet(arrow).schema).toOption)
+    finally spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // a Spark writer: the row-metadata schema
+    val dir = tmpDir()
+    val df = spark.range(3).select(col("id"), current_timestamp().as("ts"),
+      (col("id") / 3).cast("decimal(12,4)").as("d"),
+      struct(col("id").as("a"), lit("x").as("b")).as("s"), array(col("id")).as("arr"))
+    IO.writeSingleFile(df, s"$dir/spark.parquet", IO.ParquetExt)
+    assert(IO.parquetSchema(spark, s"$dir/spark.parquet") ==
+      spark.read.parquet(s"$dir/spark.parquet").schema)
+  }
 }
