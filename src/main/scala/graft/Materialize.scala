@@ -19,16 +19,49 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *     result that reads it, releasing it only on failure.
   *   - [[iterate]]: a round loop that keeps exactly one round live.
   *
-  * Every checkpoint here is eager, as `localCheckpoint()` is.
+  * Every checkpoint in the engine goes through [[checkpoint]]: eager, as
+  * `localCheckpoint()` is, and keeping the hash partitioning its
+  * executed plan really had
+  * ([[ColumnBridge.localCheckpointKeepingPartitioning]]). A loop that
+  * checkpoints `repartition(n, k)` of its static side once and keeps its
+  * per-round state hashed on the same key joins the two without an
+  * exchange in every round; an AQE-coalesced or non-hash final plan
+  * checkpoints with unknown partitioning, as before. The loops built on
+  * this run, per round, 3 jobs and 3 stages for PageRank/PPR, 3 per HITS
+  * half-step and 5 for connected components (`StageCountSpec` pins them
+  * with LPA's, kCore's and Bradley–Terry's).
   */
 object Materialize {
+
+  /** Checkpoint `df` now (eagerly), keeping the hash partitioning its
+    * executed plan produced when that claim is true. The caller owns the
+    * result's lifetime: hand it to [[owning]] or [[handOff]], or return
+    * it as an operator result that reads it.
+    */
+  private[graft] def checkpoint(df: DataFrame): DataFrame =
+    ColumnBridge.localCheckpointKeepingPartitioning(df)
+
+  /** `spark.sql.shuffle.partitions` of `df`'s session: the partition
+    * count a loop hashes its static side and its state into, so that
+    * every per-round join and aggregate on the key plans no exchange
+    * (a join with a side of another count re-shuffles it).
+    */
+  private[graft] def shufflePartitions(df: DataFrame): Int =
+    ColumnBridge.sqlConf(df.sparkSession).numShufflePartitions
+
+  /** `df.checkpointed` is [[checkpoint]]`(df)`: the engine's spelling of
+    * `df.localCheckpoint()` at the end of a transformation chain.
+    */
+  implicit class CheckpointSyntax(private val df: DataFrame) extends AnyVal {
+    def checkpointed: DataFrame = checkpoint(df)
+  }
 
   /** Checkpoint `df`, run `body` on the materialised frame, release it
     * however `body` ends. `body` must not return anything that still
     * reads the checkpoint lazily — materialise such a result inside.
     */
   def using[A](df: DataFrame)(body: DataFrame => A): A =
-    owning(df.localCheckpoint())(body)
+    owning(checkpoint(df))(body)
 
   /** Run `body` on `m`, then release the checkpoints `m` reads however
     * `body` ends.
@@ -57,14 +90,14 @@ object Materialize {
   def iterate(init: DataFrame, rounds: Int,
               until: DataFrame => Boolean = _ => false)
              (step: DataFrame => DataFrame): DataFrame = {
-    var cur = init.localCheckpoint()
+    var cur = checkpoint(init)
     var ok = false
     try {
       var done = until(cur)
       var r = 0
       while (!done && r < rounds) {
         val prev = cur
-        cur = step(prev).localCheckpoint()
+        cur = checkpoint(step(prev))
         try done = until(cur) finally ColumnBridge.releaseLocalCheckpoint(prev)
         r += 1
       }

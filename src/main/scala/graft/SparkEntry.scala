@@ -1,5 +1,7 @@
 package graft
 
+import graft.Materialize.CheckpointSyntax
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1183,7 +1185,7 @@ object SparkEntry {
       .join(emb.select(col("vec_id"), col("label")), "vec_id")
       .groupBy(col("cluster_rep"), col("label"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .checkpointed
     def c2(frame: DataFrame, out: String) =
       frame.agg(expr("sum(__c * (__c - 1) DIV 2)").as(out))
     val sij = c2(nij, "__sij")
@@ -1214,7 +1216,7 @@ object SparkEntry {
       .join(emb.select(col("vec_id"), col("label")), "vec_id")
       .groupBy(col("cluster_rep"), col("label"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .checkpointed
     val nn = nij.agg(sum(col("__c")).as("n"))
     val ai = nij.groupBy(col("cluster_rep")).agg(sum(col("__c")).as("__a"))
     val bj = nij.groupBy(col("label")).agg(sum(col("__c")).as("__b"))
@@ -2644,7 +2646,7 @@ object SparkEntry {
       val media = Multimodal.withCorruptedBlobs(
         Multimodal.synthesizePng(s, ids, "doc_id", patternMod = 10),
         everyNth = 5)
-      val feats = Multimodal.decodeImageFeatures(media).localCheckpoint()
+      val feats = Multimodal.decodeImageFeatures(media).checkpointed
       val census = feats.agg(
         count(lit(1)).as("n_images"),
         count(col("decode_error")).as("n_quarantined"),
@@ -2724,7 +2726,7 @@ object SparkEntry {
       // termFrequencies; CacheManager-free)
       val red = Redact.scrub(withPii, "text")
         .select(col("doc_id"), col("lang"), col("redacted").as("text"))
-        .localCheckpoint()
+        .checkpointed
       val keepQ = TextAnalysis.qualityLogistic(red)
         .filter(col("keep") === 1).select("doc_id")
       val lm = TextAnalysis.bigramCrossEntropy(red)
@@ -2769,7 +2771,7 @@ object SparkEntry {
       // corpus-wide assign+subtract subtree would be built twice in one
       // plan (same localCheckpoint discipline as termFrequencies/q123)
       val resid = Similarity.cellResiduals(emb, cellCentroids)
-        .localCheckpoint()
+        .checkpointed
       val codebook = resid
         .filter(col("vec_id") % 37 === 0 && col("vec_id") / 37 < 16)
         .select((col("vec_id") / 37).cast("int").as("cid"),
@@ -4309,7 +4311,7 @@ object SparkEntry {
           sum(col("lang_known")).as("__lang"),
           sum(col("exact_unique")).as("__exact"),
           sum(col("near_unique")).as("__near"))
-        .localCheckpoint() // 1 row, consumed by the 4 stage branches
+        .checkpointed // 1 row, consumed by the 4 stage branches
       def st(n: Int, name: String, cnt: String) =
         agg.select(lit(n).as("stage_no"), lit(name).as("stage"),
           col(cnt).as("n_docs"),
@@ -4376,7 +4378,7 @@ object SparkEntry {
           sum(col("lang_known")).as("__lang"),
           sum(col("exact_unique")).as("__exact"),
           sum(col("near_unique")).as("__near"))
-        .localCheckpoint() // |sources| rows, consumed by 4 stage branches
+        .checkpointed // |sources| rows, consumed by 4 stage branches
       def st(n: Int, name: String, cnt: String) =
         perSrc.filter(col(cnt) > 0)
           .select(lit(n).as("stage_no"), lit(name).as("stage"),
@@ -4756,7 +4758,7 @@ object SparkEntry {
         .select((col("vec_id") / 97).cast("int").as("cell_id"),
           col("embedding").as("centroid"))
       val exact = Similarity.cosineTopK(emb, queryId = 1L, k = 10)
-        .select(col("vec_id")).localCheckpoint()
+        .select(col("vec_id")).checkpointed
       Seq(1, 2, 4).map { np =>
         exact.join(
             Similarity.ivfTopK(emb, centroids, queryId = 1L, k = 10,
@@ -4823,7 +4825,7 @@ object SparkEntry {
       // the dashboard costs one corpus FileScan, not five — plan-gated
       val docs = T(s, d, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"), col("text"))
-        .localCheckpoint()
+        .checkpointed
       val dups = docs.agg(count(lit(1)).as("n_docs"),
           (count(lit(1)) - countDistinct(md5Hash31(col("text"))))
             .as("__nd"))

@@ -24,6 +24,13 @@ package object functions {
 
   def l2Norm(a: Column): Column = sqrt(dotProduct(a, a))
 
+  /** A driver-side double as a plan constant that generated code does not
+    * inline ([[DriverScalar]]): a round loop that passes a new value each
+    * round reuses the previous round's compiled classes.
+    */
+  def driverScalar(value: Double): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(DriverScalar(value))
+
   /** Jaro–Winkler similarity of two string columns (codegen'd; DuckDB
     * `jaro_winkler_similarity` semantics — see JaroWinklerImpl).
     */

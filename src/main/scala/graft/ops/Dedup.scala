@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Materialize
+import graft.Materialize.CheckpointSyntax
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -141,7 +142,7 @@ object Dedup {
       docs.select(col(idCol).as(side),
         sort_array(shingleHashes(col(textCol), shingleK)).as(s"__sh_$side"))
         .withColumn(s"__n_$side", size(col(s"__sh_$side")))
-        .localCheckpoint()
+        .checkpointed
     val shB = shingled(batch, "__bid")
     val shC = shingled(corpus, "__cid")
     def banded(sh: DataFrame, side: String) =
@@ -671,7 +672,7 @@ object Dedup {
     val sets = rel.select(col(idCol),
       sort_array(array_distinct(col(hashesCol))).as("__sh"))
       .withColumn("__n", size(col("__sh")))
-      .localCheckpoint()
+      .checkpointed
     val sigs = minhashSignaturesOfHashes(
       sets.filter(col("__n") > 0), idCol, "__sh", numPerm)
     val cands = lshCandidates(sigs, idCol, bands, numPerm / bands)
@@ -793,7 +794,7 @@ object Dedup {
     val sh = docs.select(
       col(idCol), sort_array(shingleHashes(col(textCol), shingleK)).as("__sh"))
       .withColumn("__n", size(col("__sh")))
-      .localCheckpoint()
+      .checkpointed
     val sigs = minhashSignaturesOfHashes(sh, idCol, "__sh", numPerm)
     val cands = lshCandidates(sigs, idCol, bands, numPerm / bands)
     val inter = sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double")
@@ -818,14 +819,22 @@ object Dedup {
   /** Connected components over a near-dup pair list: every doc in a
     * component converges to the component's smallest doc id. Each round is
     * (a) neighbor-min propagation — one join + one aggregation on
-    * well-distributed ids — and (b) POINTER DOUBLING
-    * (label(u) ← label(label(u)), one self-join), so convergence is
-    * O(log diameter) rounds, not O(diameter): a million-node chain needs
-    * ~20 rounds instead of a million. Labels only ever decrease and every
-    * label value is a node id of the same component, so the converged
-    * state (stable under both steps, checked by a scalar count — nothing
-    * ever collects) is exactly per-component min. Returns
-    * (idCol, cluster_rep) for every node in `pairs`.
+    * well-distributed ids — and (b) POINTER JUMPING through the previous
+    * round's labels (label(u) ← label(vn(u)), vn the neighbor-min label),
+    * so convergence is O(log diameter) rounds, not O(diameter): a
+    * million-node chain needs ~20 rounds instead of a million. Labels only
+    * ever decrease and every label value is a node id of the same
+    * component, so the converged state (stable under both steps, checked
+    * by a scalar sum — one value per partition reaches the driver) is
+    * exactly per-component min. Returns (idCol, cluster_rep) for every
+    * node in `pairs`.
+    *
+    * Stage budget: the symmetric edges are hashed by src once and the
+    * labels stay hashed by node through every checkpoint, so a round runs
+    * 5 jobs and 5 stages — the neighbor-min aggregate's shuffle, the jump's
+    * shuffle by label, the rehash by node, the checkpoint and the label
+    * sum; before the loop, 4 (the edges' shuffle and checkpoint, round 0's
+    * checkpoint, which needs no shuffle, and its sum).
     */
   /** Threshold-sensitivity report over a SCORED near-dup pair relation —
     * the curation-tuning question "how aggressive should the dedup cut
@@ -876,29 +885,41 @@ object Dedup {
 
   def clusterNearDups(pairs: DataFrame, maxIter: Int = 20,
                       idCol: String = "doc_id"): DataFrame = {
-    // materialize the pair list once — `pairs` is typically a full LSH
-    // pipeline, and edges are re-read every iteration
+    // materialize the pair list once, hashed by src — `pairs` is
+    // typically a full LSH pipeline, and every round joins the edges with
+    // the node-hashed labels, which then needs no exchange on either side
+    val parts = Materialize.shufflePartitions(pairs)
     Materialize.using(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))) { edges =>
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .repartition(parts, col("src"))) { edges =>
     // convergence via the label-sum invariant: labels only ever DECREASE,
     // so the total is strictly monotone and equal sums ⟺ no change — one
-    // aggregation scan per round instead of a join with the previous state
+    // job per round, one exact partial sum per partition to the driver
     // (decimal(38) accumulator: 10^11 nodes × 10^11 max id overflows long).
     // An empty pair list has no nodes, so the sum is null: converge
     // immediately instead of NPEing on BigDecimal.compareTo
     var labelSum: java.math.BigDecimal = null
     var converged = false
     def unchanged(labels: DataFrame): Boolean = {
-      val s = labels.agg(sum(col("label").cast("decimal(38,0)")))
-        .head().getDecimal(0)
+      val s = org.apache.spark.sql.graftbridge.ColumnBridge.foldPartitions(
+          labels.select(col("label").cast("decimal(38,0)"))) { rows =>
+        rows.foldLeft(Option.empty[java.math.BigDecimal]) { (acc, r) =>
+          if (r.isNullAt(0)) acc
+          else {
+            val v = r.getDecimal(0, 38, 0).toJavaBigDecimal
+            Some(acc.fold(v)(_.add(v)))
+          }
+        }
+      }.flatten.reduceOption(_.add(_)).orNull
       converged = s == null || (labelSum != null && s.compareTo(labelSum) == 0)
       labelSum = s
       converged
     }
     // each round's labels feed the next round and the sum above; the
-    // superseded round's blocks are released as soon as it is replaced
+    // superseded round's blocks are released as soon as it is replaced.
+    // The edges are symmetric, so their src set is the node set, already
+    // hashed: round 0 is hashed by node without an exchange
     val labels = Materialize.iterate(edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
       .distinct()
       .withColumn("label", col("node")), maxIter, unchanged) { labels =>
       // (a) neighbor-min: pull the smallest label across every edge.
@@ -907,8 +928,8 @@ object Dedup {
       // test scale is terabytes at 10^11 nodes, and even locally the
       // driver-side broadcast build flakes when executor threads hold
       // the heap — the 100× soak failure). Every labels join below is
-      // pinned to sort-merge; the one-time edge materialization plus a
-      // nodes-sized shuffle per round is the 100 TB-correct cost.
+      // pinned to sort-merge; edges and labels are both hashed by node,
+      // so the only shuffle here is the node-sized min aggregate.
       val propagated = edges
         .join(labels.withColumnRenamed("node", "src").withColumnRenamed("label", "src_label").hint("merge"), "src")
         .groupBy(col("dst").as("node"))
@@ -916,28 +937,25 @@ object Dedup {
       // merge own label with the neighbor min via LEFT JOIN + least — NOT
       // union+groupBy: unioning two branches built from the same
       // checkpointed labels plan trips Spark's Union constraint rewrite
-      // ("key not found" on a shared attribute). Checkpoint BEFORE the
-      // doubling self-join (truncates the per-round lineage and gives the
-      // self-join a plain scan to dedup).
-      // r16: viaNeighbors is NOT checkpointed — the doubling self-join
-      // references it twice, but both occurrences carry IDENTICAL
-      // exchanges, which the engine deduplicates (ReusedExchange), so
-      // fusing saves one materialization job + one full nodes-sized
-      // write per round at every scale; only the cheap post-exchange
-      // least-projection re-streams. (The union-constraint-rewrite
-      // landmine the old per-step checkpoint also guarded against only
-      // bites union branches, not this aliased self-join.)
+      // ("key not found" on a shared attribute).
       val viaNeighbors = labels
         .join(propagated.withColumnRenamed("label", "__nmin").hint("merge"), Seq("node"), "left")
         .select(col("node"),
           least(col("label"), coalesce(col("__nmin"), col("label"))).as("label"))
-      // (b) pointer doubling: follow the label chain one hop — label
-      // values are node ids, so the lookup is a self-join; the chained
-      // label is never larger (labels are monotone decreasing)
-      viaNeighbors.alias("n")
-        .join(viaNeighbors.select(col("node").as("l_node"), col("label").as("l_label")).hint("merge"),
-          col("n.label") === col("l_node"))
-        .select(col("n.node").as("node"), col("l_label").as("label"))
+      // (b) pointer jumping: follow the chain one hop through the PREVIOUS
+      // round's labels, which are a scan — jumping through viaNeighbors
+      // itself would run the propagated aggregate twice per round (a
+      // checkpoint's declared partitioning stops ReusedExchange across
+      // self-join copies). Labels are node ids of the same component and
+      // label(x) ≤ x, so labels[vn(n)] ≤ vn(n) ≤ label(n): still monotone,
+      // and a round that changes nothing has every component on its min
+      // id. The chained offset doubles per round (a chain of 300 settles
+      // in 9); the result is rehashed by node for the next round.
+      viaNeighbors
+        .join(labels.select(col("node").as("l_node"), col("label").as("l_label")).hint("merge"),
+          col("label") === col("l_node"))
+        .select(col("node"), col("l_label").as("label"))
+        .repartition(parts, col("node"))
     }
     // callers cannot distinguish converged from truncated labels from the
     // output alone — be loud when maxIter ran out (pointer doubling makes
@@ -1479,7 +1497,7 @@ object Dedup {
       .select(col(idCol), col("chunk_idx"), col("chunk_text"),
         xxhash64(col("chunk_text")).as("__h1"),
         xxhash64(lit(1L), col("chunk_text")).as("__h2"))
-      .localCheckpoint()
+      .checkpointed
 
   /** In-order rejoin of the chunks satisfying `keep`: array_sort on
     * (chunk_idx, text) structs is ordinal, so chunks re-concatenate in
@@ -1565,7 +1583,7 @@ object Dedup {
     docs
       .select(col(idCol), posexplode(hs).as(Seq("__p0", "h")))
       .select(col(idCol), (col("__p0") + 1).as("pos"), col("h"))
-      .localCheckpoint()
+      .checkpointed
   }
 
   /** Match points (doc_a, pos_a, doc_b, pos_b) → maximal diagonal runs:
@@ -1792,7 +1810,7 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1]: $threshold")
     require(anchorCount >= 1, s"anchorCount must be >= 1: $anchorCount")
-    val base = containmentBase(df, idCol, textCol, k).localCheckpoint()
+    val base = containmentBase(df, idCol, textCol, k).checkpointed
     val cands = containmentCandidates(base, anchorCount, maxBucket)
     containmentVerify(cands, base, base, threshold)
   }
@@ -1814,7 +1832,7 @@ object Dedup {
     val base = rel.select(col(idCol).as("__id"),
       array_sort(array_distinct(col(hashesCol))).as("__sh"))
       .filter(size(col("__sh")) > 0)
-      .localCheckpoint()
+      .checkpointed
     val cands = containmentCandidates(base, anchorCount, maxBucket)
     containmentVerify(cands, base, base, threshold)
   }
@@ -1861,7 +1879,7 @@ object Dedup {
     val batchBase = batch.select(col(idCol).as("__id"),
       array_sort(array_distinct(col(hashesCol))).as("__sh"))
       .filter(size(col("__sh")) > 0)
-      .localCheckpoint()
+      .checkpointed
     val cands = containmentCandidatesIndexed(batchBase, name,
       anchorCount, maxBucket)
     containmentVerify(cands, batchBase,
@@ -2024,7 +2042,7 @@ object Dedup {
                               maxBucket: Int = 10000): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1]: $threshold")
-    val batchBase = containmentBase(batch, idCol, textCol, k).localCheckpoint()
+    val batchBase = containmentBase(batch, idCol, textCol, k).checkpointed
     val cands = containmentCandidatesIndexed(batchBase, name, anchorCount,
       maxBucket)
     containmentVerify(cands, batchBase,

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Materialize
+import graft.Materialize.CheckpointSyntax
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ object Funnel {
         .agg(min(struct(col("__ets"), col("__eid"), col("__t1c"))).as("__m"))
         .select(col(userCol), col("__m.__ets").as("__fts"),
           col("__m.__eid").as("__fid"), col("__m.__t1c").as("__t1"))
-        .localCheckpoint()
+        .checkpointed
       frontier
     }
     val users = events.select(col(userCol)).distinct()
@@ -114,7 +115,7 @@ object Funnel {
       Materialize.owning(funnelDepths(sess, steps, userCol = "__session_key",
           tsCol = tsCol, idCol = idCol, typeCol = typeCol))(
         _.groupBy("depth").agg(count(lit(1)).as("n_sessions"))
-          .localCheckpoint())
+          .checkpointed)
     }
   }
 
@@ -197,7 +198,7 @@ object Funnel {
       frequentPaths(sess, n, k, userCol = "__session_key",
         tsCol = tsCol, idCol = idCol, typeCol = typeCol)
         // k-row result: materialize so the session relation can release
-        .localCheckpoint()
+        .checkpointed
     }
   }
 

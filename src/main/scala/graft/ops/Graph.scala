@@ -1,7 +1,9 @@
 package graft.ops
 
 import graft.Materialize
+import graft.Materialize.CheckpointSyntax
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,12 +53,21 @@ object Graph {
     * division — and edge normalization is materialized as weight/outdeg
     * BEFORE multiplying by rank, in both engines.
     *
-    * Per-round plan: ranks ⋈ normalized-edges on node = src (both sides
-    * keyed, narrow), partial-aggregated sum by dst, left join back to
-    * nodes. Each round's result is localCheckpointed and the superseded
-    * round released immediately (the [[Similarity.kmeansCentroids]] block
-    * hygiene); nodes and the normalized edge relation checkpoint once and
-    * release before return.
+    * Per-round plan: the normalized edges are hashed by src once and the
+    * per-round state (node, rank, teleport flag, dangling flag) stays
+    * hashed by node through every checkpoint ([[Materialize.checkpoint]]),
+    * so ranks ⋈ edges on node = src and the left join of the per-dst
+    * contribution sums back to the nodes plan no exchange of the edges or
+    * the state: the contribution aggregate is the round's only shuffle.
+    * The dangling mass is one job (a partial sum per partition to the
+    * driver) and enters the round as a plan constant that generated code
+    * does not inline, so every round plans and compiles like round 1.
+    * Stage budget: 3 jobs and 3 stages per round (mass, shuffle,
+    * checkpoint); before the loop, 6 (the edges' shuffle and checkpoint,
+    * the node aggregate's shuffle and checkpoint, the teleport count,
+    * round 0). Each round's result is checkpointed and the superseded
+    * round released immediately; the node state and the normalized edges
+    * checkpoint once and release before return.
     */
   /** Co-occurrence pair counts over (key, item) observations — the
     * recommender / co-purchase building block ("customers who bought A
@@ -119,58 +130,74 @@ object Graph {
                            iterations: Int, damping: Double,
                            roundTo: Int): DataFrame = {
     require(iterations >= 1, s"iterations ($iterations) must be >= 1")
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-    // teleport membership rides the node relation as a flag
-    val flaggedDf = sources match {
-      case None => nodes.withColumn("__insrc", lit(true))
-      case Some(src) =>
-        val set = src.select(col(src.columns.head).as("node")).distinct()
-          .withColumn("__f", lit(1))
-        nodes.join(set, Seq("node"), "left")
-          .select(col("node"), col("__f").isNotNull.as("__insrc"))
-    }
-    Materialize.using(flaggedDf) { flagged =>
+    val parts = Materialize.shufflePartitions(edges)
+    // the normalised edges, hashed by src once: every round joins them
+    // with the node-hashed ranks without an exchange; the out-degree is a
+    // window over the same hash partitions, so this costs one shuffle
+    val normDf = edges.select("src", "dst", "weight")
+      .repartition(parts, col("src"))
+      .select(col("src"), col("dst"),
+        (col("weight") / sum(col("weight")).over(Window.partitionBy("src")))
+          .as("__norm"))
+    // one aggregate over edges ∪ (dst) ∪ sources gives every node with its
+    // teleport flag and its dangling flag (no out-edge): both ride the
+    // per-round state, hashed by node
+    val endpoints = Seq(
+      edges.select(col("src").as("node"), lit(true).as("__out"),
+        lit(false).as("__src"), lit(true).as("__in_graph")),
+      edges.select(col("dst").as("node"), lit(false), lit(false), lit(true))) ++
+      sources.map(src => src.select(
+        col(src.columns.head).cast(edges.schema("src").dataType).as("node"),
+        lit(false), lit(true), lit(false)))
+    val stateDf = endpoints.reduce(_ union _)
+      .repartition(parts, col("node"))
+      .groupBy("node")
+      .agg(max(col("__out")).as("__out"), max(col("__src")).as("__src"),
+        max(col("__in_graph")).as("__in_graph"))
+      .filter(col("__in_graph"))
+      .select(col("node"),
+        (if (sources.isEmpty) lit(true) else col("__src")).as("__insrc"),
+        (!col("__out")).as("__dangling"))
+    Materialize.using(normDf) { norm =>
+    Materialize.using(stateDf) { state =>
     // teleport-set size: the normalizer for init, base, and dangling mass
-    val n = flagged.filter(col("__insrc")).count()
+    val n = ColumnBridge.foldPartitions(state.filter(col("__insrc")))(_.size.toLong).sum
     require(n > 0, "pageRank: teleport set is empty — no nodes to rank " +
       "(an empty graph or disjoint source set would divide by zero)")
-    val outdeg = edges.groupBy("src").agg(sum(col("weight")).as("__od"))
-    Materialize.using(edges.join(outdeg, "src")
-      .select(col("src"), col("dst"), (col("weight") / col("__od")).as("__norm"))) { norm =>
-    // dangling = nodes with no out-edge; their set is iteration-invariant,
-    // only their current rank mass changes
-    Materialize.using(flagged.select("node")
-      .join(norm.select("src").distinct(),
-        col("node") === col("src"), "left_anti")) { dangling =>
     val base = (1.0 - damping) / n // subtract-then-divide, as the oracle
     def teleport(perMember: Double): Column =
       when(col("__insrc"), lit(perMember)).otherwise(lit(0.0))
-    Materialize.iterate(flagged
-      .select(col("node"), round(teleport(1.0 / n), roundTo).as("rank")),
-      iterations) { ranks =>
-      // r17: the dangling mass rides the plan as a broadcast 1-row scalar
-      // (the HITS normalizer shape) instead of a per-round driver
-      // collect — one job per round (the checkpoint) instead of two.
-      // Arithmetic is unchanged: same sum aggregate, and dm/n stays ONE
-      // double division (now in-plan), exactly the oracle's dg.dm / nn.n
-      val dmRow = ranks.join(dangling, Seq("node"), "left_semi")
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm"))
-      val contrib = ranks.drop("__insrc")
-        .join(norm, col("node") === col("src"))
+    // round 0 has the later rounds' columns, so every round plans alike
+    // and round ≥ 2 reuses round 1's compiled classes
+    Materialize.iterate(state.select(col("node"),
+      round(teleport(1.0 / n), roundTo).as("rank"), col("__insrc"),
+      col("__dangling")), iterations) { ranks =>
+      // the dangling mass: one job, one partial sum per partition to the
+      // driver, entering the round as a plan constant; dm/n stays ONE
+      // double division, exactly the oracle's dg.dm / nn.n
+      val dm = ColumnBridge.foldPartitions(
+        ranks.filter(col("__dangling")).select(col("rank")))(sumDoubles)
+        .foldLeft(0.0)(_ + _)
+      val contrib = ranks.hint("shuffle_hash").join(norm, col("node") === col("src"))
         .groupBy("dst").agg(sum(col("rank") * col("__norm")).as("__contrib"))
-      flagged.join(contrib, col("node") === col("dst"), "left")
-        .crossJoin(broadcast(dmRow))
-        .select(col("node"), col("__insrc"),
+      ranks.join(contrib.hint("shuffle_hash"), col("node") === col("dst"), "left")
+        .select(col("node"),
           round(teleport(base) + lit(damping) *
             (coalesce(col("__contrib"), lit(0.0)) +
-              when(col("__insrc"), col("__dm") / lit(n.toDouble))
+              when(col("__insrc"),
+                graft.functions.driverScalar(dm) / lit(n.toDouble))
                 .otherwise(lit(0.0))),
-            roundTo).as("rank"))
+            roundTo).as("rank"),
+          col("__insrc"), col("__dangling"))
     }.select("node", "rank")
-    }}}
+    }}
   }
+
+  /** Sum of a partition's first (double) column, nulls skipped, in row
+    * order — what a Spark `sum` computes per partition.
+    */
+  private val sumDoubles: Iterator[org.apache.spark.sql.catalyst.InternalRow] => Double =
+    _.foldLeft(0.0)((s, r) => if (r.isNullAt(0)) s else s + r.getDouble(0))
 
   /** Deterministic label propagation (Raghavan et al. 2007, public) —
     * community detection on the weighted digraph: every node starts as
@@ -298,7 +325,7 @@ object Graph {
         Seq("a"))
       .join(lab.select(col("node").as("b"), col("label").as("__lb")),
         Seq("b"))
-      .localCheckpoint()
+      .checkpointed
     val m2 = wl.agg(sum(col("w")).as("__m2"))
     val degC = wl.groupBy(col("__la").as("label"))
       .agg(sum(col("w")).as("__deg"))
@@ -608,7 +635,7 @@ object Graph {
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
       .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
       .distinct()
-      .localCheckpoint()
+      .checkpointed
     val deg = adj.groupBy(col("a")).agg(count(lit(1)).as("__d"))
     val xy = adj
       .join(deg.select(col("a"), col("__d").as("__x")), Seq("a"))
@@ -638,63 +665,80 @@ object Graph {
     * iteration with L1 normalization; every intermediate (the raw
     * mutual-reinforcement sums AND the normalized scores) is rounded to
     * `roundTo` decimals so both engines feed identical inputs into every
-    * next step ([[pageRank]]'s determinism discipline), and the two
-    * normalizer sums per round ride the plan as broadcast 1-row scalars
-    * — ZERO driver traffic and one job per half-step. The oracle
-    * ([[hitsOracleSql]]) unrolls the identical iteration. Nodes with no
-    * in-edges (resp. out-edges) hold authority (resp. hub) 0.
+    * next step ([[pageRank]]'s determinism discipline). The oracle
+    * ([[hitsOracleSql]]) unrolls the identical iteration.
+    * Nodes with no in-edges (resp. out-edges) hold authority (resp. hub) 0.
     *
-    * Per-round plan: scores ⋈ edges on the flowing key (narrow,
-    * id+double), partial-aggregated sum per receiving node, left join
-    * back to nodes; checkpoint + release per round. Returns
-    * (node, hub, authority).
+    * Per-half-step plan: every edge is keyed once by src and once by dst
+    * and hashed by the key in one shuffle, and the state — every node's raw (unnormalized) score — stays hashed
+    * by node, so scores ⋈ edges on the flowing key and the left join of
+    * the per-node sums back to the state plan no exchange but the sum's
+    * own. The state's L1 normalizer is summed on the driver when the next
+    * half-step reads it (one job, one value per partition) and enters the
+    * plan as a constant generated code does not inline: the raw subtree
+    * runs once, nothing broadcasts, and every half-step compiles like the
+    * first. Stage budget: 3 jobs and 3 stages per half-step (normalizer,
+    * shuffle, checkpoint), 6 per iteration; before the loop, 3 (the keyed
+    * edges' shuffle and checkpoint, the node set's checkpoint, which needs
+    * no shuffle). Returns (node, hub, authority).
     */
   def hits(edges: DataFrame, iterations: Int = 10,
            roundTo: Int = 6): DataFrame = {
     require(iterations >= 1, s"iterations ($iterations) must be >= 1")
-    Materialize.using(edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()) { nodes =>
-    val n = nodes.count()
-    require(n > 0, "hits: empty graph")
-    // r17 note: a one-checkpoint-per-round fusion (authority half lazy
-    // inside the hub half's plan, ReusedExchange deduping the repeated
-    // subtrees) was implemented and MEASURED SLOWER (q247 min-of-6
-    // 4.64 s → 6.17 s): the auth subtree carries its own broadcast
-    // normalizer, so leaving it lazy re-executes the deep half twice per
-    // round — more than the saved checkpoint job costs. Two half-step
-    // checkpoints stand.
-    // The L1 normalizer rides the plan as a broadcast 1-row scalar (same
-    // aggregate the oracle computes — no driver round-trip, so each
-    // half-step is ONE job: the checkpoint of the normalized scores).
-    def normalized(raw: DataFrame, name: String): DataFrame = raw
-      .crossJoin(broadcast(raw.agg(sum(col("__r")).as("__s"))))
-      .select(col("node"), round(col("__r") / col("__s"), roundTo).as(name))
-    def authorities(hubs: DataFrame): DataFrame = normalized(nodes
-      .join(hubs.join(edges, col("node") === col("src"))
-        .groupBy(col("dst"))
-        .agg(round(sum(col("hub") * col("weight")), roundTo).as("__r")),
-        col("node") === col("dst"), "left")
-      .select(col("node"), coalesce(col("__r"), lit(0.0)).as("__r")),
-      "authority")
-    def hubsOf(auth: DataFrame): DataFrame = normalized(nodes
-      .join(auth.join(edges, col("node") === col("dst"))
-        .groupBy(col("src"))
-        .agg(round(sum(col("authority") * col("weight")), roundTo)
-          .as("__r")),
-        col("node") === col("src"), "left")
-      .select(col("node"), coalesce(col("__r"), lit(0.0)).as("__r")),
-      "hub")
+    val parts = Materialize.shufflePartitions(edges)
+    val e = edges.select("src", "dst", "weight")
+    // every edge twice, keyed by each endpoint and hashed by the key in
+    // one shuffle: hub scores flow out along the src-keyed copies,
+    // authority scores back along the dst-keyed ones, and neither is
+    // shuffled again
+    Materialize.using(e.select(col("src").as("__key"), col("dst").as("__to"),
+        col("weight"), lit(true).as("__out"))
+      .union(e.select(col("dst"), col("src"), col("weight"), lit(false)))
+      .repartition(parts, col("__key"))) { keyed =>
+    // The state of a half-step is the RAW score of every node, hashed by
+    // node; its L1 normaliser is summed on the driver (one job, one value
+    // per partition) when the next half-step reads it, so the raw subtree
+    // runs once and no round broadcasts. Round 0 is a raw hub of 1 per
+    // node: normalised, round(1/n), the oracle's h0.
+    def l1(raw: DataFrame): Double = ColumnBridge.foldPartitions(
+      raw.select(col("__r")))(sumDoubles).foldLeft(0.0)(_ + _)
+    def normalized(raw: DataFrame, s: Double, name: String): DataFrame =
+      raw.select(col("node"),
+        round(col("__r") / graft.functions.driverScalar(s), roundTo).as(name))
+    // raw scores of the other side: scores ⋈ edges on the flowing key
+    // (co-hashed), summed per receiving node, left-joined back to every node
+    def flow(raw: DataFrame, s: Double, score: String, out: Boolean): DataFrame = {
+      val sums = normalized(raw, s, score).hint("shuffle_hash")
+        .join(keyed.filter(col("__out") === out), col("node") === col("__key"))
+        .groupBy(col("__to"))
+        .agg(round(sum(col(score) * col("weight")), roundTo).as("__x"))
+      raw.join(sums.hint("shuffle_hash"), col("node") === col("__to"), "left")
+        .select(col("node"), coalesce(col("__x"), lit(0.0)).as("__r"))
+    }
+    def authorities(hubRaw: DataFrame, s: Double): DataFrame =
+      flow(hubRaw, s, "hub", out = true)
+    def hubsOf(authRaw: DataFrame, s: Double): DataFrame =
+      flow(authRaw, s, "authority", out = false)
     // rounds of the loop are half-steps, authority and hub in turn; it
     // stops on the last authority half so that both of the last halves
-    // outlive it
-    val auth = Materialize.iterate(nodes.select(col("node"),
-        round(lit(1.0 / n), roundTo).as("hub")), 2 * iterations - 1) { s =>
-      if (s.columns.contains("hub")) authorities(s) else hubsOf(s)
+    // outlive it. (r17: one checkpoint per round, the authority half left
+    // lazy inside the hub half, measured slower — the lazy half ran twice
+    // per round.)
+    var half = 0
+    val auth = Materialize.iterate(keyed.select(col("__key").as("node")).distinct()
+      .select(col("node"), lit(1.0).as("__r")), 2 * iterations - 1) { raw =>
+      val s = l1(raw)
+      if (half == 0) require(s > 0, "hits: empty graph")
+      half += 1
+      if (half % 2 == 1) authorities(raw, s) else hubsOf(raw, s)
     }
     Materialize.handOff(auth) { auth =>
-      hubsOf(auth).localCheckpoint().join(auth, Seq("node"))
-        .select(col("node"), col("hub"), col("authority"))
+      val sa = l1(auth)
+      Materialize.handOff(Materialize.checkpoint(hubsOf(auth, sa))) { hub =>
+        normalized(hub, l1(hub), "hub")
+          .join(normalized(auth, sa, "authority").hint("shuffle_hash"), Seq("node"))
+          .select(col("node"), col("hub"), col("authority"))
+      }
     }
     }
   }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.Materialize.CheckpointSyntax
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -398,7 +400,7 @@ object Packing {
       .filter(col("__r") > col("__lo") && col("__r") <= col("__hi"))
       .select(col("doc_id"), col("__l").as("len"), col("step"),
         col("role"), (col("__r") - col("__lo")).as("slot"))
-      .localCheckpoint()
+      .checkpointed
     val pr = asg.filter(col("role") === "a")
       .select(col("step"), col("slot"), col("doc_id").as("__aid"),
         col("len").as("__alen"))

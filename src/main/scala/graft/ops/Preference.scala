@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Materialize
+import graft.Materialize.CheckpointSyntax
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -171,7 +172,7 @@ object Preference {
     Materialize.owning(strengths)(s => wins.join(s, Seq("item"))
       .select(col("item"), col("strength_micro"), col("n_wins"),
         col("n_games"))
-      .localCheckpoint())
+      .checkpointed)
     }}
   }
 }

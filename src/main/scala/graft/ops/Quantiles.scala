@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.Materialize.CheckpointSyntax
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -357,7 +359,7 @@ object Quantiles {
       .select(col(groupCol).as("__g"), col(valueCol).cast("long").as("__v"))
       .groupBy(col("__g"), col("__v"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .checkpointed
     val totals = counts.groupBy(col("__g")).agg(sum(col("__c")).as("__n"))
     val pairs = totals
       .select(col("__g").as("source_a"), col("__n").as("__na"))
@@ -578,7 +580,7 @@ object Quantiles {
       .select(col(colA).cast("string").as("__a"),
         col(colB).cast("string").as("__b"))
       .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__o"))
-      .localCheckpoint()
+      .checkpointed
     val ra = cells.groupBy(col("__a")).agg(sum(col("__o")).as("__ra"))
     val cb = cells.groupBy(col("__b")).agg(sum(col("__o")).as("__cb"))
     val nt = cells.agg(sum(col("__o")).as("__n"),
@@ -629,7 +631,7 @@ object Quantiles {
         valuePpm.cast("long").as("__v"))
       .groupBy(col("__g"))
       .agg(count(lit(1)).as("__n"), sum(col("__v")).as("__s"))
-      .localCheckpoint()
+      .checkpointed
     val tot = per.agg(sum(col("__n")).as("__tn"), sum(col("__s")).as("__ts"),
       count(lit(1)).as("__k"))
     val loo = when(col("__tn") > col("__n"),
@@ -640,7 +642,7 @@ object Quantiles {
     val base = per.crossJoin(broadcast(tot))
       .select(col("__g"), col("__n"), col("__k"),
         loo.as("__loo"), overall.as("__ov"))
-      .localCheckpoint()
+      .checkpointed
     val se = base
       .select(col("__k"),
         round(col("__loo") * lit(1e6)).cast("long").as("__tm"))

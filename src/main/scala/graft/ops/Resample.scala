@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.Materialize.CheckpointSyntax
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -326,7 +328,7 @@ object Resample {
         col("n_events").cast("long").as("__n"))
       .select(col(keyCol), col("__day"),
         expr("__sc * 1000000 DIV __n").as("__x"))
-      .localCheckpoint()
+      .checkpointed
     val params = daily.groupBy(col(keyCol))
       .agg(expr("sum(__x) DIV count(1)").as("__mu"))
       .select(col(keyCol), col("__mu"),

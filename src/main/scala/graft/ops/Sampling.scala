@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Materialize
+import graft.Materialize.CheckpointSyntax
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -295,7 +296,7 @@ object Sampling {
         explode(hashedNgramBuckets(col(textCol), buckets)).as("__b"))
       .groupBy(col(idCol), col("__tgt"), col("__b"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .checkpointed
     val tot = bc.agg(
       sum(when(col("__tgt"), col("__c")).otherwise(lit(0L))).as("__tt"),
       sum(col("__c")).as("__rr"))

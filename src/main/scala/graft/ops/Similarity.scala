@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Materialize
+import graft.Materialize.CheckpointSyntax
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -178,7 +179,7 @@ object Similarity {
         round(dotProduct(col("__av"), col("__bv")) /
           (col("__an") * col("__bn")), 6).as("sim"))
       .withColumn("__simm", round(col("sim") * 1e6).cast("long"))
-      .localCheckpoint()
+      .checkpointed
     val ka = graft.plans.TopK.perGroup(scored, Seq("a_id"),
       Seq(("sim", true), ("b_id", false)), k)
     val kb = graft.plans.TopK.perGroup(scored, Seq("b_id"),
@@ -194,7 +195,7 @@ object Similarity {
           (col("__sa") * col("__nb") + col("__sb") * col("__na"))
             .cast("double"), 6)
           .as("margin"))
-      .localCheckpoint()
+      .checkpointed
     val bestA = graft.plans.TopK.perGroup(mg, Seq("a_id"),
       Seq(("margin", true), ("b_id", false)), 1)
     val bestB = graft.plans.TopK.perGroup(mg, Seq("b_id"),
@@ -783,7 +784,7 @@ object Similarity {
       .join(broadcast(centroidSums), Seq("cluster"))
       .select(col("cluster"), col("n_members"), col("sum_vec_id"),
         col("inertia"), col("centroid_sum"))
-      .localCheckpoint(true)
+      .checkpointed
     }
   }
 
@@ -1068,7 +1069,7 @@ object Similarity {
     // it once rather than trusting exchange reuse to dedupe all three
     // subtrees (same CacheManager-free materialization rationale and
     // elastic-cluster caveat as TextAnalysis.termFrequencies)
-    val cells = assignCells(emb, centroids, vecCol, idCol).localCheckpoint()
+    val cells = assignCells(emb, centroids, vecCol, idCol).checkpointed
     // maxCell caps the PAIR-MINING side per cell (lowest ids win,
     // GroupedTopK bounded buffers) — the LSH maxBucket lesson, SemDeDup
     // edition: one degenerate mega-cell (a failed centroid, an

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Materialize
+import graft.Materialize.CheckpointSyntax
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -175,7 +176,7 @@ object TextAnalysis {
                         textCol: String = "text"): DataFrame = {
     val scored = qualityLogistic(docs, textCol, carryCols = Seq(groupCol))
       .select(col("doc_id"), col(groupCol), col("quality_prob"))
-      .localCheckpoint()
+      .checkpointed
     val good = scored.groupBy(groupCol)
       .agg(round(avg(col("quality_prob")), 6).as("__mq"))
       .filter(col("__mq") >= minMean)
@@ -607,7 +608,7 @@ object TextAnalysis {
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-    if (materialize) tf.localCheckpoint() else tf
+    if (materialize) tf.checkpointed else tf
   }
 
   /** TF-IDF top-k terms per document: tf = in-document term count, df =
@@ -1106,7 +1107,7 @@ object TextAnalysis {
             element_at(col("__t"), i + 1))))).as("__bg"))
     val tf = bigrams.groupBy(col(idCol), col("__bg"))
       .agg(count(lit(1)).as("__tf"))
-    if (materialize) tf.localCheckpoint() else tf
+    if (materialize) tf.checkpointed else tf
   }
 
   def bigramCrossEntropy(docs: DataFrame, idCol: String = "doc_id",
@@ -1240,7 +1241,7 @@ object TextAnalysis {
         round(-sum(col("__tf").cast("double") * col("__lnp")) /
           sum(col("__tf")).cast("double"), 6)
           .as("trigram_kn_cross_entropy"))
-      .localCheckpoint()
+      .checkpointed
     }}
   }
 
@@ -1346,7 +1347,7 @@ object TextAnalysis {
         round(-sum(col("__tf").cast("double") * col("__lnp")) /
           sum(col("__tf")).cast("double"), 6)
           .as("ref_trigram_kn_cross_entropy"))
-      .localCheckpoint()
+      .checkpointed
     }}}
   }
 
@@ -1510,7 +1511,7 @@ object TextAnalysis {
       .agg(sum(col("__tf")).as("n_ngrams"),
         round(-sum(col("__tf").cast("double") * col("__lnp")) /
           sum(col("__tf")).cast("double"), 6).as("kn_cross_entropy"))
-      .localCheckpoint()
+      .checkpointed
     }}
   }
 
@@ -1600,7 +1601,7 @@ object TextAnalysis {
         round(-sum(col("__tf").cast("double") * col("__lnp")) /
           sum(col("__tf")).cast("double"), 6)
           .as("ref_kn_cross_entropy"))
-      .localCheckpoint()
+      .checkpointed
     }}
   }
 
@@ -1825,7 +1826,7 @@ object TextAnalysis {
     // (the termFrequencies discipline)
     val cAll = counts.select(col("a").as("__a"), col("b").as("__b"),
         col("n").cast("long").as("n_cooc"))
-      .localCheckpoint()
+      .checkpointed
     val c = cAll.filter(col("n_cooc") >= minCount)
     val m = cAll.select(col("__a").as("__w"), col("n_cooc"))
       .unionAll(cAll.select(col("__b").as("__w"), col("n_cooc")))
@@ -1900,7 +1901,7 @@ object TextAnalysis {
           struct(col("b").as("x"), col("a").as("y"), col("w")))))
         .as("__e"))
       .select(col("__e.x").as("x"), col("__e.y").as("y"), col("__e.w"))
-      .localCheckpoint()
+      .checkpointed
     }
 
   def ppmiPowerIterationFromCounts(counts: DataFrame, minCount: Long = 5,
@@ -2006,7 +2007,7 @@ object TextAnalysis {
             .map { case (u, i) => u.withColumn("direction", lit(i + 1)) }
             .reduce(_ unionAll _)
             .select(col("word"), col("direction"), col("score_micro"))
-            .localCheckpoint()
+            .checkpointed
         else {
           // scalars for deflating the NEXT directions
           val a = edges
@@ -2099,7 +2100,7 @@ object TextAnalysis {
           s => graft.functions.md5Hash31(s))).as("__g"))
       .select(col(idCol), col("__ref"), col("__g"))
       .distinct()
-      .localCheckpoint()
+      .checkpointed
     val refGrams = grams.filter(col("__ref"))
       .select(col("__g")).distinct()
       .withColumn("__seen", lit(1))
@@ -2501,7 +2502,7 @@ object TextAnalysis {
       .select(col("__src"), unit.as("__term"))
       .groupBy(col("__src"), col("__term"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .checkpointed
     val totals = tf.groupBy(col("__src")).agg(sum(col("__c")).as("__n"))
     val pairs = totals
       .select(col("__src").as("source_a"), col("__n").as("__na"))
@@ -2743,7 +2744,7 @@ object TextAnalysis {
           .as("__s"))
       .select(col("batch"), graft.functions.md5Hash31(col("__s")).as("__h"))
       .distinct()
-      .localCheckpoint()
+      .checkpointed
     val firstSeen = shingled.groupBy(col("__h"))
       .agg(min(col("batch")).as("__fb"))
     val present = shingled.groupBy(col("batch"))
@@ -2788,7 +2789,7 @@ object TextAnalysis {
         explode(tokens(col(textCol))).as("term"))
       .groupBy(col("source"), col("term"))
       .agg(count(lit(1)).as("__ysw"))
-      .localCheckpoint()
+      .checkpointed
     val yw = tf.groupBy(col("term")).agg(sum(col("__ysw")).as("__yw"))
     val ns = tf.groupBy(col("source")).agg(sum(col("__ysw")).as("__ns"))
     val ntot = tf.agg(sum(col("__ysw")).as("__N"))
@@ -2865,7 +2866,7 @@ object TextAnalysis {
             lit((bins - 1).toLong))).as("__b"))
     val cAll = binned.groupBy(col("feature"), col("__b"), col("__y"))
       .agg(count(lit(1)).as("__nby"))
-      .localCheckpoint()
+      .checkpointed
     val nNull = cAll.filter(col("__b").isNull).groupBy(col("feature"))
       .agg(sum(col("__nby")).as("__nnull"))
     val c = cAll.filter(col("__b").isNotNull)
@@ -2909,7 +2910,7 @@ object TextAnalysis {
                                  labelCol: String,
                                  bins: Int = 10): DataFrame = {
     val sc = scored.select(col(probCol).as("__p"),
-      col(labelCol).cast("long").as("__y")).localCheckpoint()
+      col(labelCol).cast("long").as("__y")).checkpointed
     val roc = rocPrReport(sc, "__p", "__y")
     val ece = calibrationBins(sc, "__p", "__y", bins)
       .agg(sum(col("n_docs")).as("__nd"),

@@ -57,6 +57,85 @@ object ColumnBridge {
       case _ =>
     }
 
+  /** `df.localCheckpoint()` whose relation keeps the hash partitioning
+    * that `df`'s executed plan really produced, so a later join or
+    * aggregate on that key plans no exchange for it. Under AQE a
+    * checkpoint otherwise reports `UnknownPartitioning(0)` (the adaptive
+    * root declares none) and every consumer re-shuffles it.
+    *
+    * The claim is never false: the executed plan's output partitioning
+    * is kept only if it is a `HashPartitioning` over the frame's own
+    * columns whose partition count equals the checkpointed RDD's, and no
+    * shuffle read in the plan's last stage was coalesced, split or read
+    * locally by AQE (a coalesced read still reports a hash partitioning,
+    * but over merged hash buckets). Otherwise the checkpoint is returned
+    * as `localCheckpoint` builds it.
+    *
+    * Caveat: a declared partitioning keeps its expression ids in
+    * `RDDScanExec`'s canonical form, so two self-join copies of such a
+    * checkpoint no longer canonicalise alike and an exchange above them is
+    * not reused (`ReusedExchange`) — a plan that relied on that reuse runs
+    * the shared subtree twice.
+    */
+  def localCheckpointKeepingPartitioning(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeSet
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection}
+    import org.apache.spark.sql.execution.{CoalescedPartitionSpec, LogicalRDD, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, ResultQueryStageExec}
+    val checkpoint = df.localCheckpoint()
+    val finalPlan: Option[SparkPlan] = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec if a.isFinalPlan => Some(a.executedPlan match {
+        case r: ResultQueryStageExec => r.plan
+        case p => p
+      })
+      case _: AdaptiveSparkPlanExec => None
+      case p => Some(p)
+    }
+    def reshaped(p: SparkPlan): Boolean = p.exists {
+      case r: AQEShuffleReadExec => r.partitionSpecs.zipWithIndex.exists {
+        case (CoalescedPartitionSpec(start, end, _), i) => start != i || end != i + 1
+        case _ => true
+      }
+      case _ => false
+    }
+    def leaves(p: Partitioning): Seq[Partitioning] = p match {
+      case c: PartitioningCollection => c.partitionings.flatMap(leaves)
+      case other => Seq(other)
+    }
+    checkpoint.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        val columns = AttributeSet(lr.output)
+        val kept = finalPlan.filterNot(reshaped).toSeq
+          .flatMap(p => leaves(p.outputPartitioning))
+          .collect {
+            case h: HashPartitioning if h.numPartitions == lr.rdd.getNumPartitions &&
+              h.references.nonEmpty && h.references.subsetOf(columns) => h
+          }
+        kept match {
+          case Seq() => checkpoint
+          case hs =>
+            // every key it is hashed by (a projection that copies the key
+            // under a second name is hashed by both)
+            val partitioning = if (hs.size == 1) hs.head else PartitioningCollection(hs)
+            // makeCopy carries the relation's session, stats and constraints
+            ofRows(df.sparkSession, lr.makeCopy(Array(lr.output, lr.rdd, partitioning,
+              lr.outputOrdering, Boolean.box(lr.isStreaming), lr.stream)))
+        }
+      case _ => checkpoint
+    }
+  }
+
+  /** Run `f` over each partition of `df`'s rows and return the results in
+    * partition order: one Spark job, at most #partitions values to the
+    * driver. For scalar reductions that would otherwise cost an AQE
+    * partial/final pair (two jobs).
+    */
+  def foldPartitions[T: scala.reflect.ClassTag](df: org.apache.spark.sql.DataFrame)(
+      f: Iterator[org.apache.spark.sql.catalyst.InternalRow] => T): Seq[T] =
+    df.queryExecution.toRdd.mapPartitions(rows => Iterator.single(f(rows)))
+      .collect().toSeq
+
   /** Block until Spark's listener bus has delivered every queued event
     * (`listenerBus` is `private[spark]`). Executed-plan capture through a
     * QueryExecutionListener is asynchronous; plan-shape gates over

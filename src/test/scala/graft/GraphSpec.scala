@@ -91,6 +91,34 @@ class GraphSpec extends SparkSpec {
     assert(plain == ppr)
   }
 
+  test("personalizedPageRank matches a driver-side reference implementation exactly") {
+    // teleport and dangling mass go to the source set only; "zz" is not a
+    // node and is ignored; d dangles, e is reachable only through c
+    val es = Seq(("a", "b", 2L), ("b", "c", 1L), ("c", "a", 1L),
+      ("a", "c", 1L), ("c", "d", 2L), ("c", "e", 3L), ("e", "b", 1L))
+    val srcs = Set("a", "d", "zz")
+    val iters = 7; val damping = 0.85
+    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    val insrc = nodes.filter(srcs.contains).toSet
+    val n = insrc.size
+    val outdeg = es.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+    def rnd(x: Double) = BigDecimal(x)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    var rank = nodes.map(v => v -> rnd(if (insrc(v)) 1.0 / n else 0.0)).toMap
+    val base = (1.0 - damping) / n
+    for (_ <- 1 to iters) {
+      val dm = nodes.filterNot(outdeg.contains).map(rank).sum
+      val contrib = es.groupBy(_._2).view.mapValues(
+        _.map(e => rank(e._1) * (e._3.toDouble / outdeg(e._1))).sum).toMap
+      rank = nodes.map(v => v -> rnd((if (insrc(v)) base else 0.0) +
+        damping * (contrib.getOrElse(v, 0.0) + (if (insrc(v)) dm / n else 0.0)))).toMap
+    }
+    val got = Graph.personalizedPageRank(es.toDF("src", "dst", "weight"),
+      srcs.toSeq.toDF("node"), iterations = iters, damping = damping)
+      .as[(String, Double)].collect().toMap
+    assert(got == rank, s"got=$got expected=$rank")
+  }
+
   test("personalizedPageRank rejects a teleport set disjoint from the graph") {
     val edges = Seq(("a", "b", 1L)).toDF("src", "dst", "weight")
     val e = intercept[IllegalArgumentException] {
@@ -269,5 +297,32 @@ class GraphSpec extends SparkSpec {
     assert(got("a") == ((0.0, 0.333333)))
     assert(got("b") == ((0.0, 0.333333)))
     assert(got("c") == ((0.0, 0.333333)))
+  }
+
+  test("hits matches a driver-side reference implementation exactly") {
+    // both scores start at 1/n for the hub side, every raw sum and every
+    // normalised score is rounded to 6 decimals, as in hitsOracleSql
+    val es = Seq(("a", "b", 2L), ("b", "c", 1L), ("c", "a", 1L),
+      ("a", "c", 1L), ("c", "d", 2L), ("e", "d", 1L), ("e", "b", 3L))
+    val iters = 4
+    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    def rnd(x: Double) = BigDecimal(x)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def l1(raw: Map[String, Double]) = {
+      val s = nodes.map(raw).sum
+      raw.map { case (v, r) => v -> rnd(r / s) }
+    }
+    var hub = nodes.map(_ -> rnd(1.0 / nodes.length)).toMap
+    var auth = Map.empty[String, Double]
+    for (_ <- 1 to iters) {
+      auth = l1(nodes.map(v => v -> rnd(
+        es.filter(_._2 == v).map(e => hub(e._1) * e._3).sum)).toMap)
+      hub = l1(nodes.map(v => v -> rnd(
+        es.filter(_._1 == v).map(e => auth(e._2) * e._3).sum)).toMap)
+    }
+    val got = Graph.hits(es.toDF("src", "dst", "weight"), iterations = iters)
+      .as[(String, Double, Double)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(got == nodes.map(v => v -> ((hub(v), auth(v)))).toMap, s"got=$got")
   }
 }
