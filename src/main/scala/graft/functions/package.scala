@@ -31,6 +31,14 @@ package object functions {
   def driverScalar(value: Double): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(DriverScalar(value))
 
+  /** A broadcast catalyst value of type `dataType` as a plan constant
+    * ([[DriverConstant]]): tasks carry the broadcast's reference, and a
+    * new value of the same type reuses the compiled classes.
+    */
+  def driverConstant(value: org.apache.spark.broadcast.Broadcast[Any],
+                     dataType: org.apache.spark.sql.types.DataType): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(DriverConstant(value, dataType))
+
   /** Jaro–Winkler similarity of two string columns (codegen'd; DuckDB
     * `jaro_winkler_similarity` semantics — see JaroWinklerImpl).
     */

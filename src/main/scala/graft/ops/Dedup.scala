@@ -213,8 +213,12 @@ object Dedup {
                                  name: String, shingleK: Int,
                                  numPerm: Int, bands: Int): Unit =
     if (spark.catalog.tableExists(s"${name}_params")) {
-      val r = spark.table(s"${name}_params").head()
-      val (sk, np, b) = (r.getInt(0), r.getInt(1), r.getInt(2))
+      // the params row stays on the driver (IndexHandles), so a probe or
+      // an append runs no job for it
+      val (sk, np, b) = IndexHandles.cachedTable(spark, s"${name}_params") { params =>
+        val r = params.head
+        (r.getAs[Int]("shingle_k"), r.getAs[Int]("num_perm"), r.getAs[Int]("bands"))
+      }
       require((shingleK == sk || sk == -1 || shingleK == -1) &&
         numPerm == np && bands == b,
         s"index '$name' was built with (shingleK=$sk, numPerm=$np, " +

@@ -2,7 +2,10 @@ package graft.ops
 
 import graft.Materialize
 import graft.Materialize.CheckpointSyntax
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -1186,12 +1189,12 @@ object Similarity {
     * instead of their raw floats. At corpus scale the searched state is
     * cells × codes: the cell join prunes partitions, the codebook is a
     * one-row broadcast, and ADC reads m small ints per candidate — the
-    * raw vectors never leave their executors. (This tier encodes RAW
-    * vectors; classic IVF-PQ encodes residuals v − cell_centroid for
-    * tighter quantization — same machinery, one extra subtraction, left
-    * as the documented refinement.) ADC distances are rounded to 6
-    * BEFORE the (distance, id) ranking so the selected top-k is
-    * cross-engine deterministic.
+    * raw vectors never leave their executors. This tier encodes RAW
+    * vectors; [[ivfPqResidualTopK]] is the classic residual encoding
+    * (v − cell_centroid), and [[buildIvfPqIndex]] persists either
+    * (`residual`). ADC distances are rounded to 6 BEFORE the
+    * (distance, id) ranking so the selected top-k is cross-engine
+    * deterministic.
     */
   def ivfPqTopK(emb: DataFrame, cellCentroids: DataFrame, codebook: DataFrame,
                 queryId: Long, k: Int, nProbe: Int = 2, m: Int = 4,
@@ -1307,9 +1310,10 @@ object Similarity {
     *                    (validated 0..k−1 at build; storing it makes the
     *                    index self-contained — search can never score
     *                    against a drifted codebook);
-    *   - `meta/`      — one row (m, residual): the index is
-    *                    self-describing, so the search tier cannot be
-    *                    called with mismatched encode parameters.
+    *   - `meta/`      — one row (m, residual, codes_schema): the index
+    *                    is self-describing, so the search tier cannot be
+    *                    called with mismatched encode parameters, and its
+    *                    codes read with no schema job even when emptied.
     *
     * `residual = true` encodes [[cellResiduals]] (v − cell_centroid) —
     * classic FAISS IVF-PQ — in which case `codebook` must hold
@@ -1333,7 +1337,12 @@ object Similarity {
       col("centroid").cast("array<double>").as("centroid")), s"$path/codebook")
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.io.IO.writeDir(Seq((m, residual)).toDF("m", "residual"), s"$path/meta")
+    // the codes schema as a read sees it (partition column last), so the
+    // codes stay readable with no schema job, emptied or not
+    val codesSchema = StructType(
+      codes.schema.filterNot(_.name == "cell_id") :+ StructField("cell_id", IntegerType))
+    graft.io.IO.writeDir(Seq((m, residual, codesSchema.json))
+      .toDF("m", "residual", "codes_schema"), s"$path/meta")
   }
 
   /** assign → (optionally residual-ize) → PQ-encode: the ONE encode
@@ -1384,21 +1393,18 @@ object Similarity {
                          indexPath: String, newEmb: DataFrame,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): Unit = {
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val m = meta.getAs[Int]("m")
-    val residual = meta.getAs[Boolean]("residual")
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val codebook = spark.read.parquet(s"$indexPath/codebook")
+    val h = ivfPqHandle(spark, indexPath)
     // materialized: consumed by the touched-cell collect, the anti-join,
     // and the overwrite — and it must be computed BEFORE the write starts
     // rewriting the directory it logically derives nothing from (the new
     // codes never read the codes dir, but the merge below does)
-    Materialize.using(encodeCodes(newEmb, centroids, codebook, m, residual,
-      idCol, vecCol, "appendToIvfPqIndex")) { newCodes =>
+    Materialize.using(encodeCodes(newEmb, h.centroidFrame(spark),
+      h.codebookFrame(spark), h.m, h.residual, idCol, vecCol,
+      "appendToIvfPqIndex")) { newCodes =>
     val touched: Seq[Int] = newCodes.select("cell_id").distinct()
       .collect().map(_.getInt(0)).toSeq
     if (touched.nonEmpty) {
-      val existing = spark.read.parquet(s"$indexPath/codes")
+      val existing = ivfPqCodes(spark, indexPath, h)
         .filter(col("cell_id").isin(touched: _*)) // partition-pruned read
         .join(newCodes.select(col(idCol)), Seq(idCol), "left_anti") // upsert
         .select(col(idCol), col("cell_id"), col("codes"))
@@ -1429,14 +1435,15 @@ object Similarity {
   def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String, deleteIds: DataFrame,
                            idCol: String = "vec_id"): Unit = {
+    val codes = ivfPqCodes(spark, indexPath, ivfPqHandle(spark, indexPath))
     Materialize.using(deleteIds.select(col(idCol)).distinct()) { ids =>
-    val touched: Seq[Int] = spark.read.parquet(s"$indexPath/codes")
+    val touched: Seq[Int] = codes
       .join(broadcast(ids), Seq(idCol), "left_semi")
       .select("cell_id").distinct()
       .collect().map(_.getInt(0)).toSeq
     // consumed twice: emptied-cell check + write
     if (touched.nonEmpty) Materialize.using(
-      spark.read.parquet(s"$indexPath/codes")
+      codes
         .filter(col("cell_id").isin(touched: _*)) // partition-pruned read
         .join(broadcast(ids), Seq(idCol), "left_anti")
         .select(col(idCol), col("cell_id"), col("codes"))) { remaining =>
@@ -1472,7 +1479,8 @@ object Similarity {
     */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String): Unit =
-    compactPartitionedDir(spark, s"$indexPath/codes")
+    compactPartitionedDir(spark, s"$indexPath/codes",
+      ivfPqCodes(spark, indexPath, ivfPqHandle(spark, indexPath)))
 
   /** [[compactIvfPqIndex]] for the FLAT index ([[buildIvfIndex]], whose
     * partitioned directory is the index path itself) — same fragmenting
@@ -1480,18 +1488,18 @@ object Similarity {
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String): Unit =
-    compactPartitionedDir(spark, indexPath)
+    compactPartitionedDir(spark, indexPath, spark.read.parquet(indexPath))
 
   /** The shared staging + rename-swap compaction over any
-    * cell_id-partitioned directory (see [[compactIvfPqIndex]]'s scaladoc
-    * for why never overwrite-in-place).
+    * cell_id-partitioned directory `src`, read as `current` (see
+    * [[compactIvfPqIndex]]'s scaladoc for why never overwrite-in-place).
     */
   private def compactPartitionedDir(spark: org.apache.spark.sql.SparkSession,
-                                    src: String): Unit = {
+                                    src: String, current: DataFrame): Unit = {
     val staging = s"${src}_compacting"
     val retired = s"${src}_retired"
     graft.io.IO.writeDir(
-      spark.read.parquet(src).repartition(col("cell_id")),
+      current.repartition(col("cell_id")),
       staging, partitionBy = Seq("cell_id"))
     val fs = new org.apache.hadoop.fs.Path(src)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1531,46 +1539,34 @@ object Similarity {
     * identical semantics (same routing, same ADC, same round-before-rank),
     * but NOTHING corpus-sized is recomputed — the query's nProbe cells are
     * collected first (nProbe ints), so the codes scan is statically
-    * partition-pruned to those directories, the codebook/centroids are
-    * tiny index-side reads, and ADC scores the STORED codes (no
-    * re-encode). The only touch of `emb` is the 1-row query lookup.
-    * m and the raw-vs-residual encoding come from the index's own meta.
+    * partition-pruned to those directories, and ADC scores the STORED
+    * codes (no re-encode). m, the raw-vs-residual encoding, the centroids
+    * and the codebook come from the index's driver-side handle
+    * ([[IndexHandles]]); the only touch of `emb` is the 1-row query
+    * lookup.
     */
   def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String, emb: DataFrame, queryId: Long,
                        k: Int, nProbe: Int = 2,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val m = meta.getAs[Int]("m")
-    val residual = meta.getAs[Boolean]("residual")
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
+    val h = ivfPqHandle(spark, indexPath)
     val q = emb.filter(col(idCol) === queryId)
       .select(col(vecCol).cast("array<double>").as("__p"))
-    val probeCells: Seq[Int] = nearestCells(centroids, q, nProbe)
+    val routed = q.select(explode(h.route(col("__p"), nProbe)).as("__r"))
+      .select(col("__r.cell_id").as("cell_id"), col("__r.ref").as("__ref"))
+    val probeCells: Seq[Int] = routed.select("cell_id")
       .collect().toSeq.map(_.getInt(0))
-    val codes = spark.read.parquet(s"$indexPath/codes")
+    val codes = ivfPqCodes(spark, indexPath, h)
       .filter(col("cell_id").isin(probeCells: _*)) // static partition pruning
       .filter(col(idCol) =!= queryId)
-    val cb = pqCodebook(spark.read.parquet(s"$indexPath/codebook"))
     // the ADC reference: the query itself (raw codes), or the query's
     // residual in each probed cell (residual codes) — an nProbe-row
     // broadcast, exactly ivfPqResidualTopK's decomposition
     val ref =
-      if (residual)
-        codes.join(broadcast(
-          centroids.filter(col("cell_id").isin(probeCells: _*))
-            .crossJoin(broadcast(q))
-            .select(col("cell_id"),
-              zip_with(col("__p"), col("centroid"), (a, b) => a - b)
-                .as("__ref"))), "cell_id")
-      else
-        codes.crossJoin(broadcast(q.select(col("__p").as("__ref"))))
-    ref.crossJoin(broadcast(cb))
-      .withColumn("__sub", pqSubLen(col("__ref"), m, "ivfPqTopKIndexed"))
-      .select(col(idCol),
-        round(pqAdc(col("__ref"), col("__cents"), col("codes"), m,
-          col("__sub")), 6).as("adc_dist"))
+      if (h.residual) codes.join(broadcast(routed), "cell_id")
+      else codes.crossJoin(broadcast(q.select(col("__p").as("__ref"))))
+    ref.select(col(idCol), h.adc(col("__ref"), "ivfPqTopKIndexed"))
       .orderBy(col("adc_dist"), col(idCol))
       .limit(k)
   }
@@ -1611,48 +1607,130 @@ object Similarity {
   }
 
   /** Batch PQ search over the PERSISTED index ([[buildIvfPqIndex]]):
-    * [[ivfTopKBatch]]'s one-pass shape applied to stored codes. All
-    * probes route together (distributed — no driver collect of probe
-    * cells, so no static partition pruning; instead the cell_id equi-join
-    * against the broadcast routing table prunes dynamically), and the ADC
-    * reference per (probe, cell) — the probe vector raw, or the probe's
-    * residual in that cell — is carried ON the routing table, so the
-    * residual decomposition costs one zip_with over Q·nProbe broadcast
-    * rows. One scan of the codes, one equi-join, GroupedTopK finish.
+    * [[ivfTopKBatch]]'s one-pass shape applied to stored codes. Each
+    * probe row selects its own nProbe cells from the handle's centroid
+    * constant ([[IvfPqHandle.route]]: round-6 cosine descending, then
+    * cell_id ascending — the [[nearestCells]] order), so routing is a
+    * per-row projection with no centroid cross join and no exchange. The
+    * ADC reference per (probe, cell) — the probe vector raw, or the
+    * probe's residual in that cell — rides on the routed rows, which are
+    * the broadcast side of one cell_id equi-join against the codes (no
+    * driver collect of probe cells, so the join prunes dynamically). ADC
+    * scores against the codebook constant; GroupedTopK finishes. On a
+    * warm handle a call runs the routing broadcast and the codes scan's
+    * two stages, and no schema, meta or codebook job.
     */
   def ivfPqTopKBatch(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, emb: DataFrame, probeFilter: Column,
                      k: Int, nProbe: Int = 2,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val m = meta.getAs[Int]("m")
-    val residual = meta.getAs[Boolean]("residual")
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val probes = emb.filter(probeFilter)
+    val h = ivfPqHandle(spark, indexPath)
+    val routed = emb.filter(probeFilter)
       .select(col(idCol).as("probe_id"),
-        col(vecCol).cast("array<double>").as("__pv"))
-    val routed = probes
-      .crossJoin(broadcast(centroids.select(col("cell_id"), col("centroid"))))
-      .select(col("probe_id"), col("__pv"), col("cell_id"), col("centroid"),
-        round(cosineSimilarity(col("centroid"), col("__pv")), 6).as("__csim"))
-    val probeCells = graft.plans.TopK.perGroup(routed, Seq("probe_id"),
-      Seq(("__csim", true), ("cell_id", false)), nProbe)
-      .select(col("probe_id"), col("cell_id"),
-        (if (residual) zip_with(col("__pv"), col("centroid"), (a, b) => a - b)
-         else col("__pv")).as("__ref"))
-    val codes = spark.read.parquet(s"$indexPath/codes")
-    val cb = pqCodebook(spark.read.parquet(s"$indexPath/codebook"))
-    val scored = codes.join(broadcast(probeCells), Seq("cell_id"))
+        explode(h.route(col(vecCol).cast("array<double>"), nProbe)).as("__r"))
+      .select(col("probe_id"), col("__r.cell_id").as("cell_id"),
+        col("__r.ref").as("__ref"))
+    val scored = ivfPqCodes(spark, indexPath, h)
+      .join(broadcast(routed), Seq("cell_id"))
       .filter(col(idCol) =!= col("probe_id"))
-      .crossJoin(broadcast(cb))
-      .withColumn("__sub", pqSubLen(col("__ref"), m, "ivfPqTopKBatch"))
-      .select(col("probe_id"), col(idCol),
-        round(pqAdc(col("__ref"), col("__cents"), col("codes"), m,
-          col("__sub")), 6).as("adc_dist"))
+      .select(col("probe_id"), col(idCol), h.adc(col("__ref"), "ivfPqTopKBatch"))
     graft.plans.TopK.perGroup(scored, Seq("probe_id"),
       Seq(("adc_dist", false), (idCol, false)), k)
   }
+
+  /** The driver-side handle of a persisted IVF-PQ index
+    * ([[IndexHandles]], fingerprinted over `meta/`, `centroids/` and
+    * `codebook/`): m, the encoding, the codes schema, and the centroid
+    * table and codebook as rows (for the append's encode) and as plan
+    * constants (for routing and ADC). The codebook is validated once, on
+    * the driver, with [[pqCodebook]]'s rule and message.
+    */
+  private final case class IvfPqHandle(
+      m: Int, residual: Boolean, codesSchema: StructType,
+      centroidRows: Seq[Row], centroidSchema: StructType,
+      codebookRows: Seq[Row], codebookSchema: StructType,
+      centroids: Column, codebook: Column, codebookWidth: Column) {
+
+    def centroidFrame(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      spark.createDataFrame(centroidRows.asJava, centroidSchema)
+    def codebookFrame(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      spark.createDataFrame(codebookRows.asJava, codebookSchema)
+
+    /** `pv`'s nProbe cells as (cell_id, ref) structs ([[routeCells]]). */
+    def route(pv: Column, nProbe: Int): Column =
+      routeCells(centroids, pv, nProbe, residual)
+
+    /** The rounded ADC distance of the row's `codes` from `ref`. */
+    def adc(ref: Column, who: String): Column =
+      round(pqAdc(ref, codebook, col("codes"), m,
+        pqSubLen(ref, m, who, codebookWidth)), 6).as("adc_dist")
+  }
+
+  private val CentroidsType = ArrayType(StructType(Seq(
+    StructField("cell_id", IntegerType), StructField("centroid", ArrayType(DoubleType)))))
+  private val CodebookType = ArrayType(StructType(Seq(
+    StructField("cid", IntegerType), StructField("c", ArrayType(DoubleType)))))
+
+  /** Each row's nProbe cells from a centroid constant (array of
+    * (cell_id int, centroid array<double>)), in [[nearestCells]]' order:
+    * round-6 cosine descending — NaN first, as a descending sort puts it
+    * — then cell_id ascending. Returns (cell_id, ref) structs, ref being
+    * `pv` itself or, for residual codes, `pv` minus the cell's centroid.
+    */
+  private[graft] def routeCells(centroids: Column, pv: Column, nProbe: Int,
+                                residual: Boolean): Column = {
+    // one descending sort over (similarity, −cell_id) is (sim desc,
+    // cell_id asc) with Spark's double order, NaN included
+    val ranked = sort_array(transform(centroids, c => struct(
+      round(cosineSimilarity(c.getField("centroid"), pv), 6).as("sim"),
+      (-c.getField("cell_id").cast("long")).as("neg_cell"),
+      c.getField("centroid").as("centroid"))), asc = false)
+    transform(slice(ranked, 1, nProbe), r => struct(
+      (-r.getField("neg_cell")).cast("int").as("cell_id"),
+      (if (residual) zip_with(pv, r.getField("centroid"), (a, b) => a - b)
+       else pv).as("ref")))
+  }
+
+  private def ivfPqHandle(spark: org.apache.spark.sql.SparkSession,
+                          path: String): IvfPqHandle = {
+    val dirs = Seq("meta", "centroids", "codebook").map(d => s"$path/$d")
+    IndexHandles.cached(spark, s"ivf-pq $path", dirs) { files =>
+      val Seq(metaFiles, centroidFiles, codebookFiles) = dirs.map(files)
+      require(metaFiles.nonEmpty, s"no IVF-PQ index at $path: meta/ holds no data")
+      val meta = ColumnBridge.readParquetOnDriver(spark, metaFiles)._2.head
+      val codesSchema =
+        if (meta.schema.fieldNames.contains("codes_schema"))
+          DataType.fromJson(meta.getAs[String]("codes_schema")).asInstanceOf[StructType]
+        else spark.read.parquet(s"$path/codes").schema // written before it was recorded
+      def rows(files: Seq[org.apache.hadoop.fs.FileStatus], id: String) = {
+        val (schema, rs) = ColumnBridge.readParquetOnDriver(spark, files)
+        (rs.sortBy(_.getAs[Number](id).longValue), schema)
+      }
+      val (cents, centSchema) = rows(centroidFiles, "cell_id")
+      val (cb, cbSchema) = rows(codebookFiles, "cid")
+      val cids = cb.map(_.getAs[Int]("cid"))
+      val (mn, mx) =
+        if (cids.isEmpty) ("null", "null") else (cids.min.toString, cids.max.toString)
+      require(mn == "0" && mx == (cids.size - 1).toString && cids.distinct.size == cids.size,
+        s"PQ codebook cids must be distinct and contiguous 0..k-1, got k=${cids.size} " +
+          s"range [$mn, $mx]")
+      val widths = cb.map(_.getAs[Seq[Double]]("centroid").size).distinct
+      IvfPqHandle(meta.getAs[Int]("m"), meta.getAs[Boolean]("residual"), codesSchema,
+        cents, centSchema, cb, cbSchema,
+        IndexHandles.constant(spark, cents.map(r =>
+          Row(r.getAs[Number]("cell_id").intValue, r.getAs[Seq[Double]]("centroid"))),
+          CentroidsType),
+        IndexHandles.constant(spark, cb.map(r =>
+          Row(r.getAs[Int]("cid"), r.getAs[Seq[Double]]("centroid"))), CodebookType),
+        driverScalar(if (widths.size == 1) widths.head else -1).cast("int"))
+    }
+  }
+
+  /** A persisted IVF-PQ index's codes, read with the handle's schema. */
+  private def ivfPqCodes(spark: org.apache.spark.sql.SparkSession, path: String,
+                         h: IvfPqHandle): DataFrame =
+    spark.read.schema(h.codesSchema).parquet(s"$path/codes")
 
   /** Batch two-stage refined search: [[ivfPqTopKBatch]] shortlists every
     * probe from stored codes in ONE pass, then a single exact-cosine
@@ -1873,14 +1951,16 @@ object Similarity {
     * drop the last size % m dims from BOTH encode and ADC (quietly wrong
     * distances) — and the codebook-width guard: a centroid shorter than
     * the vector makes [[subDist]]'s zip_with pad with null, so every
-    * distance and argmin code would be NULL. Reads the crossed-in
-    * codebook's `__clen` ([[pqCodebook]]).
+    * distance and argmin code would be NULL. `clen` is the codebook's
+    * common centroid length, −1 when they differ: the crossed-in
+    * `__clen` ([[pqCodebook]]) or an index handle's.
     */
-  private def pqSubLen(v: Column, m: Int, who: String): Column =
-    when(col("__clen") =!= size(v), raise_error(concat(
+  private def pqSubLen(v: Column, m: Int, who: String,
+                       clen: Column = col("__clen")): Column =
+    when(clen =!= size(v), raise_error(concat(
         lit(s"$who: PQ codebook centroids must have the vector dim "),
         size(v).cast("string"), lit(", got length "),
-        col("__clen").cast("string"))).cast("int"))
+        clen.cast("string"))).cast("int"))
       .when(pmod(size(v), lit(m)) === 0, (size(v) / m).cast("int"))
       .otherwise(raise_error(concat(
         lit(s"$who: vector dim not divisible by m=$m, got "),

@@ -685,30 +685,33 @@ object TextAnalysis {
     val totRow = tf.agg(coalesce(sum(col("tf")), lit(0L)).cast("double")
       .as("__tot"))
     val qtf = tf.filter(col("term").isin(queryTerms: _*))
-    bm25ScoreTail(qtf, dl, nRow, totRow, topK, k1, b, idCol)
+    bm25ScoreTail(qtf, dl,
+      _.crossJoin(broadcast(nRow)).crossJoin(broadcast(totRow)),
+      col("__n"), col("__tot"), topK, k1, b, idCol)
   }
 
   /** The BM25 scoring tail shared by the inline ranker and the persisted
     * index search — ONE definition of the score expression, so the two
     * tiers cannot drift (the tier-equivalence oracle depends on it).
     * `qtf` = (idCol, term, tf) restricted to the query terms; `dl` =
-    * (idCol, __dl); `nRow`/`totRow` = broadcastable 1-row doubles.
+    * (idCol, __dl); `n`/`tot` = the doubles N and total tokens, which
+    * `withMoments` brings into the joined frame (the inline tier's
+    * broadcast 1-row aggregates; the index's driver scalars need nothing).
     */
-  private def bm25ScoreTail(qtf: DataFrame, dl: DataFrame, nRow: DataFrame,
-                            totRow: DataFrame, topK: Int, k1: Double,
+  private def bm25ScoreTail(qtf: DataFrame, dl: DataFrame,
+                            withMoments: DataFrame => DataFrame,
+                            n: Column, tot: Column, topK: Int, k1: Double,
                             b: Double, idCol: String): DataFrame = {
     val dfRel = qtf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val scored = qtf
+    val scored = withMoments(qtf
       .join(dl, idCol)
-      .join(broadcast(dfRel), "term")
-      .crossJoin(broadcast(nRow))
-      .crossJoin(broadcast(totRow))
+      .join(broadcast(dfRel), "term"))
       .select(col(idCol),
-        (log(lit(1.0) + (col("__n") - col("df") + lit(0.5)) /
+        (log(lit(1.0) + (n - col("df") + lit(0.5)) /
             (col("df") + lit(0.5))) *
           (col("tf") * lit(k1 + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * col("__dl") / (col("__tot") / col("__n"))))).as("__s"))
+            lit(b) * col("__dl") / (tot / n)))).as("__s"))
       .groupBy(col(idCol))
       .agg(round(sum(col("__s")), 6).as("bm25"))
     scored.orderBy(col("bm25").desc, col(idCol)).limit(topK)
@@ -824,13 +827,13 @@ object TextAnalysis {
         .select(col(idCol), coalesce(col("__tf"), lit(0L)).as("__dl"))
       graft.io.IO.appendBucketed(dl, s"${name}_docstats")
       fenceCheck()
-      val old = spark.table(s"${name}_meta").head()
+      val (nDocs, totalTf) = bm25Moments(spark, name)
       val delta = fresh.agg(countDistinct(col(idCol)).as("nd"))
         .crossJoin(tf.agg(coalesce(sum(col("tf")), lit(0L)).as("tt"))).head()
       writeBm25Meta(spark, name, path,
         spark.range(1).select(
-          lit(old.getLong(0) + delta.getLong(0)).as("n_docs"),
-          lit(old.getLong(1) + delta.getLong(1)).as("total_tf")))
+          lit(nDocs + delta.getLong(0)).as("n_docs"),
+          lit(totalTf + delta.getLong(1)).as("total_tf")))
     }
     }
   }
@@ -897,9 +900,20 @@ object TextAnalysis {
     !present
   }
 
+  /** The stored global moments (n_docs, total_tf) of a BM25 index, kept
+    * on the driver ([[IndexHandles]], fingerprinted over the `_meta`
+    * table's files, which every writer and the crash recovery rewrite).
+    */
+  private def bm25Moments(spark: org.apache.spark.sql.SparkSession,
+                          name: String): (Long, Long) =
+    IndexHandles.cachedTable(spark, s"${name}_meta") { meta =>
+      (meta.head.getAs[Long]("n_docs"), meta.head.getAs[Long]("total_tf"))
+    }
+
   /** BM25 search over the persisted index: postings pruned to the query
-    * terms' buckets, stored doc lengths, stored global moments — no
-    * tokenize, no corpus scan on the search path.
+    * terms' buckets, stored doc lengths, stored global moments (driver
+    * scalars from the index handle) — no tokenize, no corpus scan, and no
+    * meta read on the search path.
     */
   def bm25SearchIndexed(spark: org.apache.spark.sql.SparkSession,
                         name: String, queryTerms: Seq[String],
@@ -912,10 +926,9 @@ object TextAnalysis {
     val qtf = spark.table(s"${name}_postings")
       .filter(col("term").isin(queryTerms: _*))
     val dl = spark.table(s"${name}_docstats")
-    val meta = spark.table(s"${name}_meta")
-    val nRow = meta.select(col("n_docs").cast("double").as("__n"))
-    val totRow = meta.select(col("total_tf").cast("double").as("__tot"))
-    bm25ScoreTail(qtf, dl, nRow, totRow, topK, k1, b, idCol)
+    val (nDocs, totalTf) = bm25Moments(spark, name)
+    bm25ScoreTail(qtf, dl, identity, driverScalar(nDocs.toDouble),
+      driverScalar(totalTf.toDouble), topK, k1, b, idCol)
   }
 
   /** Retrieval report card: MRR, precision@k, recall@k, nDCG@k of a

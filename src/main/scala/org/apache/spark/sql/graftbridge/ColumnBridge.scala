@@ -206,6 +206,33 @@ object ColumnBridge {
       new ParquetToSparkSchemaConverter(state.conf)).asNullable
   }
 
+  /** The schema of the first file's footer and the rows of all the
+    * files, read on the driver by Spark's own Parquet reader: no Spark job.
+    * For an index's small side files (a meta row, a centroid table, a
+    * codebook), never for data.
+    */
+  def readParquetOnDriver(spark: org.apache.spark.sql.SparkSession,
+                          files: Seq[org.apache.hadoop.fs.FileStatus])
+      : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.StructType
+    require(files.nonEmpty, "no Parquet files to read")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val schema = parquetFooterSchema(spark, files.head.getPath)
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(session, schema,
+      new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      session.sessionState.newHadoopConf())
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    (schema, files.flatMap { f =>
+      read(PartitionedFile(InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromPath(f.getPath), 0L, f.getLen,
+          Array.empty[String], f.getModificationTime, f.getLen))
+        .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]).toList
+    })
+  }
+
   /** The relation `spark.read.format(format).options(options).schema(schema)
     * .load(files)` resolves to, over files the caller already listed:
     * their statuses seed the file index, so Spark lists nothing again —

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Maintenance, Similarity, TextAnalysis}
 
@@ -851,5 +853,157 @@ class MaintenanceSpec extends SparkSpec {
     // next entry re-runs the full (idempotent) path and commits
     assert(graft.ops.IndexCommit.recover(spark, root, Seq("d")))
     assert(!fs.exists(pending) && dFiles() == pre)
+  }
+
+  // ------------------------------------------- driver-side index handles
+
+  /** The IVF-PQ fixture: sf0.001 embeddings, its q124 centroids, and a
+    * codebook of 16 vectors chosen by `pick`.
+    */
+  private def ivfPqInputs(pick: Long = 37L) = {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val cents = emb.filter(col("vec_id") % 97 === 0)
+      .select((col("vec_id") / 97).cast("int").as("cell_id"),
+        col("embedding").as("centroid"))
+    val codebook = emb
+      .filter(col("vec_id") % pick === 0 && col("vec_id") / pick < 16)
+      .select((col("vec_id") / pick).cast("int").as("cid"),
+        col("embedding").as("centroid"))
+    (emb, cents, codebook)
+  }
+
+  private def batchProbe(path: String, emb: org.apache.spark.sql.DataFrame) =
+    Similarity.ivfPqTopKBatch(spark, path, emb, col("vec_id") % 50 === 1, k = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("IVF-PQ: an emptied index probes empty, compacts, and an append " +
+    "repopulates it") {
+    val (emb, cents, codebook) = ivfPqInputs()
+    val few = emb.filter(col("vec_id") < 8)
+    val path = tmp("ivfpq_empty")
+    Similarity.buildIvfPqIndex(few, cents, codebook, path, m = 4, residual = true)
+    Similarity.deleteFromIvfPqIndex(spark, path, few.select("vec_id"))
+    val left = new java.io.File(s"$path/codes").list().toSet
+      .filterNot(n => n.startsWith(".") || n == "_SUCCESS")
+    assert(left.isEmpty, s"codes/ still holds $left")
+    def probes() = (batchProbe(path, few),
+      Similarity.ivfPqTopKIndexed(spark, path, emb, queryId = 1L, k = 5).collect().toSeq)
+    assert(probes() == ((Set.empty, Seq.empty)))
+    Similarity.compactIvfPqIndex(spark, path)
+    assert(probes() == ((Set.empty, Seq.empty)))
+    Similarity.appendToIvfPqIndex(spark, path, few)
+    val fresh = tmp("ivfpq_empty_ref")
+    Similarity.buildIvfPqIndex(few, cents, codebook, fresh, m = 4, residual = true)
+    assert(batchProbe(path, few).nonEmpty)
+    assert(batchProbe(path, few) == batchProbe(fresh, few))
+  }
+
+  test("IVF-PQ handle never serves an old generation: rebuild with another " +
+    "codebook or m, append, delete, compact, a second session's rebuild") {
+    val (emb, cents, codebook) = ivfPqInputs()
+    val (_, _, otherCodebook) = ivfPqInputs(pick = 29L)
+    val path = tmp("ivfpq_gen")
+    def reference(rows: org.apache.spark.sql.DataFrame,
+                  cb: org.apache.spark.sql.DataFrame, m: Int) = {
+      val p = tmp("ivfpq_gen_ref")
+      Similarity.buildIvfPqIndex(rows, cents, cb, p, m = m)
+      batchProbe(p, emb)
+    }
+    Similarity.buildIvfPqIndex(emb.filter(col("vec_id") < 300), cents, codebook, path, m = 4)
+    val first = batchProbe(path, emb) // loads the handle
+    assert(first == reference(emb.filter(col("vec_id") < 300), codebook, 4))
+    Similarity.appendToIvfPqIndex(spark, path,
+      emb.filter(col("vec_id") >= 300 && col("vec_id") < 400))
+    assert(batchProbe(path, emb) == reference(emb.filter(col("vec_id") < 400), codebook, 4))
+    Similarity.deleteFromIvfPqIndex(spark, path, emb.filter(col("vec_id") % 3 === 0))
+    val kept = emb.filter(col("vec_id") < 400 && col("vec_id") % 3 =!= 0)
+    val afterDelete = batchProbe(path, emb)
+    assert(afterDelete == reference(kept, codebook, 4))
+    Similarity.compactIvfPqIndex(spark, path)
+    assert(batchProbe(path, emb) == afterDelete)
+    // same path, other codebook: new centroid ids in every code
+    Similarity.buildIvfPqIndex(kept, cents, otherCodebook, path, m = 4)
+    val rebuilt = batchProbe(path, emb)
+    assert(rebuilt != afterDelete)
+    assert(rebuilt == reference(kept, otherCodebook, 4))
+    // same path, other m
+    Similarity.buildIvfPqIndex(kept, cents, otherCodebook, path, m = 2)
+    assert(batchProbe(path, emb) == reference(kept, otherCodebook, 2))
+    // a rewrite through a second session: only the files tell
+    val other = spark.newSession()
+    val otherEmb = other.read.parquet(s"$sf0001/embeddings.parquet")
+    Similarity.buildIvfPqIndex(otherEmb.filter(col("vec_id") < 200),
+      other.createDataFrame(cents.collect().toSeq.asJava, cents.schema),
+      other.createDataFrame(codebook.collect().toSeq.asJava, codebook.schema),
+      path, m = 4, residual = true)
+    val p = tmp("ivfpq_gen_res")
+    Similarity.buildIvfPqIndex(emb.filter(col("vec_id") < 200), cents, codebook,
+      p, m = 4, residual = true)
+    assert(batchProbe(path, emb) == batchProbe(p, emb))
+  }
+
+  test("BM25 handle never serves old moments: append, delete, compact, " +
+    "crash recovery, a second session's rebuild") {
+    val docs = Tables.documents(spark, sf0001)
+    val path = tmp("bm25_gen")
+    val terms = Seq("table", "scan", "vector", "dup")
+    def search() = TextAnalysis.bm25SearchIndexed(spark, "gen_bm", terms, topK = 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def inline(d: org.apache.spark.sql.DataFrame) = TextAnalysis.bm25Rank(d, terms, topK = 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    try {
+      TextAnalysis.buildBm25Index(docs.filter(col("doc_id") < 300), "gen_bm", path,
+        numBuckets = 8)
+      val p0 = search()
+      assert(p0 == inline(docs.filter(col("doc_id") < 300)))
+      val pre = Seq("postings", "docstats").map(d => d -> dataFiles(path, d))
+      TextAnalysis.appendToBm25Index(spark, "gen_bm", path,
+        docs.filter(col("doc_id") >= 300 && col("doc_id") < 400), numBuckets = 8)
+      val p1 = search()
+      assert(p1 != p0 && p1 == inline(docs.filter(col("doc_id") < 400)))
+      // a crash just before the append's commit: recovery rolls both
+      // halves back and rebuilds the meta, so the moments are p0's again
+      writeCrashMarker(path, pre)
+      assert(TextAnalysis.recoverBm25Index(spark, "gen_bm", path))
+      assert(search() == p0)
+      TextAnalysis.deleteFromBm25Index(spark, "gen_bm", path, Seq(1L, 2L, 3L, 5L, 8L))
+      val kept = docs.filter(col("doc_id") < 300 && !col("doc_id").isin(1, 2, 3, 5, 8))
+      assert(search() == inline(kept))
+      TextAnalysis.compactBm25Index(spark, "gen_bm", path)
+      assert(search() == inline(kept))
+      // a rebuild through a second session, same table names and path.
+      // Spark caches a table's relation per session, so this session must
+      // refresh postings and docstats itself; the moments follow the
+      // meta files with no refresh
+      val other = spark.newSession()
+      TextAnalysis.buildBm25Index(Tables.documents(other, sf0001)
+        .filter(col("doc_id") < 150), "gen_bm", path, numBuckets = 8)
+      Seq("gen_bm_postings", "gen_bm_docstats").foreach(spark.catalog.refreshTable)
+      assert(search() == inline(docs.filter(col("doc_id") < 150)))
+    } finally {
+      Seq("gen_bm_postings", "gen_bm_docstats", "gen_bm_meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
+  test("near-dup params handle follows a rebuild with other parameters") {
+    val docs = Tables.documents(spark, sf0001)
+    val path = tmp("nd_gen")
+    def probe(bands: Int) = Dedup.nearDupMatchesIndexed(
+      docs.filter(col("doc_id") >= 400), "gen_nd", "doc_id", "text",
+      shingleK = 2, numPerm = 32, bands = bands).count()
+    try {
+      Dedup.buildNearDupIndex(docs.filter(col("doc_id") < 400), "gen_nd", path,
+        "doc_id", "text", shingleK = 2, numPerm = 32, bands = 8, numBuckets = 8)
+      probe(8)
+      Dedup.buildNearDupIndex(docs.filter(col("doc_id") < 400), "gen_nd", path,
+        "doc_id", "text", shingleK = 2, numPerm = 32, bands = 16, numBuckets = 8)
+      probe(16)
+      val ex = intercept[IllegalArgumentException](probe(8))
+      assert(ex.getMessage.contains("bands=16"), ex.getMessage)
+    } finally {
+      Seq("gen_nd_sig", "gen_nd_shingles", "gen_nd_params")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
   }
 }

@@ -838,6 +838,44 @@ class PlanShapeSpec extends SparkSpec {
     assert(s.contains("mat_vec"), s) // rotation is ONE native expression
   }
 
+  test("batch IVF-PQ probe: routing is a per-row projection, the routed " +
+    "probes are the only broadcast, the codes never cross an exchange") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions._
+    val emb = Tables.embeddings(spark, sf0001)
+    val cellCentroids = emb.filter(col("vec_id") % 97 === 0)
+      .select((col("vec_id") / 97).cast("int").as("cell_id"),
+        col("embedding").as("centroid"))
+    val codebook = emb
+      .filter(col("vec_id") % 37 === 0 && col("vec_id") / 37 < 16)
+      .select((col("vec_id") / 37).cast("int").as("cid"),
+        col("embedding").as("centroid"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_batch").toString
+    graft.ops.Similarity.buildIvfPqIndex(emb, cellCentroids, codebook,
+      s"$dir/pq", m = 4, residual = true)
+    val p = withoutAqe {
+      plan(graft.ops.Similarity.ivfPqTopKBatch(spark, s"$dir/pq", emb,
+        col("vec_id") < 50, k = 10))
+    }
+    val s = p.toString
+    assert(!s.contains("NestedLoopJoin") && !s.contains("CartesianProduct"), s)
+    // the only broadcast relation is the routed probes (also the codes
+    // scan's dynamic partition pruning); centroids and codebook are plan
+    // constants, not relations
+    val broadcasts = p.collectWithSubqueries { case b: BroadcastExchangeExec => b.child.toString }
+    assert(broadcasts.nonEmpty, s)
+    assert(broadcasts.forall(b => b.contains("Generate explode") && !b.contains("codes")), s)
+    // the only shuffle is GroupedTopK's, by probe: no routing exchange
+    val shuffleKeys = p.collect { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.expressions.map(_.sql).mkString(",")
+        case other => other.toString
+      }
+    }
+    assert(shuffleKeys.size == 1 && shuffleKeys.head.startsWith("probe_id"), s)
+  }
+
   test("q139 refined search: shortlist from the index, floats only for the fetch") {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sf0001)

@@ -295,6 +295,58 @@ class SimilaritySpec extends SparkSpec {
     assert(r3 == Seq(0.0, 0.0, 0.0, 0.0))
   }
 
+  test("per-row cell routing picks TopK.perGroup's cells: tied cosines, a " +
+    "zero-vector probe") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // cells 1 and 3 coincide, so every probe ties them; (1, 1) ties cells
+    // 1, 3 and 4 at 0.707107
+    val cells = Seq((3, Seq(1.0, 0.0)), (1, Seq(1.0, 0.0)), (4, Seq(0.0, 1.0)),
+      (0, Seq(0.0, -1.0)), (2, Seq(-1.0, 0.0)), (5, Seq(0.6, 0.8)))
+    val probes = Seq((10L, Seq(1.0, 0.0)), (11L, Seq(0.0, 0.0)), (12L, Seq(1.0, 1.0)),
+      (13L, Seq(-1.0, 0.0)), (14L, Seq(0.0, 1.0)))
+      .toDF("probe_id", "__pv")
+    val centroids = cells.toDF("cell_id", "centroid")
+    val constant = graft.ops.IndexHandles.constant(spark,
+      cells.map { case (c, v) => Row(c, v) },
+      ArrayType(StructType(Seq(StructField("cell_id", IntegerType),
+        StructField("centroid", ArrayType(DoubleType))))))
+    def route(ps: org.apache.spark.sql.DataFrame, nProbe: Int, residual: Boolean) = ps
+      .select(col("probe_id"),
+        explode(Similarity.routeCells(constant, col("__pv"), nProbe, residual)).as("r"))
+      .select(col("probe_id"), col("r.cell_id"), col("r.ref"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2))).toSet
+    def parity(ps: org.apache.spark.sql.DataFrame): Unit =
+      for (nProbe <- Seq(1, 2, 3, 6); residual <- Seq(false, true)) {
+        // the cross join + GroupedTopK routing the batch tier ran before
+        val routed = ps.crossJoin(centroids)
+          .select(col("probe_id"), col("__pv"), col("cell_id"), col("centroid"),
+            round(cosineSimilarity(col("centroid"), col("__pv")), 6).as("__csim"))
+        val expected = graft.plans.TopK.perGroup(routed, Seq("probe_id"),
+            Seq(("__csim", true), ("cell_id", false)), nProbe)
+          .select(col("probe_id"), col("cell_id"),
+            (if (residual) zip_with(col("__pv"), col("centroid"), (a, b) => a - b)
+             else col("__pv")).as("ref"))
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2))).toSet
+        val got = route(ps, nProbe, residual)
+        assert(got == expected, s"nProbe=$nProbe residual=$residual")
+        assert(got.size == ps.count() * nProbe)
+      }
+    // generated code reads the constant too (size() is code-generated)
+    assert(spark.range(2).select(size(constant)).as[Int].collect().toSeq == Seq(6, 6))
+    parity(probes.filter(col("probe_id") =!= 11L))
+    // a zero vector's cosine divides by zero: an error under ANSI
+    // arithmetic (Spark's default), NaN without it — and NaN sorts first
+    // under descending order, so every cell ties and the lowest ids win
+    val ansi = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(ansi)
+    try {
+      spark.conf.set(ansi, "false")
+      parity(probes)
+      assert(route(probes.filter(col("probe_id") === 11L), 2, false).map(_._2) == Set(0, 1))
+    } finally saved.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
+  }
+
   test("PQ codebook validation: gapped or duplicate cids fail loudly") {
     // positional centroid lookup silently mis-scores (or null-ranks-first)
     // on a non-0..k-1 codebook — the guard must throw instead

@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.scalatest.BeforeAndAfterAll
 
-import graft.ops.{Dedup, Graph, Preference}
+import graft.ops.{Dedup, Graph, Preference, Similarity, TextAnalysis}
 
 /** The stage budget of the driver-loop operators: Spark jobs and stages
   * per call and per round, read after the listener bus is drained. Under
@@ -25,8 +25,18 @@ class StageCountSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val jobs = new AtomicInteger
   private val stages = new AtomicInteger
+  private val schemaJobs = new AtomicInteger
   private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      // a schema read: `spark.read.parquet` runs it while it resolves the
+      // relation, outside any SQL execution (a write shares the call site
+      // but runs inside one)
+      val site = if (e.stageInfos.isEmpty) "" else e.stageInfos.minBy(_.stageId).name
+      if (site.startsWith("parquet at") &&
+          Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+        schemaJobs.incrementAndGet()
+    }
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       stages.incrementAndGet()
   }
@@ -114,4 +124,68 @@ class StageCountSpec extends SparkSpec with BeforeAndAfterAll {
       val fresh = compiled(counted(call(2)))
       assert(fresh == 0, s"the second round compiled $fresh new classes")
     }
+
+  // ------------------------------------------- persisted-index probes
+
+  private def tmp(tag: String) =
+    java.nio.file.Files.createTempDirectory(s"graft_stages_$tag").toString
+
+  /** sf0.001 embeddings, q124's centroids and a 16-vector codebook. */
+  private lazy val (emb, cents) = {
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    (e, e.filter($"vec_id" % 97 === 0)
+      .select(($"vec_id" / 97).cast("int").as("cell_id"), $"embedding".as("centroid")))
+  }
+  private def codebook(pick: Long) = emb
+    .filter($"vec_id" % pick === 0 && $"vec_id" / pick < 16)
+    .select(($"vec_id" / pick).cast("int").as("cid"), $"embedding".as("centroid"))
+  private def batchProbe(path: String): DataFrame =
+    Similarity.ivfPqTopKBatch(spark, path, emb, $"vec_id" % 50 === 1, k = 5)
+
+  test("IVF-PQ lifecycle runs no schema job; a warm ivfPqTopKBatch runs <= 4 jobs") {
+    val cb = codebook(37L)
+    cb.schema // resolved before counting: the fixtures' own read is not the index's
+    ColumnBridge.waitListenerBusEmpty(spark)
+    val schema0 = schemaJobs.get
+    val path = tmp("ivfpq")
+    Similarity.buildIvfPqIndex(emb.filter($"vec_id" < 300), cents, cb, path,
+      m = 4, residual = true)
+    Similarity.appendToIvfPqIndex(spark, path,
+      emb.filter($"vec_id" >= 300 && $"vec_id" < 400))
+    Similarity.deleteFromIvfPqIndex(spark, path, emb.filter($"vec_id" % 7 === 0))
+    val beforeCompact = counted(batchProbe(path))
+    Similarity.compactIvfPqIndex(spark, path)
+    val afterCompact = counted(batchProbe(path))
+    ColumnBridge.waitListenerBusEmpty(spark)
+    assert(schemaJobs.get - schema0 == 0, "schema jobs across the lifecycle")
+    assert(beforeCompact._1 <= 4 && afterCompact._1 <= 4,
+      s"(jobs, stages) before compaction $beforeCompact, after $afterCompact")
+  }
+
+  test("a second IVF-PQ index generation of the same shape compiles no new class") {
+    val path = tmp("ivfpq_gen")
+    Similarity.buildIvfPqIndex(emb, cents, codebook(37L), path, m = 4)
+    val first = batchProbe(path).collect().toSet
+    Similarity.buildIvfPqIndex(emb, cents, codebook(29L), path, m = 4)
+    var second = Set.empty[org.apache.spark.sql.Row]
+    val fresh = compiled { second = batchProbe(path).collect().toSet }
+    assert(second != first, "the rebuilt codebook did not reach the probe")
+    assert(fresh == 0, s"the second generation compiled $fresh new classes")
+  }
+
+  test("bm25SearchIndexed on a warm handle runs <= 4 jobs") {
+    val path = tmp("bm25")
+    try {
+      TextAnalysis.buildBm25Index(Tables.documents(spark, sf0001), "stages_bm", path,
+        numBuckets = 8)
+      def search() = TextAnalysis.bm25SearchIndexed(spark, "stages_bm",
+        Seq("table", "scan", "vector"), topK = 10)
+      counted(search())
+      val (j, st) = counted(search())
+      assert(j <= 4, s"(jobs, stages) = ($j, $st)")
+    } finally {
+      Seq("stages_bm_postings", "stages_bm_docstats", "stages_bm_meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
 }
